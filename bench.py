@@ -350,8 +350,10 @@ def _cpu_delta(before: dict[int, float], after: dict[int, float]) -> float:
     pidwise. A pid present in both contributes its increment (clamped at
     0 against pid reuse); a pid new in `after` contributes its full
     count (it was born inside the span). A pid that DIED inside the span
-    contributes only what its parent's cutime picked up — i.e. a
-    mid-span worker death undercounts rather than going negative."""
+    contributes only what its parent's cutime picked up — and for a
+    child reaped by a wait()ing parent that is the child's WHOLE
+    lifetime CPU, so a span containing the reap OVERCOUNTS by the
+    child's pre-span CPU (never negative; diagnostics only)."""
     return sum(max(0.0, t1 - before.get(pid, 0.0)) for pid, t1 in after.items())
 
 

@@ -162,7 +162,10 @@ def collab_totals(pubs: DataFrame, pid: str, year: int | None = None) -> DataFra
 def pair_lookup(pair_counts_df: DataFrame, year: int, author1: str, author2: str) -> DataFrame:
     """Interactive-2 (docx §Query 2): point lookup on the pair-count fact
     — under the (year) partition layout this is a pruned single-partition
-    read."""
+    read. The pair is unordered: the fact stores ``author1 < author2``,
+    so the two pids are ordered here, keeping the filter a literal
+    equality."""
+    author1, author2 = sorted((author1, author2))
     return pair_counts_df.filter(
         (F.col("year") == year) & (F.col("author1") == author1) & (F.col("author2") == author2)
     )

@@ -1088,16 +1088,7 @@ def blocked_jaccard_pairs(
     )
     prefix = _materialize(postings_from_sets(t, tau, dfreq=dfreq, group_cols=("block",)), durable)
 
-    hottest = (
-        prefix.groupBy("block", "tok").agg(F.count(F.lit(1)).alias("p")).agg(F.max("p")).first()[0]
-    )
-    if hottest is not None and hottest > max_prefix_posting:
-        raise ValueError(
-            f"a (block, token) prefix posting list of size {hottest} exceeds "
-            f"max_prefix_posting={max_prefix_posting}: the block is duplicate-"
-            "saturated — run exact_dedup first, then blocked_jaccard_pairs on "
-            "the keepers"
-        )
+    _assert_posting_cap(prefix, ("block", "tok"), max_prefix_posting, "blocked_jaccard_pairs")
 
     a, b = prefix.alias("a"), prefix.alias("b")
     need = F.ceil(F.lit(tau / (1.0 + tau)) * (F.col("a.m") + F.col("b.m")) - 1e-9)
@@ -1203,16 +1194,9 @@ def incremental_blocked_jaccard(
         eager=True
     )
     pn = postings_from_sets(tn, tau, dfreq=dfreq, group_cols=("block",))
-    hottest = (
-        po.groupBy("block", "tok").agg(F.count(F.lit(1)).alias("p")).agg(F.max("p")).first()[0]
+    _assert_posting_cap(
+        po, ("block", "tok"), max_prefix_posting, "incremental_blocked_jaccard: corpus side"
     )
-    if hottest is not None and hottest > max_prefix_posting:
-        raise ValueError(
-            f"a corpus (block, token) prefix posting list of size {hottest} "
-            f"exceeds max_prefix_posting={max_prefix_posting}: the block is "
-            "duplicate-saturated — run exact_dedup first, then the "
-            "incremental blocked join"
-        )
     key = F.struct("block", "tok").alias("tok")
     return _prefix_candidates_verify(
         po.select("doc_id", key, "pos", "m"),
@@ -1222,6 +1206,25 @@ def incremental_blocked_jaccard(
         tau,
         threshold,
     )
+
+
+def _assert_posting_cap(
+    postings: DataFrame, group_cols: tuple[str, ...], cap: int, what: str
+) -> None:
+    """Loud guard shared by every exact prefix-filter tier: the largest
+    prefix posting list (one list per ``group_cols`` value) may hold at
+    most ``cap`` entries. A duplicate-saturated input would otherwise
+    turn the candidate join quadratic in that list. One bounded
+    aggregate over the (already materialized) postings."""
+    hottest = (
+        postings.groupBy(*group_cols).agg(F.count(F.lit(1)).alias("p")).agg(F.max("p")).first()[0]
+    )
+    if hottest is not None and hottest > cap:
+        raise ValueError(
+            f"{what}: a ({', '.join(group_cols)}) prefix posting list of size "
+            f"{hottest} exceeds max_prefix_posting={cap} — the input is "
+            "duplicate-saturated; run exact_dedup first, then rerun on the keepers"
+        )
 
 
 def _assert_one_row_per_doc(t: DataFrame, what: str) -> None:
@@ -1599,13 +1602,7 @@ def prefix_jaccard_pairs(
         durable,
     )
 
-    hottest = prefix.groupBy("tok").agg(F.count(F.lit(1)).alias("p")).agg(F.max("p")).first()[0]
-    if hottest is not None and hottest > max_prefix_posting:
-        raise ValueError(
-            f"prefix posting list of size {hottest} exceeds max_prefix_posting="
-            f"{max_prefix_posting}: the corpus is duplicate-saturated — run "
-            "exact_dedup first, then prefix_jaccard_pairs on the keepers"
-        )
+    _assert_posting_cap(prefix, ("tok",), max_prefix_posting, "prefix_jaccard_pairs")
 
     a, b = prefix.alias("a"), prefix.alias("b")
     need = F.ceil(F.lit(tau / (1.0 + tau)) * (F.col("a.m") + F.col("b.m")) - 1e-9)
@@ -1776,13 +1773,7 @@ def incremental_prefix_jaccard(
     po = postings_from_sets(to, tau, dfreq=dfreq).localCheckpoint(eager=True)
     pn = postings_from_sets(tn, tau, dfreq=dfreq)
 
-    hottest = po.groupBy("tok").agg(F.count(F.lit(1)).alias("p")).agg(F.max("p")).first()[0]
-    if hottest is not None and hottest > max_prefix_posting:
-        raise ValueError(
-            f"corpus prefix posting list of size {hottest} exceeds "
-            f"max_prefix_posting={max_prefix_posting}: run exact_dedup first "
-            "(duplicate-saturated corpus), then the incremental prefix join"
-        )
+    _assert_posting_cap(po, ("tok",), max_prefix_posting, "incremental_prefix_jaccard: corpus side")
     return _prefix_candidates_verify(po, pn, to, tn, tau, threshold)
 
 

@@ -26,6 +26,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -330,95 +331,85 @@ def _max_batch_id(spark: SparkSession, path: str) -> int:
     return best
 
 
-def compact_stream_dir(
+# ---------------------------------------------------------------------------
+# Streaming state-dir protocol. Every foreachBatch sink in
+# streaming/windows.py keeps its state as ``<dir>/batch=<id>`` partitions
+# and touches it only through read_earlier / write_batch; every
+# maintenance path (compaction, purge, the edit keys rebuild) rewrites a
+# dir only through _swap_rewrite → swap_in → staged_swap.
+
+
+def read_earlier(
     spark: SparkSession,
+    batch_id: int,
+    dirs: Sequence[str],
+    owned: Sequence[str] = (),
+) -> list[DataFrame] | None:
+    """A sink's state read: each of ``dirs`` filtered to batch ids
+    strictly below ``batch_id``, ``batch`` column dropped — or None on a
+    cold start. This is the one statement of the sinks' contract:
+
+    - **Retry-safe.** foreachBatch is at-least-once. Each batch writes
+      every output into its own ``batch=<id>`` partition with OVERWRITE
+      semantics (:func:`write_batch`), and reads only strictly EARLIER
+      batches — so a replayed batch rewrites its own files instead of
+      appending duplicates, and never sees its own partial output as
+      corpus.
+    - **Cold start.** While a state dir cannot be read yet (no batch has
+      written it), the batch IS the corpus and this returns None — but
+      only after every dir in ``dirs`` and ``owned`` (the sink's
+      write-only dirs) passed :func:`assert_stream_dir_healthy`.
+    - **Crash.** A missing dir next to a ``.compact_old`` /
+      ``.compact_tmp`` sibling is a crashed rewrite, not a cold start:
+      the cold-start check above and every :func:`write_batch` raise on
+      it. Writing the batch into a fresh primary instead would make the
+      next rewrite's recovery see both copies and reclaim (delete) the
+      aside — the stranded state would be lost."""
+    try:
+        return [spark.read.parquet(d).filter(F.col("batch") < batch_id).drop("batch") for d in dirs]
+    except AnalysisException:
+        for d in (*dirs, *owned):
+            assert_stream_dir_healthy(spark, d)
+        return None
+
+
+def write_batch(
+    df: DataFrame,
     path: str,
-    partition_cols: Sequence[str] = (),
-    pre_merge=None,
-    checkpoint_dir: str | None = None,
-) -> tuple[int, int]:
-    """Compaction for the retry-safe streaming sink directories (the
-    ``batch=<id>`` per-trigger partitions of prefix/neardup/ann ingest):
-    collapse all committed batch partials into ONE ``batch=<max_id>``
-    partition, keeping any secondary partition columns. Merge-on-read
-    results are identical before and after (asserted in tests); the
-    max-committed id is reused so the sinks' strictly-earlier corpus
-    filter stays correct for future batches. Run between triggers
-    against a quiesced stream whose checkpoint has committed
-    ``max_id`` — same caveat as hist_compact. Returns
-    ``(files_before, files_after)``.
+    batch_id: int,
+    partition_by: Sequence[str] = (),
+    key: str = "batch",
+) -> None:
+    """Write one batch's output to ``<path>/<key>=<batch_id>`` with
+    OVERWRITE semantics, after :func:`assert_stream_dir_healthy` on
+    ``path`` (contract: :func:`read_earlier`). ``partition_by`` adds
+    secondary partition columns under the batch partition."""
+    assert_stream_dir_healthy(df.sparkSession, path)
+    df.write.mode("overwrite").partitionBy(*partition_by).parquet(f"{path}/{key}={int(batch_id)}")
 
-    Pass ``checkpoint_dir`` (the stream's checkpointLocation) to ENFORCE
-    the committed-``max_id`` requirement instead of trusting the caller:
-    if the on-disk max batch is absent from the checkpoint's commits
-    log, compaction fails fast. Without the check, a restart could
-    replay batch ``max_id`` after compaction and the sink's per-batch
-    ``batch=<max_id>`` overwrite would silently replace the ENTIRE
-    compacted corpus with that one batch's partial.
 
-    Crash safety: the compacted data is FULLY WRITTEN to a temp sibling
-    directory, then swapped in rename-aside order —
-    ``path → path.compact_old``, ``tmp → path``, delete old — so a
-    complete corpus copy exists AT ``path`` or at a sibling at every
-    instant, and no crash point leaves ``path`` missing without a
-    recoverable sibling. compact_stream_dir auto-recovers a stale
-    ``.compact_old`` whose swap crashed midway; the ingest sinks
-    (streaming/windows.py) fail loudly — never cold-start — when a
-    sibling exists while ``path`` is missing.
-
-    ``pre_merge`` (optional ``DataFrame -> DataFrame``) runs on the
-    batch-stripped union before the rewrite, for sinks whose partials
-    also RE-SUM on compaction (hist_compact passes the per-bin re-sum;
-    it must be merge-on-read-invariant or the compaction changes
-    results)."""
-    recover_stale_sibling(spark, path)
-    before = _data_files(spark, path)
-    # mergeSchema: a mixed-era state dir (older batches missing a later-
-    # added column, e.g. the band table's `sig`) must compact to the
-    # UNION schema — default footer sampling could infer from a legacy
-    # file and silently drop the newer column for every row.
-    df = spark.read.option("mergeSchema", "true").parquet(path)
-    max_batch = _max_batch_id(spark, path)
-    if checkpoint_dir is not None:
-        committed = committed_stream_batches(spark, checkpoint_dir)
-        if max_batch not in committed:
+def assert_stream_dir_healthy(spark: SparkSession, path: str) -> None:
+    """A MISSING state dir is a legitimate first-batch state ONLY if no
+    crashed rewrite left a ``.compact_tmp`` / ``.compact_old`` sibling
+    behind. Treating that state as a cold start would silently continue
+    with an empty corpus; fail loudly instead and name the recovery
+    rename."""
+    p, fs = _hadoop_fs(spark, path)
+    if fs.exists(p):
+        return
+    for suffix in (".compact_old", ".compact_tmp"):
+        sp, _ = _hadoop_fs(spark, path + suffix)
+        if fs.exists(sp):
             raise RuntimeError(
-                f"refusing to compact {path}: on-disk batch={max_batch} is not in "
-                f"{checkpoint_dir}/commits (committed: {sorted(committed)[-3:] if committed else []}); "
-                "a restart would replay it and its per-batch overwrite would wipe the compacted corpus"
+                f"{path} is missing but {path}{suffix} exists — a compaction "
+                f"crashed mid-swap; rename {path}{suffix} to {path} to recover "
+                "instead of cold-starting with an empty corpus"
             )
-    compacted = df.drop("batch")
-    if pre_merge is not None:
-        compacted = pre_merge(compacted)
-    tmp = f"{path}.compact_tmp"
-    tmp_batch = f"{tmp}/batch={max_batch}"
-    # A stale tmp from a PREVIOUSLY crashed compaction may hold another
-    # batch id's subdir; renaming it in alongside the fresh write would
-    # duplicate data — clear the whole tmp first. (Safe: the original
-    # dir still holds everything at this point.)
-    tp, tfs = _hadoop_fs(spark, tmp)
-    if tfs.exists(tp):
-        tfs.delete(tp, True)
-    if partition_cols:
-        (
-            compacted.repartition(*[F.col(c) for c in partition_cols])
-            .write.mode("overwrite")
-            .partitionBy(*partition_cols)
-            .parquet(tmp_batch)
-        )
-    else:
-        # coalesce(1) writes one schema-carrying part file even for an
-        # EMPTY frame (a purge that removed every row), so the rewritten
-        # dir always stays readable for resume and future ingest.
-        compacted.coalesce(1).write.mode("overwrite").parquet(tmp_batch)
-    staged_swap(spark, path, tmp)
-    return before, _data_files(spark, path)
 
 
 def recover_stale_sibling(spark: SparkSession, path: str, reader: bool = False) -> None:
-    """Shared crash-recovery prologue of every rename-aside rewrite
-    (compact_stream_dir, rewrite_stream_dir, the edit keys rebuild) and
-    of the query-side state readers: a completed-swap leftover
+    """Crash-recovery prologue of every rename-aside rewrite and of the
+    query-side state readers: a completed-swap leftover
     ``.compact_old`` is superseded and reclaimed; a mid-swap crash
     (``path`` missing) restores the aside copy, which IS the corpus at
     that crash point.
@@ -459,9 +450,9 @@ def recover_stale_sibling(spark: SparkSession, path: str, reader: bool = False) 
 
 
 def staged_swap(spark: SparkSession, path: str, tmp: str) -> None:
-    """Shared rename-aside swap: ``path → path.compact_old``,
-    ``tmp → path``, delete the aside — a complete copy of the state
-    exists at ``path`` or at a sibling at every instant, and
+    """The rename-aside swap: ``path → path.compact_old``, ``tmp →
+    path``, delete the aside. A complete copy of the state exists at
+    ``path`` or at a sibling at every instant, and
     :func:`recover_stale_sibling` repairs every crash point."""
     p, fs = _hadoop_fs(spark, path)
     old = f"{path}.compact_old"
@@ -477,78 +468,135 @@ def staged_swap(spark: SparkSession, path: str, tmp: str) -> None:
     fs.delete(op, True)
 
 
+def swap_in(spark: SparkSession, path: str, write) -> None:
+    """Replace ``path`` by what ``write(tmp)`` writes to the
+    ``.compact_tmp`` sibling, then :func:`staged_swap` it in (a missing
+    ``path`` — a first write — is a plain rename). A stale tmp from an
+    earlier crashed rewrite may hold other data, so it is cleared first;
+    that is safe because the original is still complete at this point."""
+    tmp = f"{path}.compact_tmp"
+    tp, fs = _hadoop_fs(spark, tmp)
+    if fs.exists(tp):
+        fs.delete(tp, True)
+    write(tmp)
+    p, _ = _hadoop_fs(spark, path)
+    if fs.exists(p):
+        staged_swap(spark, path, tmp)
+    elif not fs.rename(tp, p):
+        raise IOError(f"rename {tmp} -> {path} failed")
+
+
+def _swap_rewrite(
+    spark: SparkSession,
+    path: str,
+    build,
+    by: Sequence[str] = (),
+    source: str | None = None,
+    checkpoint_dir: str | None = None,
+) -> tuple[int, int]:
+    """The one rename-aside rewrite of a ``batch=<id>`` state dir:
+    recover a stale sibling of ``path``, read ``source`` (default
+    ``path``) with mergeSchema — a mixed-era dir (older batches missing
+    a later-added column, e.g. the band table's ``sig``) must rewrite to
+    the UNION schema — and write ``build(frame)`` through
+    :func:`swap_in`. The output is partitioned by ``by``: with ``batch``
+    among them the frame keeps its per-batch provenance, otherwise it
+    lands under ``batch=<max id of source>`` (one file when ``by`` is
+    empty). A rewrite that emits no data file (every row dropped) gets
+    one schema-carrying empty file under that id, so the dir stays
+    readable for resume and future ingest.
+
+    With ``checkpoint_dir`` (the stream's checkpointLocation) the max
+    batch id must be in its commits log, else the rewrite refuses: a
+    restart would replay that batch, and its per-batch overwrite would
+    replace the rewritten state. Returns ``(files_before,
+    files_after)`` of ``path``."""
+    recover_stale_sibling(spark, path)
+    src = source or path
+    before = _data_files(spark, path)
+    df = spark.read.option("mergeSchema", "true").parquet(src)
+    max_batch = _max_batch_id(spark, src)
+    if checkpoint_dir is not None:
+        committed = committed_stream_batches(spark, checkpoint_dir)
+        if max_batch not in committed:
+            raise RuntimeError(
+                f"refusing to rewrite {path}: on-disk batch={max_batch} is not in "
+                f"{checkpoint_dir}/commits (committed: {sorted(committed)[-3:]}); a restart "
+                "would replay it and its per-batch overwrite would replace the rewritten state"
+            )
+    out = build(df)
+    last = f"batch={max_batch}"
+
+    def write(tmp: str) -> None:
+        dest = tmp if "batch" in by else f"{tmp}/{last}"
+        if by:
+            w = out.repartition(*[F.col(c) for c in by]).write.partitionBy(*by)
+        else:
+            w = out.coalesce(1).write
+        w.mode("overwrite").parquet(dest)
+        # Patch emptiness from the FILE COUNT: probing the frame up front
+        # would run the rewrite plan (a join-heavy replay, for the edit
+        # purge) a second time.
+        if _data_files(spark, tmp) == 0:
+            out.drop("batch").coalesce(1).write.mode("overwrite").parquet(f"{tmp}/{last}")
+
+    swap_in(spark, path, write)
+    return before, _data_files(spark, path)
+
+
+def compact_stream_dir(
+    spark: SparkSession,
+    path: str,
+    partition_cols: Sequence[str] = (),
+    pre_merge=None,
+    checkpoint_dir: str | None = None,
+) -> tuple[int, int]:
+    """Collapse every batch partition of a ``batch=<id>`` state dir into
+    ONE ``batch=<max_id>`` partition, keeping any secondary partition
+    columns. Merge-on-read results are identical before and after
+    (asserted in tests); the max id is reused so the sinks'
+    strictly-earlier read stays correct for future batches. Run between
+    triggers against a quiesced stream; pass ``checkpoint_dir`` to
+    enforce that ``max_id`` is committed. Crash safety, recovery and the
+    commit gate: :func:`_swap_rewrite`. Returns ``(files_before,
+    files_after)``.
+
+    ``pre_merge`` (optional ``DataFrame -> DataFrame``) runs on the
+    batch-stripped union before the rewrite, for sinks whose partials
+    also RE-SUM on compaction (hist_compact passes the per-bin re-sum;
+    it must be merge-on-read-invariant or the compaction changes
+    results) and for the purges, whose pre-merges drop rows."""
+
+    def build(df: DataFrame) -> DataFrame:
+        out = df.drop("batch")
+        return out if pre_merge is None else pre_merge(out)
+
+    return _swap_rewrite(spark, path, build, by=tuple(partition_cols), checkpoint_dir=checkpoint_dir)
+
+
 def rewrite_stream_dir(
     spark: SparkSession,
     path: str,
     rewrite,
     checkpoint_dir: str | None = None,
 ) -> tuple[int, int]:
-    """In-place transform of a ``batch=<id>`` stream-state dir that
-    PRESERVES per-batch provenance — the sibling of
-    :func:`compact_stream_dir` for state whose batch column is data,
-    not just log structure (the edit tier's member ledger: a future
-    purge recomputes each pair batch's values from the members with
-    strictly smaller batch ids, so flattening would overcount).
+    """In-place transform of a ``batch=<id>`` state dir that PRESERVES
+    per-batch provenance — the sibling of :func:`compact_stream_dir` for
+    state whose batch column is data, not just log structure (the edit
+    tier's member ledger: a future purge recomputes each pair batch's
+    values from the members with strictly smaller batch ids, so
+    flattening would overcount). ``rewrite`` is ``DataFrame ->
+    DataFrame`` over the frame WITH its ``batch`` column and must keep
+    that column. Same swap, recovery and commit gate as compaction
+    (:func:`_swap_rewrite`). Returns ``(files_before, files_after)``."""
 
-    ``rewrite`` is ``DataFrame -> DataFrame`` over the frame WITH its
-    ``batch`` column and must keep that column; the result is written
-    back partitioned by ``batch`` through the same rename-aside swap
-    (full copy at ``path`` or a sibling at every instant, stale-sibling
-    auto-recovery) and the same committed-max-id gate as compaction.
-    A rewrite that drops EVERY row (a purge of the whole corpus) writes
-    one schema-carrying empty file under the pre-rewrite max batch id —
-    a partitioned write of an empty frame would otherwise emit no data
-    files at all, leaving the dir unreadable and (with the purge-intent
-    marker still staged) wedging both resume and ingest.
-    Returns ``(files_before, files_after)``."""
-    recover_stale_sibling(spark, path)
-    before = _data_files(spark, path)
-    df = spark.read.option("mergeSchema", "true").parquet(path)  # union schema, as in compaction
-    max_batch = _max_batch_id(spark, path)
-    if checkpoint_dir is not None:
-        committed = committed_stream_batches(spark, checkpoint_dir)
-        if max_batch not in committed:
-            raise RuntimeError(
-                f"refusing to rewrite {path}: on-disk batch={max_batch} is not in "
-                f"{checkpoint_dir}/commits; a restart would replay it and its "
-                "per-batch overwrite would clash with the rewritten state"
-            )
-    out = rewrite(df)
-    if "batch" not in out.columns:
-        raise ValueError("rewrite_stream_dir: the rewrite must keep the `batch` column")
-    tmp = f"{path}.compact_tmp"
-    tp, tfs = _hadoop_fs(spark, tmp)
-    if tfs.exists(tp):
-        tfs.delete(tp, True)
-    # Write first, then patch emptiness from the FILE COUNT — probing
-    # with limit(1).count() up front would execute the rewrite plan
-    # (a join-heavy pair replay, for the edit purge) a second time.
-    out.repartition(F.col("batch")).write.mode("overwrite").partitionBy("batch").parquet(tmp)
-    if _data_files(spark, tmp) == 0:
-        out.drop("batch").coalesce(1).write.mode("overwrite").parquet(
-            f"{tmp}/batch={max_batch}"
-        )
-    staged_swap(spark, path, tmp)
-    return before, _data_files(spark, path)
+    def build(df: DataFrame) -> DataFrame:
+        out = rewrite(df)
+        if "batch" not in out.columns:
+            raise ValueError("rewrite_stream_dir: the rewrite must keep the `batch` column")
+        return out
 
-
-def assert_stream_dir_healthy(spark: SparkSession, path: str) -> None:
-    """Cold-start guard for the ingest sinks: a MISSING corpus dir is a
-    legitimate first-batch state ONLY if no crashed compaction left a
-    ``.compact_tmp`` / ``.compact_old`` sibling behind. Treating that
-    state as a cold start would silently continue with an empty corpus;
-    fail loudly instead and name the recovery rename."""
-    p, fs = _hadoop_fs(spark, path)
-    if fs.exists(p):
-        return
-    for suffix in (".compact_old", ".compact_tmp"):
-        sp, _ = _hadoop_fs(spark, path + suffix)
-        if fs.exists(sp):
-            raise RuntimeError(
-                f"{path} is missing but {path}{suffix} exists — a compaction "
-                f"crashed mid-swap; rename {path}{suffix} to {path} to recover "
-                "instead of cold-starting with an empty corpus"
-            )
+    return _swap_rewrite(spark, path, build, by=("batch",), checkpoint_dir=checkpoint_dir)
 
 
 def _purge_intent_path(state_dir: str) -> str:

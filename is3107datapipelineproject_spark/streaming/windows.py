@@ -24,6 +24,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+# Every state-dir helper is looked up on the module at call time (L.x), so
+# a test can monkeypatch plans.layout's swap and rewrite functions.
+from is3107datapipelineproject_spark.plans import layout as L
+
 # Fallback schema for streaming reads of the events table when the
 # directory can't be batch-probed: streaming sources cannot infer
 # schemas. The driver's testdata generations have shipped ts as INT64
@@ -246,20 +250,25 @@ def click_purchase_attribution(
 def foreach_batch_merge(known_path: str, key: str):
     """ST2 as a streaming sink: returns a foreachBatch function applying
     the reference's three-cache diff (incremental_merge) to each
-    micro-batch against the persisted unique table, writing the merged
-    result back (idempotent per epoch — overwrite by batch id path)."""
+    micro-batch against the persisted unique table, and swapping the
+    merged table in through plans/layout.py::swap_in. A missing table is
+    a cold start (S3 semantics): the batch becomes the table.
+
+    Replay-safe: the merge is idempotent (old rows win, so re-merging
+    the same batch into its own output is a no-op), and the table is
+    never overwritten in place — a crash leaves the complete old or new
+    table at the path or at its ``.compact_old`` aside, which the next
+    batch recovers before reading."""
     from is3107datapipelineproject_spark.operators.incremental import incremental_merge
 
     def apply(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        try:
-            known = spark.read.parquet(known_path)
-        except Exception:  # cold start: no table yet (S3 semantics)
-            batch_df.write.mode("overwrite").parquet(known_path)
-            return
-        merged = incremental_merge(known, batch_df, key).next_unique
-        merged.write.mode("overwrite").parquet(f"{known_path}_next")
-        spark.read.parquet(f"{known_path}_next").write.mode("overwrite").parquet(known_path)
+        L.recover_stale_sibling(spark, known_path)
+        p, fs = L._hadoop_fs(spark, known_path)
+        merged = batch_df
+        if fs.exists(p):
+            merged = incremental_merge(spark.read.parquet(known_path), batch_df, key).next_unique
+        L.swap_in(spark, known_path, merged.write.parquet)
 
     return apply
 
@@ -371,16 +380,8 @@ def neardup_ingest_sink(
     minhash_neardup_pairs on the batch if intra-batch dups matter).
     Batch order within a trigger is the micro-batch order, so the
     old/new attribution is deterministic per checkpoint lineage.
-
-    Retry-safe: foreachBatch is at-least-once, so each batch writes its
-    outputs into a ``batch=<id>`` partition subdirectory with OVERWRITE
-    semantics — a replayed micro-batch rewrites its own files instead
-    of appending duplicates — and the corpus read filters to strictly
-    EARLIER batch ids, so a retry never sees its own partial output as
-    corpus.
+    Retry-safe, cold-start and crash contract: plans/layout.py::read_earlier.
     """
-    from pyspark.errors import AnalysisException
-
     from is3107datapipelineproject_spark.operators.dedup import (
         band_signature_frame,
         incremental_neardup_from_bands,
@@ -394,27 +395,15 @@ def neardup_ingest_sink(
         # per micro-batch. batch_df is pinned to the epoch's offsets,
         # satisfying the determinism clause (graph.checkpoint_edges).
         nb = band_signature_frame(batch_df, text_col, id_col, k).localCheckpoint(eager=False)
-        try:
-            corpus = spark.read.parquet(sig_dir).filter(
-                F.col("batch") < batch_id
-            ).drop("batch")
-        except AnalysisException:  # cold start: first batch IS the corpus
-            from is3107datapipelineproject_spark.plans.layout import (
-                assert_stream_dir_healthy,
-            )
-
-            # ... unless a crashed compaction left a sibling copy behind,
-            # in which case cold-starting would silently drop the corpus.
-            assert_stream_dir_healthy(spark, sig_dir)
-            corpus = None
-        if corpus is not None:
+        state = L.read_earlier(spark, batch_id, [sig_dir], owned=[pairs_dir])
+        if state is not None:
             pairs = incremental_neardup_from_bands(
-                corpus.toDF("old_id", "old_hs", "band"),
+                state[0].toDF("old_id", "old_hs", "band"),
                 nb.toDF("new_id", "new_hs", "band"),
                 threshold=threshold,
             )
-            pairs.write.mode("overwrite").parquet(f"{pairs_dir}/batch={int(batch_id)}")
-        nb.write.mode("overwrite").parquet(f"{sig_dir}/batch={int(batch_id)}")
+            L.write_batch(pairs, pairs_dir, batch_id)
+        L.write_batch(nb, sig_dir, batch_id)
 
     return apply
 
@@ -428,28 +417,13 @@ def hist_ingest_sink(sketch_dir: str, value_col: str, width: float = 100.0):
     sketch with :func:`hist_read`; compact with :func:`hist_compact`.
     Fixed boundaries make the merge associative, so the streamed sketch
     equals the batch-built global histogram bit-for-bit at every
-    trigger (asserted in tests).
-
-    Retry-safe like the dedup/ANN sinks: each partial lands in a
-    ``batch=<id>`` partition subdirectory with OVERWRITE semantics, so
-    an at-least-once replay rewrites its own partial instead of
-    double-counting the batch's values in the merged sketch."""
+    trigger (asserted in tests). A replayed batch rewrites its own
+    partial instead of double-counting it (plans/layout.py::read_earlier
+    states the sinks' retry-safe and crash contract)."""
     from is3107datapipelineproject_spark.operators.sketches import hist_build
 
     def apply(batch_df: DataFrame, batch_id: int) -> None:
-        from is3107datapipelineproject_spark.plans.layout import (
-            assert_stream_dir_healthy,
-        )
-
-        # Write-only sink, so no corpus-read exception can catch the
-        # crashed-compaction state: without this guard, rewriting
-        # batch=<id> into a MISSING dir whose .compact_old sibling holds
-        # the corpus makes the next compaction's "both exist" recovery
-        # reclaim (delete) the sibling — the corpus would be gone.
-        assert_stream_dir_healthy(batch_df.sparkSession, sketch_dir)
-        hist_build(batch_df, value_col, width).write.mode("overwrite").parquet(
-            f"{sketch_dir}/batch={int(batch_id)}"
-        )
+        L.write_batch(hist_build(batch_df, value_col, width), sketch_dir, batch_id)
 
     return apply
 
@@ -461,9 +435,7 @@ def hist_read(spark, sketch_dir: str) -> DataFrame:
     as cluster_labels_read): never reclaims a superseded aside, and
     re-checks the primary once before restoring, so a read racing a
     live compaction swap cannot yank the aside mid-swap and abort it."""
-    from is3107datapipelineproject_spark.plans.layout import recover_stale_sibling
-
-    recover_stale_sibling(spark, sketch_dir, reader=True)
+    L.recover_stale_sibling(spark, sketch_dir, reader=True)
     parts = spark.read.parquet(sketch_dir)
     return parts.groupBy("bin").agg(F.sum("bin_cnt").cast("long").alias("bin_cnt"))
 
@@ -478,12 +450,11 @@ def hist_compact(spark, sketch_dir: str) -> int:
     and after (fixed boundaries make the re-sum associative — asserted
     in tests); run against a quiesced stream. Returns the compacted
     row count."""
-    from is3107datapipelineproject_spark.plans.layout import compact_stream_dir
 
     def _resum(df: DataFrame) -> DataFrame:
         return df.groupBy("bin").agg(F.sum("bin_cnt").cast("long").alias("bin_cnt"))
 
-    compact_stream_dir(spark, sketch_dir, pre_merge=_resum)
+    L.compact_stream_dir(spark, sketch_dir, pre_merge=_resum)
     return spark.read.parquet(sketch_dir).count()
 
 
@@ -500,25 +471,15 @@ def dq_monitor_sink(report_dir: str, checks_factory):
     over the full stream = SUM of the stored partials, asserted equal
     to the batch battery over the same data in tests.
 
-    Retry-safe: each batch's report lands in a ``batch_id=<id>``
-    partition subdirectory with OVERWRITE semantics (the id comes back
-    as the partition column on read), so an at-least-once replay
-    rewrites its own rows instead of double-counting the batch in the
-    totals."""
+    Each batch's report lands in a ``batch_id=<id>`` partition (the id
+    comes back as the partition column on read) under the sinks'
+    retry-safe contract (plans/layout.py::read_earlier), so a replay
+    rewrites its own rows instead of double-counting the batch."""
     from is3107datapipelineproject_spark.operators.quality import row_checks
 
     def apply(batch_df: DataFrame, batch_id: int) -> None:
-        from is3107datapipelineproject_spark.plans.layout import (
-            assert_stream_dir_healthy,
-        )
-
-        assert_stream_dir_healthy(batch_df.sparkSession, report_dir)
-        out = row_checks(batch_df, checks_factory()).select(
-            "check", "total", "violations"
-        )
-        out.coalesce(1).write.mode("overwrite").parquet(
-            f"{report_dir}/batch_id={int(batch_id)}"
-        )
+        out = row_checks(batch_df, checks_factory()).select("check", "total", "violations")
+        L.write_batch(out.coalesce(1), report_dir, batch_id, key="batch_id")
 
     return apply
 
@@ -573,13 +534,9 @@ def prefix_ingest_sink(
     operator's bit-for-bit (asserted in tests), because both tiers'
     filters are lossless and verification is exact.
 
-    Retry-safe (this sink advertises an EXACT contract, so at-least-once
-    replay must not corrupt it): every output lands in a ``batch=<id>``
-    partition subdirectory with OVERWRITE semantics — a replayed
-    micro-batch rewrites its own postings/sets/pairs instead of
-    appending duplicates — and the corpus reads filter to strictly
-    EARLIER batch ids, so a retry never treats its own partial output
-    as pre-existing corpus.
+    Retry-safe, cold-start and crash contract:
+    plans/layout.py::read_earlier (this sink advertises an EXACT
+    contract, so at-least-once replay must not corrupt it).
 
     Loud-fail guards, identical to :func:`blocked_ingest_sink`'s (see
     its docstring for the cost argument): ``max_prefix_posting`` caps
@@ -589,74 +546,18 @@ def prefix_ingest_sink(
     a broadcast semi-join rejects a doc_id re-ingested across batches —
     either duplication would fan out the doc_id-keyed exact verify.
     """
-    from pyspark.errors import AnalysisException
+    from is3107datapipelineproject_spark.operators.dedup import prefix_posting_frame
 
-    from is3107datapipelineproject_spark.operators.dedup import (
-        _assert_one_row_per_doc,
-        _prefix_candidates_verify,
-        prefix_posting_frame,
+    return _exact_ingest_sink(
+        "prefix_ingest_sink",
+        lambda df: prefix_posting_frame(df, text_col, id_col, threshold=threshold, dfreq=None),
+        ("tok",),
+        postings_dir,
+        sets_dir,
+        pairs_dir,
+        threshold,
+        max_prefix_posting,
     )
-
-    tau = threshold - 1e-4
-
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        sets_b, postings_b = prefix_posting_frame(
-            batch_df, text_col, id_col, threshold=threshold, dfreq=None
-        )
-        # lazy (r13 sink sweep): first consumers are the one-row-per-doc
-        # guard and the hot-posting guard — full-scan aggregates.
-        sets_b = sets_b.localCheckpoint(eager=False)
-        postings_b = postings_b.localCheckpoint(eager=False)
-        _assert_one_row_per_doc(sets_b, f"prefix_ingest_sink: batch {batch_id}")
-        hottest = (
-            postings_b.groupBy("tok")
-            .agg(F.count(F.lit(1)).alias("p"))
-            .agg(F.max("p"))
-            .first()[0]
-        )
-        if hottest is not None and hottest > max_prefix_posting:
-            raise ValueError(
-                f"prefix_ingest_sink: batch {batch_id} has a prefix posting "
-                f"list of size {hottest} > max_prefix_posting="
-                f"{max_prefix_posting} — the batch is duplicate-saturated; "
-                "run exact_dedup on it first, then ingest the keepers"
-            )
-        older = F.col("batch") < batch_id
-        try:
-            corpus_postings = spark.read.parquet(postings_dir).filter(older).drop("batch")
-            corpus_sets = spark.read.parquet(sets_dir).filter(older).drop("batch")
-        except AnalysisException:  # cold start: first batch IS the corpus
-            from is3107datapipelineproject_spark.plans.layout import (
-                assert_stream_dir_healthy,
-            )
-
-            assert_stream_dir_healthy(spark, postings_dir)
-            assert_stream_dir_healthy(spark, sets_dir)
-            corpus_postings = None
-            corpus_sets = None
-        if corpus_postings is not None:
-            seen = (
-                corpus_sets.select("doc_id")
-                .join(F.broadcast(sets_b.select("doc_id")), "doc_id", "left_semi")
-                .limit(1)
-                .collect()
-            )
-            if seen:
-                raise ValueError(
-                    f"prefix_ingest_sink: batch {batch_id} re-ingests doc_id "
-                    f"{seen[0]['doc_id']!r} already in the corpus — the "
-                    "doc_id-keyed exact verify would fan out; dedup ids "
-                    "upstream or purge the old rows first"
-                )
-            pairs = _prefix_candidates_verify(
-                corpus_postings, postings_b, corpus_sets, sets_b, tau, threshold
-            )
-            pairs.write.mode("overwrite").parquet(f"{pairs_dir}/batch={int(batch_id)}")
-        postings_b.write.mode("overwrite").parquet(f"{postings_dir}/batch={int(batch_id)}")
-        sets_b.write.mode("overwrite").parquet(f"{sets_dir}/batch={int(batch_id)}")
-
-    return apply
 
 
 def blocked_ingest_sink(
@@ -689,14 +590,13 @@ def blocked_ingest_sink(
     4. appends the batch's postings + sets for the next trigger.
 
     New×old only; within-batch pairs are out of scope (run
-    blocked_jaccard_pairs on the batch if they matter). Retry-safe via
-    the standard ``batch=<id>`` overwrite + strictly-earlier corpus
-    filter. Right-to-be-forgotten: all three state dirs are per-ROW
-    logs keyed by the ids they name — the generic
-    :func:`purge_stream_state` tier covers them (``("doc_id",)`` for
-    postings/sets, ``("new_id", "old_id")`` for pairs); no
-    recomputation is needed because no row aggregates other docs'
-    data.
+    blocked_jaccard_pairs on the batch if they matter). Retry-safe,
+    cold-start and crash contract: plans/layout.py::read_earlier.
+    Right-to-be-forgotten: all three state dirs are per-ROW logs keyed
+    by the ids they name — the generic :func:`purge_stream_state` tier
+    covers them (``("doc_id",)`` for postings/sets, ``("new_id",
+    "old_id")`` for pairs); no recomputation is needed because no row
+    aggregates other docs' data.
 
     Loud-fail guards (the batch operators' no-silent-cliff contract,
     checked per trigger on the checkpointed BATCH frames so they cost
@@ -711,55 +611,57 @@ def blocked_ingest_sink(
     and a broadcast semi-join against the (column-pruned) corpus set
     ids rejects a doc_id re-ingested across batches — either would
     silently fan out the doc_id-keyed exact verify (a RETRIED batch is
-    exempt by construction: the strictly-earlier filter hides its own
+    exempt by construction: the strictly-earlier read hides its own
     prior write)."""
-    from pyspark.errors import AnalysisException
+    from is3107datapipelineproject_spark.operators.dedup import blocked_posting_frame
 
+    return _exact_ingest_sink(
+        "blocked_ingest_sink",
+        lambda df: blocked_posting_frame(df, text_col, id_col, block_col, threshold=threshold),
+        ("block", "tok"),
+        postings_dir,
+        sets_dir,
+        pairs_dir,
+        threshold,
+        max_prefix_posting,
+    )
+
+
+def _exact_ingest_sink(
+    name: str,
+    frames,
+    group_cols: tuple[str, ...],
+    postings_dir: str,
+    sets_dir: str,
+    pairs_dir: str,
+    threshold: float,
+    max_prefix_posting: int,
+):
+    """The one body of :func:`prefix_ingest_sink` and
+    :func:`blocked_ingest_sink`. ``frames(batch_df)`` builds the batch's
+    ``(sets, postings)``; ``group_cols`` is the posting-list key —
+    ``("tok",)``, or ``("block", "tok")`` joined as one struct key."""
     from is3107datapipelineproject_spark.operators.dedup import (
         _assert_one_row_per_doc,
+        _assert_posting_cap,
         _prefix_candidates_verify,
-        blocked_posting_frame,
     )
 
     tau = threshold - 1e-4
 
     def apply(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        sets_b, postings_b = blocked_posting_frame(
-            batch_df, text_col, id_col, block_col, threshold=threshold
-        )
+        what = f"{name}: batch {batch_id}"
+        sets_b, postings_b = frames(batch_df)
         # lazy (r13 sink sweep): first consumers are the one-row-per-doc
         # guard and the hot-posting guard — full-scan aggregates.
         sets_b = sets_b.localCheckpoint(eager=False)
         postings_b = postings_b.localCheckpoint(eager=False)
-        _assert_one_row_per_doc(sets_b, f"blocked_ingest_sink: batch {batch_id}")
-        hottest = (
-            postings_b.groupBy("block", "tok")
-            .agg(F.count(F.lit(1)).alias("p"))
-            .agg(F.max("p"))
-            .first()[0]
-        )
-        if hottest is not None and hottest > max_prefix_posting:
-            raise ValueError(
-                f"blocked_ingest_sink: batch {batch_id} has a (block, token) "
-                f"prefix posting list of size {hottest} > max_prefix_posting="
-                f"{max_prefix_posting} — the batch is duplicate-saturated; "
-                "run exact_dedup on it first, then ingest the keepers"
-            )
-        older = F.col("batch") < batch_id
-        try:
-            corpus_postings = spark.read.parquet(postings_dir).filter(older).drop("batch")
-            corpus_sets = spark.read.parquet(sets_dir).filter(older).drop("batch")
-        except AnalysisException:  # cold start: first batch IS the corpus
-            from is3107datapipelineproject_spark.plans.layout import (
-                assert_stream_dir_healthy,
-            )
-
-            assert_stream_dir_healthy(spark, postings_dir)
-            assert_stream_dir_healthy(spark, sets_dir)
-            corpus_postings = None
-            corpus_sets = None
-        if corpus_postings is not None:
+        _assert_one_row_per_doc(sets_b, what)
+        _assert_posting_cap(postings_b, group_cols, max_prefix_posting, what)
+        state = L.read_earlier(spark, batch_id, [postings_dir, sets_dir], owned=[pairs_dir])
+        if state is not None:
+            corpus_postings, corpus_sets = state
             seen = (
                 corpus_sets.select("doc_id")
                 .join(F.broadcast(sets_b.select("doc_id")), "doc_id", "left_semi")
@@ -768,12 +670,11 @@ def blocked_ingest_sink(
             )
             if seen:
                 raise ValueError(
-                    f"blocked_ingest_sink: batch {batch_id} re-ingests doc_id "
-                    f"{seen[0]['doc_id']!r} already in the corpus — the "
-                    "doc_id-keyed exact verify would fan out; dedup ids "
-                    "upstream or purge the old rows first"
+                    f"{what} re-ingests doc_id {seen[0]['doc_id']!r} already in "
+                    "the corpus — the doc_id-keyed exact verify would fan out; "
+                    "dedup ids upstream or purge the old rows first"
                 )
-            key = F.struct("block", "tok").alias("tok")
+            key = F.struct(*group_cols).alias("tok") if len(group_cols) > 1 else F.col("tok")
             pairs = _prefix_candidates_verify(
                 corpus_postings.select("doc_id", key, "pos", "m"),
                 postings_b.select("doc_id", key, "pos", "m"),
@@ -782,9 +683,9 @@ def blocked_ingest_sink(
                 tau,
                 threshold,
             )
-            pairs.write.mode("overwrite").parquet(f"{pairs_dir}/batch={int(batch_id)}")
-        postings_b.write.mode("overwrite").parquet(f"{postings_dir}/batch={int(batch_id)}")
-        sets_b.write.mode("overwrite").parquet(f"{sets_dir}/batch={int(batch_id)}")
+            L.write_batch(pairs, pairs_dir, batch_id)
+        L.write_batch(postings_b, postings_dir, batch_id)
+        L.write_batch(sets_b, sets_dir, batch_id)
 
     return apply
 
@@ -841,10 +742,8 @@ def edit_ingest_sink(
 
     Same new×old-only contract as the other tiers; within-batch pairs
     are out of scope (run edit_neardup_pairs on the batch if they
-    matter). Retry-safe via the ``batch=<id>`` OVERWRITE pattern with
-    corpus reads filtered to strictly EARLIER batch ids — a replayed
-    micro-batch rewrites its own titles/keys/pairs and never treats
-    its own partial output as pre-existing corpus.
+    matter). Retry-safe, cold-start and crash contract:
+    plans/layout.py::read_earlier.
 
     ``members_dir`` (strongly recommended) additionally persists the
     per-batch MEMBER LEDGER ``(doc_id, tt)`` — one narrow row per
@@ -855,18 +754,17 @@ def edit_ingest_sink(
     recompute each historical pair batch from the members that preceded
     it). Without it the sink behaves as before and the edit state's
     right-to-be-forgotten path is a documented seam."""
-    from pyspark.errors import AnalysisException
-
     from is3107datapipelineproject_spark.operators.dedup import (
         _edit_distinct_titles,
         _edit_index_keys,
         _edit_probe_keys,
     )
-    from is3107datapipelineproject_spark.plans.layout import assert_no_purge_intent
+
+    owned = [pairs_dir] + ([members_dir] if members_dir is not None else [])
 
     def apply(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        assert_no_purge_intent(spark, titles_dir, "edit_ingest_sink")
+        L.assert_no_purge_intent(spark, titles_dir, "edit_ingest_sink")
         # lazy (r13 sink sweep): every consumer of these per-batch
         # frames (probe broadcast build, guard aggregates, the state
         # appends) is a full scan; the first job materializes each.
@@ -875,20 +773,9 @@ def edit_ingest_sink(
         t_new = batch_df.select(
             F.col(id_col).alias("tid"), F.col(title_col).alias("tt")
         ).localCheckpoint(eager=False)
-        older = F.col("batch") < batch_id
-        try:
-            corpus_keys = spark.read.parquet(keys_dir).filter(older).drop("batch")
-            corpus = spark.read.parquet(titles_dir).filter(older).drop("batch")
-        except AnalysisException:  # cold start: first batch IS the corpus
-            from is3107datapipelineproject_spark.plans.layout import (
-                assert_stream_dir_healthy,
-            )
-
-            assert_stream_dir_healthy(spark, titles_dir)
-            assert_stream_dir_healthy(spark, keys_dir)
-            corpus_keys = None
-            corpus = None
-        if corpus_keys is not None:
+        state = L.read_earlier(spark, batch_id, [keys_dir, titles_dir], owned=owned)
+        if state is not None:
+            corpus_keys, corpus = state
             probes = _edit_probe_keys(t_new, "new_id")
             # one candidate join feeds BOTH the guard and the verify:
             # corpus postings never shuffle (broadcast probe side), and
@@ -936,13 +823,12 @@ def edit_ingest_sink(
                 )
                 .select("new_id", "old_id", "lev", "n_old")
             )
-            pairs.write.mode("overwrite").parquet(f"{pairs_dir}/batch={int(batch_id)}")
-        keys_b.write.mode("overwrite").parquet(f"{keys_dir}/batch={int(batch_id)}")
-        b.write.mode("overwrite").parquet(f"{titles_dir}/batch={int(batch_id)}")
+            L.write_batch(pairs, pairs_dir, batch_id)
+        L.write_batch(keys_b, keys_dir, batch_id)
+        L.write_batch(b, titles_dir, batch_id)
         if members_dir is not None:
-            batch_df.select(
-                F.col(id_col).alias("doc_id"), F.col(title_col).alias("tt")
-            ).write.mode("overwrite").parquet(f"{members_dir}/batch={int(batch_id)}")
+            members = batch_df.select(F.col(id_col).alias("doc_id"), F.col(title_col).alias("tt"))
+            L.write_batch(members, members_dir, batch_id)
 
     return apply
 
@@ -968,13 +854,7 @@ def edit_compact_state(
     is the same global min/sum (asserted in tests). Quiesced-stream
     caveat as everywhere. Returns titles_dir ``(files_before,
     files_after)``."""
-    from is3107datapipelineproject_spark.operators.dedup import _edit_index_keys
-    from is3107datapipelineproject_spark.plans.layout import (
-        _hadoop_fs,
-        compact_stream_dir,
-    )
-
-    out = compact_stream_dir(
+    out = L.compact_stream_dir(
         spark,
         titles_dir,
         pre_merge=lambda df: _collapse_title_rows(df).select("tid", "tt", "grp"),
@@ -1008,38 +888,19 @@ def _collapse_member_rows(members: DataFrame) -> DataFrame:
 
 def _rebuild_edit_keys(spark: SparkSession, titles_dir: str, keys_dir: str) -> None:
     """Swap in a fresh ``keys_dir`` derived from the CURRENT titles
-    state under its max batch id (rename-aside; the keys are a pure
-    function of the titles — DERIVED state, rebuildable from titles_dir
-    if a crash is ever suspected). Shared by edit_compact_state and
-    edit_purge_state. Same stale-sibling recovery prologue as
-    compact_stream_dir: a crash between the two renames leaves
-    ``keys_dir`` missing with the aside copy holding the old keys —
-    restore it first so a purge/compact RESUME rebuilds from a
-    consistent dir instead of failing on the aside rename."""
+    state, under the titles' max batch id (the keys are a pure function
+    of the titles — DERIVED state, rebuildable from titles_dir if a
+    crash is ever suspected). Shared by edit_compact_state and
+    edit_purge_state; the rewrite, its stale-sibling recovery and its
+    crash safety are plans/layout.py::_swap_rewrite's."""
     from is3107datapipelineproject_spark.operators.dedup import _edit_index_keys
-    from is3107datapipelineproject_spark.plans.layout import (
-        _hadoop_fs,
-        _max_batch_id,
-        recover_stale_sibling,
-        staged_swap,
-    )
 
-    recover_stale_sibling(spark, keys_dir)
-    titles = spark.read.parquet(titles_dir)
-    maxb = _max_batch_id(spark, titles_dir)
-    keys = _edit_index_keys(titles.drop("batch"), "tid")
-    if titles.limit(1).count() == 0:
-        # a fully-purged corpus: force one schema-carrying empty file so
-        # the rebuilt dir stays readable (an empty multi-partition write
-        # emits no data files at all)
-        keys = keys.coalesce(1)
-    tmp = f"{keys_dir}.compact_tmp"
-    _, fs = _hadoop_fs(spark, keys_dir)
-    tp, _ = _hadoop_fs(spark, tmp)
-    if fs.exists(tp):
-        fs.delete(tp, True)
-    keys.write.parquet(f"{tmp}/batch={maxb}")
-    staged_swap(spark, keys_dir, tmp)
+    L._swap_rewrite(
+        spark,
+        keys_dir,
+        lambda titles: _edit_index_keys(titles.drop("batch"), "tid"),
+        source=titles_dir,
+    )
 
 
 def edit_purge_state(
@@ -1098,20 +959,10 @@ def edit_purge_state(
     a request hitting a corpus-sized boilerplate group should rebuild
     instead); everything else is one narrow rewrite per state dir.
     Quiesced-stream caveat as for every compaction."""
-    from is3107datapipelineproject_spark.plans.layout import (
-        _hadoop_fs,
-        clear_purge_intent,
-        compact_stream_dir,
-        read_purge_intent,
-        recover_stale_sibling,
-        rewrite_stream_dir,
-        write_purge_intent,
-    )
-
     dset = deleted.select(
         F.col(id_col).alias("did"), F.col(title_col).alias("dtt")
     ).distinct()
-    pending = read_purge_intent(spark, titles_dir)
+    pending = L.read_purge_intent(spark, titles_dir)
     if pending is None:
         # Fail-fast completeness gate, BEFORE the marker or any rewrite:
         # steps 2-3 derive titles/keys WHOLLY from the ledger, so a
@@ -1126,9 +977,9 @@ def edit_purge_state(
         # A crashed compaction may have left either dir renamed aside
         # (a purge is a legitimate next step after such a crash) —
         # recover before reading, like every rewrite's own prologue.
-        recover_stale_sibling(spark, titles_dir)
-        recover_stale_sibling(spark, members_dir)
-        mpp, mpfs = _hadoop_fs(spark, members_dir)
+        L.recover_stale_sibling(spark, titles_dir)
+        L.recover_stale_sibling(spark, members_dir)
+        mpp, mpfs = L._hadoop_fs(spark, members_dir)
         if not mpfs.exists(mpp):
             raise ValueError(
                 f"edit_purge_state: no member ledger at {members_dir} — the "
@@ -1161,23 +1012,21 @@ def edit_purge_state(
     # lazy-checkpoint contract); the cost is one tiny job per
     # governance batch, not per ingest.
     dset = dset.localCheckpoint(eager=True)
-    write_purge_intent(spark, titles_dir, dset)
+    L.write_purge_intent(spark, titles_dir, dset)
     dids = dset.select("did")
 
     # 1. member ledger: row removal, batch layout preserved
     def drop_members(df: DataFrame) -> DataFrame:
         return df.join(F.broadcast(dids), df["doc_id"] == F.col("did"), "left_anti")
 
-    rewrite_stream_dir(spark, members_dir, drop_members, checkpoint_dir=checkpoint_dir)
+    L.rewrite_stream_dir(spark, members_dir, drop_members, checkpoint_dir=checkpoint_dir)
     mem = spark.read.parquet(members_dir)  # post-purge = never-ingested members
 
     # 2. titles: the never-ingested collapse over surviving members
     def recollapse(_df: DataFrame) -> DataFrame:
         return _collapse_member_rows(mem.drop("batch")).select("tid", "tt", "grp")
 
-    compact_stream_dir(
-        spark, titles_dir, pre_merge=recollapse, checkpoint_dir=checkpoint_dir
-    )
+    L.compact_stream_dir(spark, titles_dir, pre_merge=recollapse, checkpoint_dir=checkpoint_dir)
 
     # 3. keys: pure function of the collapsed titles
     _rebuild_edit_keys(spark, titles_dir, keys_dir)
@@ -1226,11 +1075,11 @@ def edit_purge_state(
     # existence without recovering first would skip the pairs rewrite,
     # clear the marker, and let a later recover resurrect forgotten ids
     # (round-10 ADVICE-high). Recover BEFORE deciding "no pair log yet".
-    recover_stale_sibling(spark, pairs_dir)
-    pp, pfs = _hadoop_fs(spark, pairs_dir)
+    L.recover_stale_sibling(spark, pairs_dir)
+    pp, pfs = L._hadoop_fs(spark, pairs_dir)
     if pfs.exists(pp):  # a one-batch corpus has no pair log yet
-        rewrite_stream_dir(spark, pairs_dir, rewrite_pairs, checkpoint_dir=checkpoint_dir)
-    clear_purge_intent(spark, titles_dir)
+        L.rewrite_stream_dir(spark, pairs_dir, rewrite_pairs, checkpoint_dir=checkpoint_dir)
+    L.clear_purge_intent(spark, titles_dir)
 
 
 def cluster_ingest_sink(
@@ -1268,11 +1117,9 @@ def cluster_ingest_sink(
     min pre-merge (``cluster_compact_state``), inheriting its
     commit-log gate and rename-aside crash safety.
 
-    Retry-safe like the other ingest sinks: outputs land in
-    ``batch=<id>`` partitions with OVERWRITE semantics and every state
-    read filters to strictly EARLIER batch ids, so an at-least-once
-    replay recomputes the identical delta from the identical prior
-    state (asserted in tests).
+    Retry-safe, cold-start and crash contract:
+    plans/layout.py::read_earlier — a replay recomputes the identical
+    delta from the identical prior state (asserted in tests).
 
     At 100 TB the relabel side stays a broadcast, but the delta scan
     of the label table is corpus-wide unless the table is bucketed by
@@ -1280,42 +1127,29 @@ def cluster_ingest_sink(
     the touched-cluster filter prunes (the edge-table layout's
     pattern); the merge-on-read log here keeps the demo exact.
     """
-    from pyspark.errors import AnalysisException
-
     from is3107datapipelineproject_spark.operators.dedup import (
         band_signature_frame,
         incremental_cluster_update,
         incremental_neardup_from_bands,
         minhash_neardup_pairs,
     )
-    from is3107datapipelineproject_spark.plans.layout import assert_no_purge_intent
 
     def apply(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        assert_no_purge_intent(spark, labels_dir, "cluster_ingest_sink")
+        L.assert_no_purge_intent(spark, labels_dir, "cluster_ingest_sink")
         # with_sig: the persisted band table carries the packed minhash
         # array so a later cluster_purge_state re-derivation keeps the
         # hot-band sub-banding tier (pairs_from_band_table).
         nb = band_signature_frame(
             batch_df, text_col, id_col, k, with_sig=True
         ).localCheckpoint(eager=False)  # lazy (r13 sink sweep): all consumers full-scan
-        older = F.col("batch") < batch_id
-        try:
-            corpus = spark.read.parquet(sig_dir).filter(older).drop("batch")
-        except AnalysisException:  # cold start: first batch IS the corpus
-            from is3107datapipelineproject_spark.plans.layout import (
-                assert_stream_dir_healthy,
-            )
-
-            assert_stream_dir_healthy(spark, sig_dir)
-            assert_stream_dir_healthy(spark, labels_dir)
-            corpus = None
+        state = L.read_earlier(spark, batch_id, [sig_dir], owned=[labels_dir])
         edges = minhash_neardup_pairs(
             batch_df, text_col, id_col, k=k, threshold=threshold
         ).select("doc1", "doc2")
-        if corpus is not None:
+        if state is not None:
             nx_old = incremental_neardup_from_bands(
-                corpus.select("doc_id", "hs", "band").toDF("old_id", "old_hs", "band"),
+                state[0].select("doc_id", "hs", "band").toDF("old_id", "old_hs", "band"),
                 nb.select("doc_id", "hs", "band").toDF("new_id", "new_hs", "band"),
                 threshold=threshold,
             ).select(F.col("new_id").alias("doc1"), F.col("old_id").alias("doc2"))
@@ -1334,8 +1168,8 @@ def cluster_ingest_sink(
             id_col,
             delta_only=True,
         )
-        delta.write.mode("overwrite").parquet(f"{labels_dir}/batch={int(batch_id)}")
-        nb.write.mode("overwrite").parquet(f"{sig_dir}/batch={int(batch_id)}")
+        L.write_batch(delta, labels_dir, batch_id)
+        L.write_batch(nb, sig_dir, batch_id)
 
     return apply
 
@@ -1361,9 +1195,7 @@ def cluster_labels_read(
     is re-checked once before the restoring rename so a read racing a
     LIVE staged_swap observes the swap completing instead of aborting
     it — pure reads mutate only when the primary is genuinely absent."""
-    from is3107datapipelineproject_spark.plans.layout import recover_stale_sibling
-
-    recover_stale_sibling(spark, labels_dir, reader=True)
+    L.recover_stale_sibling(spark, labels_dir, reader=True)
     df = spark.read.parquet(labels_dir)
     if before is not None:
         df = df.filter(F.col("batch") < before)
@@ -1377,15 +1209,12 @@ def cluster_compact_state(
     merge-on-read invariant by monotonicity), via compact_stream_dir's
     commit-log-gated, rename-aside machinery. Quiesced-stream caveat
     as everywhere. Returns ``(files_before, files_after)``."""
-    from is3107datapipelineproject_spark.plans.layout import compact_stream_dir
 
     def collapse(df: DataFrame) -> DataFrame:
         key = [c for c in df.columns if c != "cluster_id"][0]
         return df.groupBy(key).agg(F.min("cluster_id").alias("cluster_id"))
 
-    return compact_stream_dir(
-        spark, labels_dir, pre_merge=collapse, checkpoint_dir=checkpoint_dir
-    )
+    return L.compact_stream_dir(spark, labels_dir, pre_merge=collapse, checkpoint_dir=checkpoint_dir)
 
 
 def cluster_purge_state(
@@ -1431,13 +1260,6 @@ def cluster_purge_state(
         pairs_from_band_table,
         retract_from_cluster_state,
     )
-    from is3107datapipelineproject_spark.plans.layout import (
-        clear_purge_intent,
-        compact_stream_dir,
-        read_purge_intent,
-        recover_stale_sibling,
-        write_purge_intent,
-    )
 
     # A prior compaction (or this purge's own bands rewrite) may have
     # crashed mid-swap, leaving either dir renamed aside — and the
@@ -1445,10 +1267,10 @@ def cluster_purge_state(
     # compact_stream_dir's own recovery prologue could run (round-10
     # ADVICE-medium: a missing sig_dir wedged the resume behind a
     # PATH_NOT_FOUND while the staged marker kept blocking ingest).
-    recover_stale_sibling(spark, sig_dir)
-    recover_stale_sibling(spark, labels_dir)
+    L.recover_stale_sibling(spark, sig_dir)
+    L.recover_stale_sibling(spark, labels_dir)
     dset = deleted.select(F.col(id_col).alias("did")).distinct()
-    pending = read_purge_intent(spark, labels_dir)
+    pending = L.read_purge_intent(spark, labels_dir)
     if pending is not None:
         # A prior purge crashed between its rewrites: merge its staged
         # set in, so this run completes BOTH purges (exact — purges
@@ -1456,7 +1278,7 @@ def cluster_purge_state(
         dset = dset.unionByName(pending.toDF("did")).distinct()
     # deliberately EAGER — purge pin, see edit_purge_state's note.
     dset = dset.localCheckpoint(eager=True)
-    write_purge_intent(spark, labels_dir, dset)
+    L.write_purge_intent(spark, labels_dir, dset)
     # the labels pre-merge re-derives affected pairs from the PRE-purge
     # band table: safe lazily (no corpus-sized checkpoint — the round-8
     # convention) because the labels rewrite completes before the bands
@@ -1491,13 +1313,9 @@ def cluster_purge_state(
     def purge_bands(df: DataFrame) -> DataFrame:
         return df.join(F.broadcast(dset), df["doc_id"] == F.col("did"), "left_anti")
 
-    compact_stream_dir(
-        spark, labels_dir, pre_merge=purge_labels, checkpoint_dir=checkpoint_dir
-    )
-    compact_stream_dir(
-        spark, sig_dir, pre_merge=purge_bands, checkpoint_dir=checkpoint_dir
-    )
-    clear_purge_intent(spark, labels_dir)
+    L.compact_stream_dir(spark, labels_dir, pre_merge=purge_labels, checkpoint_dir=checkpoint_dir)
+    L.compact_stream_dir(spark, sig_dir, pre_merge=purge_bands, checkpoint_dir=checkpoint_dir)
+    L.clear_purge_intent(spark, labels_dir)
 
 
 def purge_stream_state(
@@ -1531,8 +1349,6 @@ def purge_stream_state(
     ``deleted`` is a 1-column frame; ``deleted_col`` names it (defaults
     to the frame's only column). Quiesced-stream caveat as for every
     compaction. Returns ``(files_before, files_after)``."""
-    from is3107datapipelineproject_spark.plans.layout import compact_stream_dir
-
     dc = deleted_col or deleted.columns[0]
     # deliberately EAGER — purge pin, see edit_purge_state's note.
     dset = deleted.select(F.col(dc).alias("__purged")).distinct().localCheckpoint(
@@ -1547,9 +1363,7 @@ def purge_stream_state(
             )
         return out
 
-    return compact_stream_dir(
-        spark, path, pre_merge=drop_rows, checkpoint_dir=checkpoint_dir
-    )
+    return L.compact_stream_dir(spark, path, pre_merge=drop_rows, checkpoint_dir=checkpoint_dir)
 
 
 def semantic_ingest_sink(
@@ -1590,10 +1404,8 @@ def semantic_ingest_sink(
     are one row per vector, so no cross-batch duplicate state
     accumulates (no edit_compact_state analogue needed; small-files
     hygiene is plans/layout.py::compact_stream_dir as usual).
-    Retry-safe via the ``batch=<id>`` OVERWRITE pattern with corpus
-    reads filtered to strictly EARLIER batch ids."""
-    from pyspark.errors import AnalysisException
-
+    Retry-safe, cold-start and crash contract:
+    plans/layout.py::read_earlier."""
     from is3107datapipelineproject_spark.operators.clustering import (
         assign_to_centroids,
     )
@@ -1613,17 +1425,9 @@ def semantic_ingest_sink(
             # build, member append) are full scans
             .localCheckpoint(eager=False)
         )
-        older = F.col("batch") < batch_id
-        try:
-            corpus = spark.read.parquet(members_dir).filter(older).drop("batch")
-        except AnalysisException:  # cold start: first batch IS the corpus
-            from is3107datapipelineproject_spark.plans.layout import (
-                assert_stream_dir_healthy,
-            )
-
-            assert_stream_dir_healthy(spark, members_dir)
-            corpus = None
-        if corpus is not None:
+        state = L.read_earlier(spark, batch_id, [members_dir], owned=[pairs_dir])
+        if state is not None:
+            corpus = state[0]
             sizes = corpus.groupBy("cluster").agg(F.count(F.lit(1)).alias("csz"))
             o = corpus.join(F.broadcast(sizes), "cluster")
             nrows = b.select(
@@ -1657,10 +1461,8 @@ def semantic_ingest_sink(
                 .select(F.col("new_id"), F.col("cvid").alias("old_id"), sim.alias("cosine"))
                 .filter(F.col("cosine") >= threshold)
             )
-            small.unionByName(big).write.mode("overwrite").parquet(
-                f"{pairs_dir}/batch={int(batch_id)}"
-            )
-        b.write.mode("overwrite").parquet(f"{members_dir}/batch={int(batch_id)}")
+            L.write_batch(small.unionByName(big), pairs_dir, batch_id)
+        L.write_batch(b, members_dir, batch_id)
 
     return apply
 
@@ -1680,11 +1482,9 @@ def ann_ingest_sink(
     and append the ``(vec_id, sub, code, cluster)`` codes to
     ``codes_dir``.
 
-    Retry-safe like the dedup ingest sinks: each batch lands in a
-    ``batch=<id>`` partition subdirectory with OVERWRITE semantics
-    (cluster stays the second-level partition key, so cluster-filter
-    pruning still works on the directory), so an at-least-once replay
-    rewrites its own files instead of duplicating codes. Streamed
+    Retry-safe and crash contract: plans/layout.py::read_earlier (cluster
+    stays the second-level partition key under ``batch=<id>``, so
+    cluster-filter pruning still works on the directory). Streamed
     codes == the batch append's, bit-for-bit (asserted in tests)."""
 
     def apply(batch_df: DataFrame, batch_id: int) -> None:
@@ -1692,25 +1492,14 @@ def ann_ingest_sink(
             assign_to_centroids,
         )
         from is3107datapipelineproject_spark.operators.pq import pq_encode
-        from is3107datapipelineproject_spark.plans.layout import (
-            assert_stream_dir_healthy,
-        )
 
         spark = batch_df.sparkSession
-        # write-only sink: guard the crashed-compaction state explicitly
-        # (no corpus read here to raise on the missing dir)
-        assert_stream_dir_healthy(spark, codes_dir)
         cents = spark.table(centroids_table)
         cb = spark.table(codebook_table)
         asg = assign_to_centroids(batch_df, "vec_id", "embedding", cents)
         codes = pq_encode(batch_df, "vec_id", "embedding", m=m, k=k, codebook=cb)
-        (
-            codes.join(asg.select("vec_id", "cluster"), "vec_id")
-            .repartition("cluster")
-            .write.mode("overwrite")
-            .partitionBy("cluster")
-            .parquet(f"{codes_dir}/batch={int(batch_id)}")
-        )
+        out = codes.join(asg.select("vec_id", "cluster"), "vec_id").repartition("cluster")
+        L.write_batch(out, codes_dir, batch_id, partition_by=("cluster",))
 
     return apply
 

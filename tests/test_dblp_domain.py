@@ -160,6 +160,8 @@ def test_pair_counts_and_collabs(pubs):
 
     lookup = P.pair_lookup(pc, 2020, "1/234", "2/999").collect()
     assert len(lookup) == 1 and lookup[0]["count"] == 1
+    swapped = P.pair_lookup(pc, 2020, "2/999", "1/234").collect()
+    assert len(swapped) == 1 and swapped[0]["count"] == 1
 
 
 def test_incremental_epochs(spark, pubs):

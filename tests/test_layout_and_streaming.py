@@ -930,6 +930,70 @@ def test_sinks_fail_loudly_on_orphaned_compaction(spark, tmp_path):
     assert_stream_dir_healthy(spark, sig_dir)
 
 
+def test_sink_write_refuses_stranded_pair_log(spark, tmp_path):
+    """Every sink batch write checks its target dir, not only the dirs
+    the sink reads. A pair log stranded at ``.compact_old`` (the state a
+    purge_stream_state crash mid-swap leaves) must fail the next batch:
+    writing it into a fresh primary would let the next compaction see
+    both copies and reclaim the aside, losing every earlier pair."""
+    import pytest
+
+    text = "the quick brown fox jumps over the lazy dog again and again"
+    schema = "doc_id LONG, text STRING"
+    sig_dir = str(tmp_path / "sp_sigs")
+    pairs_dir = str(tmp_path / "sp_pairs")
+    sink = W.neardup_ingest_sink(sig_dir, pairs_dir)
+    sink(spark.createDataFrame([(1, text)], schema), 0)
+    sink(spark.createDataFrame([(2, text)], schema), 1)
+    os.rename(pairs_dir, pairs_dir + ".compact_old")
+
+    with pytest.raises(RuntimeError, match="compact"):
+        sink(spark.createDataFrame([(3, text)], schema), 2)
+    assert not os.path.exists(pairs_dir)
+
+    # the documented recovery, then the replay: no pair is lost
+    L.compact_stream_dir(spark, pairs_dir)
+    sink(spark.createDataFrame([(3, text)], schema), 2)
+    pairs = {(r.new_id, r.old_id) for r in spark.read.parquet(pairs_dir).collect()}
+    assert pairs == {(2, 1), (3, 1), (3, 2)}
+
+
+def test_foreach_batch_merge_replay_after_midswap_crash(spark, tmp_path, monkeypatch):
+    """foreach_batch_merge swaps the merged table in rename-aside: a
+    crash between the two renames leaves the old table at
+    ``.compact_old``, and replaying the batch recovers it and re-merges
+    — old rows still win, nothing is taken as a cold start, and no
+    sibling is left behind. A first batch on a missing table is the
+    table."""
+    known = str(tmp_path / "known")
+    schema = "event_id LONG, v STRING"
+    sink = W.foreach_batch_merge(known, "event_id")
+    sink(spark.createDataFrame([(1, "old"), (2, "old")], schema), 0)
+    assert {r.event_id: r.v for r in spark.read.parquet(known).collect()} == {1: "old", 2: "old"}
+
+    real_swap = L.staged_swap
+
+    def midswap_crash(sp, path, tmp):
+        os.rename(path, path + ".compact_old")  # the aside rename happened...
+        raise RuntimeError("injected mid-swap crash")  # ...the swap-in did not
+
+    batch = spark.createDataFrame([(2, "new"), (3, "new")], schema)
+    monkeypatch.setattr(L, "staged_swap", midswap_crash)
+    try:
+        sink(batch, 1)
+        raise AssertionError("injected crash did not fire")
+    except RuntimeError as e:
+        assert "mid-swap" in str(e)
+    monkeypatch.setattr(L, "staged_swap", real_swap)
+    assert not os.path.exists(known)
+
+    sink(batch, 1)  # at-least-once replay of the crashed batch
+    merged = {r.event_id: r.v for r in spark.read.parquet(known).collect()}
+    assert merged == {2: "old", 3: "new"}
+    assert not os.path.exists(known + ".compact_old")
+    assert not os.path.exists(known + ".compact_tmp")
+
+
 def test_edit_ingest_sink_matches_batch_incremental(spark, tmp_path):
     """Edit-tier streaming ingest == batch incremental_edit_neardup:
     three title micro-batches through the foreachBatch sink; batch 3's

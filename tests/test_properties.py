@@ -185,12 +185,19 @@ def test_lazy_local_checkpoint_backfills_after_partial_first_action(spark):
     so later full reads over the truncated lineage succeed and values
     are pinned. Every eager→lazy conversion since r12 leans on this; if
     a Spark upgrade ever changes it, this test fails first and the
-    whole lazy sweep must be re-audited."""
+    whole lazy sweep must be re-audited.
+
+    The values come from a nondeterministic Python UDF, so a recompute
+    draws new ones: without the checkpoint the two sums differ, and
+    equal sums show the values really are pinned."""
+    import random
+
     from pyspark.sql import functions as F
 
+    draw = F.udf(lambda _: random.random(), "double").asNondeterministic()
     df = (
         spark.range(0, 20000, 1, 8)
-        .withColumn("x", F.rand(7))
+        .withColumn("x", draw("id"))
         .localCheckpoint(eager=False)
     )
     assert df.limit(1).count() == 1  # partial first action

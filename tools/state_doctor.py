@@ -1,26 +1,31 @@
 """State doctor: scan a state root for crash leftovers of the engine's
 rename-aside rewrite machinery and report (or repair) each one.
 
-Every stateful maintenance path in this repo — compact_stream_dir,
-rewrite_stream_dir, the edit keys rebuild, the composite purges — keeps
-a complete copy of the state at the primary path or at a sibling at
-every instant (plans/layout.py::staged_swap). A crash therefore leaves
-one of a small, fully-enumerable set of artifacts, each with one
-correct recovery:
+Every path that rewrites a state dir goes through one rename-aside
+rewrite in plans/layout.py: ``_swap_rewrite`` (compact_stream_dir,
+rewrite_stream_dir and the edit keys rebuild, and through them
+hist_compact, cluster_compact_state, edit_compact_state,
+purge_stream_state, cluster_purge_state and edit_purge_state) and
+``swap_in`` (which _swap_rewrite ends in, and which foreach_batch_merge
+uses for its per-batch table swap). Both keep a complete copy of the
+state at the primary path or at a sibling at every instant
+(plans/layout.py::staged_swap). A crash therefore leaves one of a
+small, fully-enumerable set of artifacts, each with one correct
+recovery:
 
 | artifact | meaning | repair |
 |---|---|---|
 | ``d.compact_old`` with ``d`` present | swap completed, aside not yet reclaimed | delete the aside |
 | ``d.compact_old`` with ``d`` missing | mid-swap crash — the aside IS the corpus | rename it back to ``d`` |
 | ``d.compact_tmp`` with ``d`` or ``d.compact_old`` present | incomplete rewrite output | delete (the original is intact; the rewrite re-runs) |
-| ``d.compact_tmp`` alone | inconsistent (no complete copy found) | REPORT ONLY — never auto-repair |
+| ``d.compact_tmp`` alone | inconsistent (no complete copy found), or a first swap_in write that crashed before its rename (the next call clears and rewrites it) | REPORT ONLY — never auto-repair |
 | ``d.purge_intent`` / ``.purge_intent.old`` | a composite purge is in flight | REPORT ONLY — re-run the purge (any deleted set; the pending one merges in) |
 | ``d.purge_intent.tmp`` with marker missing, ``_SUCCESS`` present | a marker restage crashed between its renames; the COMPLETE merged set is recoverable | REPORT ONLY — read_purge_intent restores it; re-run the purge |
 | ``d.purge_intent.tmp`` otherwise | incomplete staging the engine ignores (read_purge_intent skips it; the next write deletes it) | delete |
 
 ``--repair`` applies exactly the delete/rename rows — the same
-decisions plans/layout.py::recover_stale_sibling and the rewrites'
-stale-tmp prologue make, so running the doctor is equivalent to letting
+decisions plans/layout.py::recover_stale_sibling and swap_in's stale-tmp
+clear make, so running the doctor is equivalent to letting
 the next maintenance call recover, just without waiting for one. Purge
 markers are never cleared here: only a completed purge may clear its
 marker (plans/layout.py::clear_purge_intent), and the ingest sinks
