@@ -143,20 +143,27 @@ def dblp_pair_counts(pubs: DataFrame, researchers: DataFrame | None = None) -> D
 
 
 def collab_totals(pubs: DataFrame, pid: str, year: int | None = None) -> DataFrame:
-    """Proxy Q3/Q4 (docx, corrected literals per SURVEY §3.3): total
-    collaborations of ``pid`` with each partner; both pair orientations
-    normalized. The bridge is pruned to papers containing ``pid`` BEFORE
-    the quadratic pair expansion (scale-safe, same plan as the star-
-    schema twin)."""
-    bridge = author_bridge(pubs).filter(F.col("pid").isNotNull()).select("paper_key", "pid")
-    groups = bridge.filter(F.col("pid") == pid).select("paper_key")
-    years = pubs.select("paper_key", "year")
-    pc = pair_counts(bridge, "paper_key", "pid", group_attrs=years, groups=groups)
+    """Proxy Q3/Q4 (docx, corrected literals per SURVEY §3.3): for each
+    partner, the number of papers (in ``year``, when given) on which
+    both ``pid`` and the partner appear as author or editor. Exact pid
+    match; a pid listed twice on a paper counts once, null pids are no
+    partners. ``pubs`` holds one row per paper. Returns ``(partner,
+    total: bigint)``, empty when ``pid`` has no co-authors.
+
+    One scan of ``pubs``: keep the papers containing ``pid``, explode
+    their distinct non-null partner pids, count per partner. Equals
+    ``dblp_pair_counts`` summed over both orientations of ``pid``'s
+    pairs, without building the pair table."""
+    hit = F.exists("authors", lambda a: a["pid"] == pid)
     if year is not None:
-        pc = pc.filter(F.col("year") == year)
-    left = pc.filter(F.col("member1") == pid).select(F.col("member2").alias("partner"), "cnt")
-    right = pc.filter(F.col("member2") == pid).select(F.col("member1").alias("partner"), "cnt")
-    return left.unionByName(right).groupBy("partner").agg(F.sum("cnt").alias("total"))
+        hit = hit & (F.col("year") == year)
+    partners = F.array_remove(F.array_distinct(F.array_compact(F.col("authors.pid"))), pid)
+    return (
+        pubs.filter(hit)
+        .select(F.explode(partners).alias("partner"))
+        .groupBy("partner")
+        .agg(F.count(F.lit(1)).alias("total"))
+    )
 
 
 def pair_lookup(pair_counts_df: DataFrame, year: int, author1: str, author2: str) -> DataFrame:

@@ -29,11 +29,6 @@ def first_token_category(col: Column | str, sep: str = " ") -> Column:
     return seg.substr(F.lit(1), F.length(seg) - 1)
 
 
-def to_date_ymd(col: Column | str) -> Column:
-    """F2 — `main_dag.py:215-218` ``strptime(mdate, '%Y-%m-%d').date()``."""
-    return F.to_date(col, "yyyy-MM-dd") if isinstance(col, str) else F.to_date(col)
-
-
 def run_timestamp(col: Column | str) -> Column:
     """F3 — `main_dag.py:40-41` watermark format ``Y/M/D`` with NO zero
     padding (e.g. ``2023/4/7``)."""
@@ -95,14 +90,6 @@ def zip_author_maps(names: Column, orcids: Column, pids: Column) -> Column:
             ),
         )
     )
-
-
-def nth_map_value(m: Column | str, n: int) -> Column:
-    """P9 — positional-element predicate support: the n-th (1-based)
-    author from an ordinal-keyed map (docx §Proxy Q1: ``x[2] == pid`` on
-    the values list ≡ map[3] when keys are 1-based ordinals)."""
-    m = F.col(m) if isinstance(m, str) else m
-    return F.element_at(m, F.lit(n))
 
 
 def normalized_fingerprint(text: Column | str) -> Column:

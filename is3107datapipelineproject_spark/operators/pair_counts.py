@@ -1,35 +1,25 @@
-"""Co-occurrence pair-count — the engine's flagship operator (SURVEY §2.4 A4).
+"""Co-occurrence pair counts — the engine's flagship operator (SURVEY §2.4 A4).
 
-The reference builds a co-authorship pair-count fact with a driver-side
-nested loop: for each of C(400,2)=79,800 candidate author pairs it rescans
-the whole publication table with a substring-containment test and
-group-counts by year (`/root/reference/main_dag.py:265-290`; 12 min 57 s per
-the report). That is O(pairs × rows) with false-positive substring
-semantics (`main_dag.py:280-281`).
+``pair_counts`` turns a bridge of (group, member) rows — authors on a
+paper, suppliers on an order — into one row per unordered member pair
+and group attribute with the number of groups the pair shares:
 
-The Spark-first restatement is a *bridge self-join*:
+    counts(attrs…, member1, member2) = |{g : member1, member2 ∈ g}|,
+    member1 < member2, members compared exactly, nulls ignored
 
-    bridge(group_key, member)          -- one row per (entity, member), distinct
-    pairs = bridge a JOIN bridge b
-            ON a.group_key = b.group_key AND a.member < b.member
-    counts = pairs [JOIN group_attrs] GROUP BY (attrs…, m1, m2) COUNT
+This replaces the reference's driver-side loop, which rescanned the
+publication table once per candidate author pair with a substring test
+(O(pairs × rows), and prefix pids matched falsely).
 
-One shuffle on ``group_key`` co-locates both join sides; because both
-sides are the *same* subplan, Spark reuses the exchange (ReusedExchange)
-instead of scanning twice — this is why group attributes (e.g. year) are
-attached *after* pairing, not before. The ``<`` predicate emits each
-unordered pair once (exact-match semantics, fixing the reference's
-substring bug), and the group-count partial-aggregates map-side before
-its shuffle.
+Cost: one shuffle on the group key, then a narrow generator emits the
+C(n, 2) pairs of each group, then one shuffle on the pair. The shuffle
+volume is bounded by the bridge size; only the generator is quadratic in
+group size, so pathological groups are capped with ``max_group_size``.
+A member restriction is applied before the first shuffle.
 
-Scale notes (100 TB): the join key is the *group* (paper / order), so the
-shuffle is bounded by bridge-table size, not by the C(n,2) pair space.
-Per-group blow-up is quadratic in group size — for web-scale data cap or
-salt pathological groups (a paper with 10k "authors") with
-``max_group_size``; AQE skew-join splitting handles moderate skew. The
-dimension restriction (members limited to a seed list, SURVEY J3/J5) is
-applied *before* the self-join so it prunes the shuffle, and broadcast
-because the seed dimension is tiny.
+Queries about one member's partners (Proxy Q3/Q4) do not need the pair
+table: they count the member's groups per partner in one pass
+(``domain.publications.collab_totals``).
 """
 
 from __future__ import annotations
@@ -44,33 +34,28 @@ def pair_counts(
     member_col: str,
     group_attrs: DataFrame | None = None,
     members: DataFrame | None = None,
-    groups: DataFrame | None = None,
     max_group_size: int | None = None,
 ) -> DataFrame:
-    """Count co-occurrences of unordered ``member`` pairs per group.
+    """Count the groups shared by each unordered ``member`` pair.
 
     Parameters
     ----------
-    bridge: one row per (group, member); duplicates are removed.
+    bridge: (group, member) rows; duplicates and null members are ignored.
     group_attrs: optional dimension keyed by ``group_col`` whose remaining
-        columns become extra grouping keys (e.g. publication year) —
-        joined at GROUP cardinality (before the pair explosion), never at
-        pair cardinality; never force-broadcast (it scales with the fact).
+        columns become extra grouping keys (e.g. publication year); groups
+        absent from it contribute no pair. Inner-joined at group
+        cardinality, before the pair expansion, and never force-broadcast
+        (it scales with the fact).
     members: optional tiny dimension (single column named like
         ``member_col``) restricting which members participate — broadcast
         semi-join applied *before* the pair expansion (SURVEY J3+J5).
-    groups: optional restriction to a subset of groups (single column
-        named like ``group_col``) — semi-joined *before* the quadratic
-        pair expansion. This is how "collaborations of member X" queries
-        stay scale-safe: pass the (tiny) set of groups containing X and
-        ~everything is pruned before the shuffle.
     max_group_size: optional guard dropping pathologically large groups
         before the quadratic expansion (a 10k-author "paper" would emit
         50M pairs; cap or salt such groups).
 
     Returns ``(cnt, attrs…, member1, member2)`` with ``member1 < member2``.
 
-    Plan shape (2 shuffles total, vs 3+ for the naive distinct+self-join):
+    Plan shape (2 shuffles):
 
     1. groupBy(group) → sorted distinct member array   [shuffle on group]
     2. join group_attrs at group cardinality           [AQE-chosen strategy]
@@ -82,9 +67,6 @@ def pair_counts(
 
     if members is not None:
         b = b.join(F.broadcast(members.select(member_col).distinct()), member_col, "left_semi")
-
-    if groups is not None:
-        b = b.join(groups.select(group_col).distinct(), group_col, "left_semi")
 
     # One shuffle: distinct members per group, sorted so that combinations
     # emit each unordered pair exactly once with member1 < member2.
@@ -103,15 +85,7 @@ def pair_counts(
 
     # Narrow quadratic generator: posexplode each sorted member array,
     # then explode the suffix slice after each position — C(n,2) pairs
-    # per group from two codegen Generate operators. (r12, guide §1.2
-    # step 2: the previous single-explode shape built the pair list with
-    # nested interpreted ``transform`` lambdas and a fresh ``slice``
-    # allocation per outer element; two explodes keep the whole
-    # generator in whole-stage codegen — JVM-CPU A/B at sf0.1 on the
-    # lineitem bridge: 3.84 → 2.38 s CPU / 1.37 → 1.00 s wall for the
-    # full pair+count pipeline, output multiset identical. Both exploded
-    # siblings (``_ms``, ``member1``) are plain attributes, so the
-    # explode-sibling re-evaluation lint shape never arises.)
+    # per group from two codegen Generate operators.
     step1 = grouped.select(
         *attr_cols, "_ms", F.posexplode("_ms").alias("_i", "member1")
     )
@@ -129,29 +103,18 @@ def pair_counts(
     return pairs.groupBy(*attr_cols, "member1", "member2").agg(F.count(F.lit(1)).alias("cnt"))
 
 
-def supplier_pair_counts(
-    lineitem: DataFrame, orders: DataFrame, with_member: int | None = None
-) -> DataFrame:
+def supplier_pair_counts(lineitem: DataFrame, orders: DataFrame) -> DataFrame:
     """The testdata instantiation of the DBLP co-authorship fact:
     suppliers co-occurring on an order ≈ authors co-occurring on a paper
-    (FIXTURES.md §A mapping), yearly by order date.
-
-    Shape: distinct (order, supplier) bridge → self-join (exchange reused
-    across both sides) → year lookup → group-count.
-
-    ``with_member`` prunes the bridge to groups containing that member
-    *before* the quadratic self-join (the scale-safe plan for Proxy
-    Q3/Q4 "collaborations of X" — docx §Proxy Queries).
-    """
+    (FIXTURES.md §A mapping), yearly by order date. Returns ``(cnt,
+    year, author1, author2)`` with ``author1 < author2``; orders absent
+    from ``orders`` contribute no pair."""
     bridge = lineitem.select("l_orderkey", "l_suppkey")
     years = orders.select(
         F.col("o_orderkey").alias("l_orderkey"),
         F.year("o_orderdate").cast("int").alias("year"),
     )
-    groups = None
-    if with_member is not None:
-        groups = bridge.filter(F.col("l_suppkey") == with_member).select("l_orderkey")
-    out = pair_counts(bridge, "l_orderkey", "l_suppkey", group_attrs=years, groups=groups)
+    out = pair_counts(bridge, "l_orderkey", "l_suppkey", group_attrs=years)
     return out.select(
         F.col("cnt"),
         F.col("year"),

@@ -166,10 +166,9 @@ GROUP BY 1
     tags=("domain", "pairs"),
 )
 def q_dblp_collab_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Proxy Q3/Q4 (docx, corrected literals) on the nested schema:
-    total collaborations of one author with each partner, through the
-    exploded bridge + group-pruned pair_counts plan
-    (domain.publications.collab_totals)."""
+    """Proxy Q3/Q4 (docx, corrected literals) on the nested schema: for
+    each partner of author ``1``, the number of papers they share
+    (domain.publications.collab_totals over the synthetic publications)."""
     from is3107datapipelineproject_spark.domain.publications import collab_totals
 
     pubs = _synth_pubs(spark, sf_dir)

@@ -119,6 +119,10 @@ _EVIDENCE_PRIORITY: tuple[str, ...] = (
     # (ivf_probe_sweep, approx_percentile_tdigest, the curation /
     # llm-selection checkpoint consumers). The age rotation (r7 cohort)
     # resumes round 14. ---
+    # (0) the Q3/Q4 collaboration totals, rewritten as one-pass counts
+    "dblp_collab_totals",
+    "q3_collab_totals",
+    "q4_collab_year",
     # (1) round-13 touched paths + their curation/llm checkpoint consumers
     "incremental_neardup_clusters",
     "ivf_probe_sweep",
@@ -168,13 +172,11 @@ _EVIDENCE_PRIORITY: tuple[str, ...] = (
     "simhash_neardup",
     "embedding_neardup_lsh",
     "graph_degree_stats",
-    # (5) r12 lazy-checkpoint consumers not re-sampled
+    # (5) r12 lazy-checkpoint consumers not re-sampled (semantic_dedup,
+    # incremental_semantic_neardup, embedding_abtt and embedding_top_pc
+    # fell past the 50-slot window and head the next one)
     "kmeans_assign",
     "kmeans_assign_hier",
-    "semantic_dedup",
-    "incremental_semantic_neardup",
-    "embedding_abtt",
-    "embedding_top_pc",
 )
 
 

@@ -749,17 +749,27 @@ def q_f_null_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 def _collab_totals(spark: SparkSession, sf_dir: str, member: int, year: int | None) -> DataFrame:
-    # with_member prunes the bridge to groups containing the member BEFORE
-    # the quadratic self-join (scale-safe: the pair expansion never runs
-    # over groups that can't produce a qualifying pair).
-    pc = supplier_pair_counts(
-        _t(spark, sf_dir, "lineitem"), _t(spark, sf_dir, "orders"), with_member=member
-    )
+    """For each partner supplier, the number of distinct orders that
+    carry both ``member`` and the partner on a line item; with ``year``,
+    only orders in ``orders`` dated that year. Over referentially intact
+    tables this is the ``pair_counts`` fact summed over both orientations
+    of ``member``'s pairs. Returns ``(partner, total: bigint)``.
+
+    One pass, no pair table: the member's orders semi-join ``lineitem``,
+    the member's own rows are dropped, and distinct (order, supplier)
+    rows are counted per supplier."""
+    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
+    mine = li.filter(F.col("l_suppkey") == member).select("l_orderkey")
     if year is not None:
-        pc = pc.filter(F.col("year") == year)
-    left = pc.filter(F.col("author1") == member).select(F.col("author2").alias("partner"), "cnt")
-    right = pc.filter(F.col("author2") == member).select(F.col("author1").alias("partner"), "cnt")
-    return R.union_all(left, right).groupBy("partner").agg(F.sum("cnt").alias("total"))
+        orders = _t(spark, sf_dir, "orders").filter(F.year("o_orderdate") == year)
+        mine = mine.join(orders.select(F.col("o_orderkey").alias("l_orderkey")), "l_orderkey", "left_semi")
+    return (
+        li.filter(F.col("l_suppkey") != member)
+        .join(mine, "l_orderkey", "left_semi")
+        .distinct()
+        .groupBy(F.col("l_suppkey").alias("partner"))
+        .agg(F.count(F.lit(1)).alias("total"))
+    )
 
 
 def _collab_oracle(member: int, year: int | None) -> str:
@@ -777,8 +787,8 @@ SELECT partner, CAST(sum(cnt) AS BIGINT) AS total FROM both_sides GROUP BY 1
 
 @register("q3_collab_totals", oracle=_collab_oracle(68, None), tags=("workload",))
 def q3_collab_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Proxy Q3 (docx): total collaborations of member 68 with each
-    partner — both pair orientations normalized then group-summed."""
+    """Proxy Q3 (docx): for each partner of member 68, the number of
+    orders they share."""
     return _collab_totals(spark, sf_dir, 68, None)
 
 

@@ -9,6 +9,8 @@ containment (F14)."""
 
 from __future__ import annotations
 
+from collections import Counter
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -162,6 +164,80 @@ def test_pair_counts_and_collabs(pubs):
     assert len(lookup) == 1 and lookup[0]["count"] == 1
     swapped = P.pair_lookup(pc, 2020, "2/999", "1/234").collect()
     assert len(swapped) == 1 and swapped[0]["count"] == 1
+
+
+def _oracle_collab_totals(rows, pid, year=None):
+    """Plain-Python Q3/Q4: per partner, the papers shared with ``pid``."""
+    out = Counter()
+    for authors, paper_year in rows:
+        pids = {p for p in authors if p is not None}
+        if pid in pids and (year is None or paper_year == year):
+            out.update(pids - {pid})
+    return dict(out)
+
+
+def test_collab_totals_edge_cases(spark):
+    author = "struct<pos:int,name:string,orcid:string,pid:string>"
+    papers = [
+        # pid both author and editor on one paper: counted once
+        ("p1", 2020, ["1/23", "1/23", "5/5"]),
+        # null-pid co-author: never a partner
+        ("p2", 2020, ["1/23", None, "1/234"]),
+        # null year: in Q3 totals, never in a Q4 year
+        ("p3", None, ["1/23", "7/7"]),
+        # prefix pid 1/234 without 1/23
+        ("p4", 2019, ["1/234", "5/5"]),
+        # a pid with no co-authors
+        ("p5", 2021, ["9/9"]),
+    ]
+    frame = spark.createDataFrame(
+        [(k, y, [(i + 1, None, None, p) for i, p in enumerate(ps)]) for k, y, ps in papers],
+        f"paper_key string, year int, authors array<{author}>",
+    )
+    rows = [(ps, y) for _, y, ps in papers]
+    for pid in ["1/23", "1/234", "5/5", "7/7", "9/9", "0/0"]:
+        for year in [None, 2019, 2020, 2021]:
+            got = P.collab_totals(frame, pid, year)
+            totals = {r.partner: r.total for r in got.collect()}
+            assert totals == _oracle_collab_totals(rows, pid, year), (pid, year)
+    assert dict(got.dtypes) == {"partner": "string", "total": "bigint"}
+    assert {r.partner: r.total for r in P.collab_totals(frame, "1/23").collect()} == {
+        "5/5": 1, "1/234": 1, "7/7": 1
+    }
+    assert P.collab_totals(frame, "0/0").collect() == []
+    assert P.collab_totals(frame, "9/9").collect() == []
+
+
+def test_collab_totals_equals_pair_counts_both_orientations(pubs):
+    pairs = P.dblp_pair_counts(pubs).collect()
+    for pid in ["1/234", "11/2345", "2/999"]:
+        for year in [None, 2020]:
+            want = Counter()
+            for r in pairs:
+                if year is None or r.year == year:
+                    if r.author1 == pid:
+                        want[r.author2] += r["count"]
+                    elif r.author2 == pid:
+                        want[r.author1] += r["count"]
+            got = {r.partner: r.total for r in P.collab_totals(pubs, pid, year).collect()}
+            assert got == dict(want) and got, (pid, year)
+
+
+def test_collab_totals_runs_at_most_two_jobs(spark, pubs, tmp_path):
+    """One scan and one partner aggregate: at most a shuffle-map job and a
+    result job per call, on a stored table as the lookups read it."""
+    pubs.write.parquet(f"{tmp_path}/pubs")
+    stored = spark.read.parquet(f"{tmp_path}/pubs")
+    sc = spark.sparkContext
+    group = "collab_totals_job_pin"
+    sc.setJobGroup(group, group)
+    try:
+        P.collab_totals(stored, "11/2345").collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 1 <= len(jobs) <= 2, jobs
 
 
 def test_incremental_epochs(spark, pubs):

@@ -33,9 +33,8 @@ def test_evidence_priority_names_resolve_and_fit_the_window():
     unknown = [n for n in names if n not in qs]
     assert unknown == [], f"priority names not in registry: {unknown}"
     assert len(names) == len(set(names)), "duplicate names in the rotation list"
-    # the window may run a few past 50 (the driver truncates) but a long
-    # tail would mean whole cohorts silently skip their re-verification
-    assert len(names) <= 55, "rotation list runs too far past the 50-slot window"
+    # exactly the 50-slot window: a longer list silently defers its tail
+    assert len(names) == 50, "rotation list must fill the 50-slot window exactly"
 
 
 def test_oracles_reference_registered_queries_only():
