@@ -36,7 +36,7 @@ materializing all intra-cluster pairs.
 from __future__ import annotations
 
 from functools import reduce
-from operator import add
+from operator import add, and_
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -65,6 +65,10 @@ LSH_BANDS = 4
 LSH_ROWS = 4  # MINHASH_K // LSH_BANDS
 
 SIMHASH_BITS = 60  # fits signed int64; 4 bands × 15 bits
+SIMHASH_BANDS = 4
+
+# metadata key on a signature frame's ``shingles`` column: the k it was built with
+SHINGLE_K_KEY = "shingle_k"
 
 
 def _max_partition_bytes(spark) -> int:
@@ -172,19 +176,15 @@ def word_shingles(col: Column | str, k: int = 3) -> Column:
     Documents shorter than k tokens yield one truncated shingle (the
     whole text) so nothing silently disappears.
 
-    Shape (r12, guide §1.2 step 2): ``zip_with`` over k SHIFTED SLICES
-    of the token array — the same shifted-view trick text.py's bigram
-    operators use — instead of the previous
-    ``transform(sequence(1,n), i -> concat_ws(slice(toks, i, k)))``,
-    whose per-element ``slice`` allocated a fresh array per shingle
-    inside an interpreted higher-order function. Measured (JVM-CPU A/B,
-    sf0.1 documents, interleaved): 5.7 → 1.45 s CPU / 0.44 → 0.25 s
-    wall for the shingle projection; every downstream consumer
-    (minhash/LSH family, prefix_jaccard, containment, contamination)
-    inherits the cut. Value-identical in every input class, including
-    the truncation cases: ``zip_with`` pads the shorter shifted slices
-    with NULL and ``concat_ws`` skips NULLs, reproducing the truncated
-    shingle; NULL text keeps the old ``[""]`` via the explicit guard
+    Shape: ``zip_with`` over k SHIFTED SLICES of the token array — the
+    same shifted-view trick text.py's bigram operators use — so no
+    per-shingle ``slice`` array is allocated inside an interpreted
+    higher-order function (measured on sf0.1 documents: 1.45 s JVM CPU
+    for the shingle projection, against 5.7 s for the
+    ``transform(sequence(1,n), i -> concat_ws(slice(toks, i, k)))``
+    shape). In the truncation cases ``zip_with`` pads the shorter
+    shifted slices with NULL and ``concat_ws`` skips NULLs, giving the
+    truncated shingle; NULL text yields ``[""]`` via the explicit guard
     (edge cases pinned by tests/test_llm_operators.py)."""
     toks = ws_tokens(col)
     n = F.greatest(F.size(toks) - F.lit(k - 1), F.lit(1))
@@ -237,15 +237,37 @@ def minhash_doc_signatures(
     MinHash tiers over the SAME documents (one-shot pairs + incremental
     new×old + batch-local pairs in incremental_neardup_clusters; full
     pairs + affected-cluster re-derivation in the retraction path)
-    should compute this ONCE, localCheckpoint it, and pass filtered
-    views via the tiers' ``sig_frame`` parameters (r13, guide §1.2 step
-    1: the signature stage was each such query's largest repeated
-    term). Values are a pure row-wise function of the text, so a
-    filtered view of a shared frame is bit-identical to computing the
-    stage on the filtered input."""
+    compute this ONCE, localCheckpoint it, and pass filtered views via
+    the tiers' ``sig_frame`` parameters. Values are a pure row-wise
+    function of the text, so a filtered view of a shared frame is
+    bit-identical to computing the stage on the filtered input.
+
+    The shingle length ``k`` rides as metadata on the ``shingles``
+    column (key :data:`SHINGLE_K_KEY`), so a tier handed the frame can
+    reject one built with a different ``k`` without adding a column."""
     return spread_small_input(df).select(
-        F.col(id_col).alias("doc_id"), shingle_hash_set(text_col, k).alias("shingles")
+        F.col(id_col).alias("doc_id"),
+        shingle_hash_set(text_col, k).alias("shingles", metadata={SHINGLE_K_KEY: k}),
     ).select("doc_id", "shingles", *minhash_signature_cols("shingles"))
+
+
+def _check_sig_frame(sig_frame: DataFrame, k: int) -> None:
+    """The one entry check of a precomputed signature frame: it must be
+    a :func:`minhash_doc_signatures` frame (``doc_id``, ``shingles``,
+    ``mh0..mh{K-1}``) built with the caller's ``k`` — a frame of other
+    shingles would bucket and verify the wrong sets without error."""
+    need = ["doc_id", "shingles", *[f"mh{j}" for j in range(MINHASH_K)]]
+    missing = [c for c in need if c not in sig_frame.columns]
+    if missing:
+        raise ValueError(
+            f"sig_frame lacks columns {missing} — pass a minhash_doc_signatures frame"
+        )
+    built = sig_frame.schema["shingles"].metadata.get(SHINGLE_K_KEY)
+    if built != k:
+        raise ValueError(
+            f"sig_frame was built with k={built}, but this call uses k={k} — "
+            "build it with minhash_doc_signatures(..., k=k)"
+        )
 
 
 def minhash_neardup_pairs(
@@ -257,170 +279,175 @@ def minhash_neardup_pairs(
     max_bucket: int = 1024,
     sig_frame: DataFrame | None = None,
 ) -> DataFrame:
-    """MinHash-LSH near-duplicate detection, end to end:
+    """MinHash-LSH near-duplicate detection, end to end: the band table
+    of :func:`band_signature_frame` (with the packed ``sig``) fed to
+    :func:`pairs_from_band_table`.
 
-    1. narrow (evaluated ONCE): shingle-hash set + K minhashes + band
-       keys per doc;
-    2. shuffle: explode the 4 band keys and groupBy(band), carrying
-       (doc_id, shingle set) into each bucket;
-    3. bucket-local: combination generator over the (small, sorted)
-       bucket emits candidate pairs WITH their exact Jaccard — no join
-       back to the corpus, so the expensive tokenize/hash stage never
-       recomputes;
-    4. distinct across bands (a pair sharing m bands appears m times),
-       filter ≥ threshold.
+    1. narrow: shingle-hash set + K minhashes + band keys per doc;
+    2. shuffle: the 4 band keys grouped by band, carrying (doc_id,
+       shingle set, sig) into each sorted bucket;
+    3. bucket-local: a combination generator emits candidate pairs WITH
+       their exact Jaccard — no join back to the corpus, so the
+       expensive tokenize/hash stage never recomputes;
+    4. filter ≥ threshold, distinct across bands.
 
     Returns ``(doc1, doc2, jaccard)`` with doc1 < doc2, jaccard rounded
     to 4 decimals (cross-engine fp determinism).
 
-    Scale: one shuffle whose payload is 4× (doc_id + shingle hashes +
-    the 16-long signature) — trading shuffle bytes for not re-running
-    the CPU-bound text normalization (the measured bottleneck).
-
     Hot-band handling (a boilerplate-heavy crawl produces bands whose
     quadratic expansion must be bounded): buckets larger than
-    ``max_bucket`` are NOT dropped — they go through a second, finer
-    banding pass: 6 sub-bands × 2 rows drawn from the 12 minhashes
-    OUTSIDE the hot band (the 4 inside it are constant across the
-    bucket and cannot subdivide it). A 2-row band collides with
-    probability s² vs the first pass's s⁴, so recall for true near-dups
-    inside the bucket strictly improves while chance collisions split.
-    Sub-buckets still larger than ``max_bucket`` after that are near-
-    identical boilerplate clusters; they degrade to a STAR (every member
+    ``max_bucket`` go through a second, finer banding pass — 6
+    sub-bands × 2 rows drawn from the 12 minhashes OUTSIDE the hot band
+    (the 4 inside it are constant across the bucket). A 2-row band
+    collides with probability s² vs the first pass's s⁴, so recall for
+    true near-dups inside the bucket strictly improves while chance
+    collisions split. Sub-buckets still larger than ``max_bucket`` are
+    near-identical boilerplate; they degrade to a STAR (every member
     paired with the min-id member): O(n) pairs that keep the cluster
-    connected for neardup_clusters/dedup_corpus instead of O(n²) pair
-    enumeration — the documented bounded-work fallback, never a silent
-    recall cliff.
+    connected for neardup_clusters/dedup_corpus — bounded work, never a
+    silent recall cliff.
 
     ``sig_frame``: a precomputed :func:`minhash_doc_signatures` frame
-    for EXACTLY the rows of ``df`` (same text/k) — chained multi-tier
-    queries pass filtered views of one shared frame so the signature
-    stage runs once; bucketing below is unchanged either way.
+    for EXACTLY the rows of ``df``, built with the same ``k`` (checked)
+    — chained multi-tier queries pass filtered views of one shared
+    frame so the signature stage runs once.
     """
-    sigs = (
-        sig_frame
-        if sig_frame is not None
-        else minhash_doc_signatures(df, text_col, id_col, k)
+    return pairs_from_band_table(
+        band_signature_frame(df, text_col, id_col, k, with_sig=True, sig_frame=sig_frame),
+        threshold=threshold,
+        max_bucket=max_bucket,
     )
-    banded = sigs.select(
-        "doc_id",
-        "shingles",
-        F.array(*[F.col(f"mh{j}") for j in range(MINHASH_K)]).alias("sig"),
-        F.explode(F.array(*lsh_band_keys())).alias("band"),
+
+
+def _jaccard(x: Column, y: Column) -> Column:
+    """Exact set Jaccard of two distinct-element arrays, rounded to 4
+    decimals — the verify expression of every Jaccard tier."""
+    inter = F.size(F.array_intersect(x, y)).cast("double")
+    union = (F.size(x) + F.size(y)).cast("double") - inter
+    return F.round(inter / union, 4)
+
+
+def _jaccard_pair(x: Column, y: Column) -> Column:
+    """MinHash bucket items ``(doc_id, shingles, …)`` → ``(doc1, doc2,
+    jaccard)`` on the carried shingle sets."""
+    return F.struct(
+        x["doc_id"].alias("doc1"),
+        y["doc_id"].alias("doc2"),
+        _jaccard(x["shingles"], y["shingles"]).alias("jaccard"),
     )
-    # The bucketed frame feeds BOTH the normal pair path and the hot-
-    # bucket second pass. Materialize it once (localCheckpoint): Spark's
-    # exchange reuse does not dedupe the union branches here, so without
-    # this the CPU-bound tokenize/signature stage re-executes per branch
-    # (measured 3× on fresh plans). Storage is the same order as the
-    # band shuffle that just ran; blocks free when the plan is GC'd.
-    buckets = (
-        banded.groupBy("band")
-        .agg(F.array_sort(F.collect_list(F.struct("doc_id", "shingles", "sig"))).alias("items"))
+
+
+def _hamming_pair(x: Column, y: Column) -> Column:
+    """SimHash bucket items ``(doc_id, sh)`` → ``(doc1, doc2, hamming)``."""
+    return F.struct(
+        x["doc_id"].alias("doc1"),
+        y["doc_id"].alias("doc2"),
+        F.bit_count(x["sh"].bitwiseXOR(y["sh"])).alias("hamming"),
+    )
+
+
+def _banded_pairs(
+    banded: DataFrame,
+    pair,
+    keep: Column,
+    max_bucket: int,
+    sep: str,
+    subbands=None,
+) -> DataFrame:
+    """The one banded-bucket body of the MinHash and SimHash tiers.
+
+    ``banded`` holds one row per (item, band key): ``(*fields, band)``,
+    the band key leading with the band index and ``sep``. ``pair(x, y)``
+    maps two bucket items to the ``(doc1, doc2, metric)`` struct and
+    ``keep`` is the metric's threshold predicate. Buckets of at most
+    ``max_bucket`` items emit all pairs. Hotter buckets are re-banded by
+    ``subbands(hot_rows)`` — the family's finer key over the bits
+    outside the hot band; ``hot_rows`` = ``(band0, b0, *fields)`` with
+    ``b0`` the hot band's index, result = ``(*sub_fields, band)`` — and
+    sub-buckets still over ``max_bucket`` emit the min-id star. With
+    ``subbands=None`` hot buckets go straight to the star.
+
+    The bucket frames are materialized (eager localCheckpoint): each
+    feeds the hot-bucket probe and up to two pair generators, and
+    exchange reuse does not dedupe union branches, so the CPU-bound
+    signature stage would otherwise re-run per branch. The probe is one
+    cheap job on the materialized buckets; with no hot bucket (the
+    common case) the second-pass chains are never planned."""
+    buckets = _band_buckets(banded)
+    small = buckets.filter(F.size("items") <= max_bucket)
+    hot = buckets.filter(F.size("items") > max_bucket)
+    if hot.limit(1).count() == 0:
+        return _bucket_pairs(small, pair).filter(keep).distinct()
+    if subbands is None:
+        pairs = _bucket_pairs(small, pair).unionByName(_bucket_pairs(hot, pair, star=True))
+        return pairs.filter(keep).distinct()
+    fields = [c for c in banded.columns if c != "band"]
+    hot_rows = hot.select(
+        F.col("band").alias("band0"),
+        F.element_at(F.split("band", sep), 1).cast("int").alias("b0"),
+        F.explode("items").alias("it"),
+    ).select("band0", "b0", *[F.col(f"it.{c}").alias(c) for c in fields])
+    sub = _band_buckets(subbands(hot_rows))
+    pairs = (
+        _bucket_pairs(small, pair)
+        .unionByName(_bucket_pairs(sub.filter(F.size("items") <= max_bucket), pair))
+        .unionByName(_bucket_pairs(sub.filter(F.size("items") > max_bucket), pair, star=True))
+    )
+    return pairs.filter(keep).distinct()
+
+
+def _band_buckets(rows: DataFrame) -> DataFrame:
+    """``(*fields, band)`` → ``(band, items)``: each band's members as a
+    sorted array of ``struct(*fields)`` (so ``items[1]`` is the min id),
+    singleton buckets dropped, materialized eagerly."""
+    fields = [c for c in rows.columns if c != "band"]
+    return (
+        rows.groupBy("band")
+        .agg(F.array_sort(F.collect_list(F.struct(*fields))).alias("items"))
         .filter(F.size("items") > 1)
         .localCheckpoint(eager=True)
     )
 
-    small = buckets.filter(F.size("items") <= max_bucket)
-    hot = buckets.filter(F.size("items") > max_bucket)
 
-    # Cheap existence probe on the materialized buckets: the common case
-    # (no hot bands) skips planning the two extra shuffle chains.
-    if hot.limit(1).count() == 0:
-        return _bucket_all_pairs(small).filter(F.col("jaccard") >= threshold).distinct()
-
-    sub_buckets = _hot_subband_buckets(hot)
-    pairs = (
-        _bucket_all_pairs(small)
-        .unionByName(_bucket_all_pairs(sub_buckets.filter(F.size("items") <= max_bucket)))
-        .unionByName(_bucket_star_pairs(sub_buckets.filter(F.size("items") > max_bucket)))
-    )
-    return pairs.filter(F.col("jaccard") >= threshold).distinct()
-
-
-def _bucket_pair_with_jaccard(x, y):
-    """(item, item) → (doc1, doc2, jaccard) struct — the shared verify
-    expression of every bucket-local pair generator (items carry the
-    exact shingle sets, so no join back to the corpus)."""
-    inter = F.size(F.array_intersect(x["shingles"], y["shingles"])).cast("double")
-    union = (F.size(x["shingles"]) + F.size(y["shingles"])).cast("double") - inter
-    return F.struct(
-        x["doc_id"].alias("doc1"),
-        y["doc_id"].alias("doc2"),
-        F.round(inter / union, 4).alias("jaccard"),
-    )
+def _bucket_pairs(bucketed: DataFrame, pair, star: bool = False) -> DataFrame:
+    """Pair generator over a bucketed frame's sorted ``items``: the C(n,2)
+    combinations (``posexplode(items)`` then ``explode(slice(items,
+    i+2, …))``), or with ``star=True`` every member paired with the
+    min-id member — O(n) pairs that keep the bucket connected. Both are
+    codegen ``Generate`` operators with ``pair`` as a projection above
+    them, so the quadratic stays confined to the bucket and the verify
+    runs in whole-stage codegen."""
+    if star:
+        xy = bucketed.select(
+            F.element_at("items", 1).alias("_x"),
+            F.explode(F.slice("items", 2, F.size("items") - 1)).alias("_y"),
+        )
+    else:
+        xy = bucketed.select("items", F.posexplode("items").alias("_i", "_x")).select(
+            "_x",
+            F.explode(
+                F.slice(
+                    "items",
+                    F.col("_i") + 2,
+                    F.greatest(F.size("items") - F.col("_i") - 1, F.lit(0)),
+                )
+            ).alias("_y"),
+        )
+    return xy.select(pair(F.col("_x"), F.col("_y")).alias("p")).select("p.*")
 
 
-def _bucket_all_pairs(bucketed: DataFrame) -> DataFrame:
-    """C(n,2) combination generator over a bucketed frame's sorted
-    ``items`` (narrow; quadratic confined to the bucket). Two codegen
-    ``Generate`` operators — ``posexplode(items)`` then
-    ``explode(slice(items, i+2, …))`` — with the exact-Jaccard verify
-    as a projection above them (r12, guide §1.2 step 2: the previous
-    nested interpreted ``transform`` lambdas evaluated
-    ``array_intersect`` inside an uncompiled HOF; the explode shape
-    keeps generator and verify in whole-stage codegen — same rewrite
-    and A/B evidence as operators/pair_counts.py). The verify
-    expression references the second generator's output, so the
-    explode-sibling re-evaluation lint shape never arises."""
-    step1 = bucketed.select("items", F.posexplode("items").alias("_i", "_x"))
-    pairs = step1.select(
-        "_x",
-        F.explode(
-            F.slice(
-                "items",
-                F.col("_i") + 2,
-                F.greatest(F.size("items") - F.col("_i") - 1, F.lit(0)),
-            )
-        ).alias("_y"),
-    )
-    return pairs.select(
-        _bucket_pair_with_jaccard(F.col("_x"), F.col("_y")).alias("p")
-    ).select("p.doc1", "p.doc2", "p.jaccard")
-
-
-def _bucket_star_pairs(bucketed: DataFrame) -> DataFrame:
-    """Residual-hot-bucket fallback: every member pairs with the min-id
-    member — O(n) connectivity-preserving pairs, never O(n²). Same
-    codegen explode shape as :func:`_bucket_all_pairs`."""
-    pairs = bucketed.select(
-        F.element_at("items", 1).alias("_x"),
-        F.explode(F.slice("items", 2, F.size("items") - 1)).alias("_y"),
-    )
-    return pairs.select(
-        _bucket_pair_with_jaccard(F.col("_x"), F.col("_y")).alias("p")
-    ).select("p.doc1", "p.doc2", "p.jaccard")
-
-
-def _hot_subband_buckets(hot: DataFrame, guard_null_sig: bool = False) -> DataFrame:
-    """Second, finer banding pass over hot buckets: 6 sub-bands × 2 rows
-    drawn from the 12 minhashes OUTSIDE the hot band (the 4 inside it
-    are constant across the bucket and cannot subdivide it). A 2-row
-    band collides with probability s² vs the first pass's s⁴, so recall
-    for true near-dups inside the bucket strictly improves while chance
-    collisions split. Input: a bucketed frame ``(band, items)`` whose
-    items carry ``(doc_id, shingles, sig)``; output: the sub-bucketed
-    frame (materialized — consumed by both the fine and star tiers).
-
-    ``guard_null_sig`` (the persisted-band-table path): a sig_dir whose
-    old batches predate the with_sig sink reads those rows with
-    sig=NULL, and concat_ws would silently collapse every null-sig doc
-    into one degenerate sub-band key — old×new pairs in the hot band
-    would be dropped with no error. Fail loudly with the migration path
-    instead (bounded: the check scans hot rows only)."""
-    b_idx = F.element_at(F.split("band", "-"), 1).cast("int")
-    hot_rows = hot.select(
-        F.col("band").alias("band0"),
-        b_idx.alias("b0"),
-        F.explode("items").alias("it"),
-    ).select(
-        "band0",
-        "b0",
-        F.col("it.doc_id").alias("doc_id"),
-        F.col("it.shingles").alias("shingles"),
-        F.col("it.sig").alias("sig"),
-    )
-    if guard_null_sig and hot_rows.filter(F.col("sig").isNull()).limit(1).count() > 0:
+def _minhash_subbands(hot_rows: DataFrame) -> DataFrame:
+    """MinHash second-pass keys for :func:`_banded_pairs`: 6 sub-bands ×
+    2 rows over the 12 minhashes outside the hot band, from the packed
+    ``sig`` the items carry. A ``sig`` column that may hold NULLs (a band
+    table whose legacy 3-column batches read as sig=NULL) is probed
+    first: concat_ws would collapse every null-sig doc into one
+    degenerate sub-band key and silently drop cross-era pairs, so that
+    case fails loudly with the migration path (bounded: the probe scans
+    hot rows only, and a ``sig`` Spark knows to be non-null skips it)."""
+    if hot_rows.schema["sig"].nullable and (
+        hot_rows.filter(F.col("sig").isNull()).limit(1).count() > 0
+    ):
         raise ValueError(
             "pairs_from_band_table: a hot band contains rows with NULL sig "
             "(legacy 3-column batches mixed with with_sig batches) — the "
@@ -435,7 +462,7 @@ def _hot_subband_buckets(hot: DataFrame, guard_null_sig: bool = False) -> DataFr
         lambda s: (s["idx"] < F.col("b0") * LSH_ROWS)
         | (s["idx"] >= (F.col("b0") + 1) * LSH_ROWS),
     )
-    hot_rows = hot_rows.select("band0", "doc_id", "shingles", others.alias("rest"))
+    rows = hot_rows.select("band0", "doc_id", "shingles", others.alias("rest"))
     sub_keys = F.transform(
         F.sequence(F.lit(0), F.lit(MINHASH_K - LSH_ROWS - 2), F.lit(2)),
         lambda i: F.concat_ws(
@@ -446,13 +473,7 @@ def _hot_subband_buckets(hot: DataFrame, guard_null_sig: bool = False) -> DataFr
             F.element_at("rest", i + 2)["mh"],
         ),
     )
-    return (
-        hot_rows.select("doc_id", "shingles", F.explode(sub_keys).alias("band"))
-        .groupBy("band")
-        .agg(F.array_sort(F.collect_list(F.struct("doc_id", "shingles"))).alias("items"))
-        .filter(F.size("items") > 1)
-        .localCheckpoint(eager=True)
-    )
+    return rows.select("doc_id", "shingles", F.explode(sub_keys).alias("band"))
 
 
 def simhash_signatures(
@@ -501,29 +522,28 @@ def simhash_neardup_pairs(
     max_bucket: int = 1024,
 ) -> DataFrame:
     """SimHash near-dup pairs with Hamming distance ≤ ``max_hamming``
-    (≤ 3 so the 4-band pigeonhole is exact: 3 flipped bits cannot touch
-    all 4 bands, hence every qualifying pair shares at least one exact
-    15-bit band key — candidate generation is bucket-local, never n²
-    over the corpus).
+    (≤ 3, else ``ValueError``: with 4 bands the pigeonhole is exact only
+    then — 3 flipped bits cannot touch all 4 bands, hence every
+    qualifying pair shares at least one exact 15-bit band key, and
+    candidate generation is bucket-local, never n² over the corpus).
 
     Returns ``(doc1, doc2, hamming)``, doc1 < doc2.
 
-    Hot-band handling (mirrors ``minhash_neardup_pairs``): a boilerplate
-    cluster whose members share one 15-bit band value would make the
-    bucket's quadratic expansion unbounded. Buckets larger than
-    ``max_bucket`` go through a second banding pass that is STILL exact:
-    within a hot band the 45 out-of-band bits are split into 4 sub-bands
+    Hot-band handling (the banded-bucket body shared with
+    ``minhash_neardup_pairs``): buckets larger than ``max_bucket`` go
+    through a second banding pass that is STILL exact — within a hot
+    band the 45 out-of-band bits are split into 4 sub-bands
     (12+11+11+11), and ≤3 flipped bits cannot touch all 4 sub-bands, so
     every qualifying pair in the hot bucket shares an exact sub-band key.
     Sub-buckets still larger than ``max_bucket`` are near-identical
     boilerplate (same 15+11 bits of the fingerprint); they degrade to a
     STAR (every member paired with the min-id member): O(n) pairs that
-    keep the cluster connected for neardup_clusters instead of O(n²)
-    enumeration — bounded work, documented recall fallback, never a
-    silent drop.
+    keep the cluster connected instead of O(n²) enumeration — bounded
+    work, documented recall fallback, never a silent drop.
     """
-    assert max_hamming <= LSH_BANDS - 1, "band pigeonhole requires max_hamming < n_bands"
-    width = SIMHASH_BITS // 4
+    if max_hamming > SIMHASH_BANDS - 1:
+        raise ValueError("band pigeonhole requires max_hamming < n_bands")
+    width = SIMHASH_BITS // SIMHASH_BANDS
     sig = simhash_signatures(df, text_col, id_col).withColumnRenamed("simhash", "sh")
     bands = sig.select(
         "doc_id",
@@ -536,71 +556,23 @@ def simhash_neardup_pairs(
                         F.lit(str(i)),
                         (F.shiftright(F.col("sh"), i * width) % F.lit(1 << width)).cast("string"),
                     )
-                    for i in range(4)
+                    for i in range(SIMHASH_BANDS)
                 ]
             )
         ).alias("band"),
     )
-    # Bucket the band join instead of self-joining: the size gate needs
-    # the bucket materialized anyway, and the combination generator
-    # confines the quadratic to the bucket. localCheckpoint: the frame
-    # feeds both the small path and the hot second pass (exchange reuse
-    # does not dedupe union branches; signatures would recompute).
-    buckets = (
-        bands.groupBy("band")
-        .agg(F.array_sort(F.collect_list(F.struct("doc_id", "sh"))).alias("items"))
-        .filter(F.size("items") > 1)
-        .localCheckpoint(eager=True)
+    return _banded_pairs(
+        bands, _hamming_pair, F.col("hamming") <= max_hamming, max_bucket, ":", _simhash_subbands
     )
 
-    def pair_with_hamming(x, y):
-        return F.struct(
-            x["doc_id"].alias("doc1"),
-            y["doc_id"].alias("doc2"),
-            F.bit_count(x["sh"].bitwiseXOR(y["sh"])).alias("hamming"),
-        )
 
-    def all_pairs(bucketed: DataFrame) -> DataFrame:
-        # Two codegen Generates + projection-level hamming — same
-        # explode rewrite as _bucket_all_pairs (r12), identical pairs.
-        step1 = bucketed.select("items", F.posexplode("items").alias("_i", "_x"))
-        pairs = step1.select(
-            "_x",
-            F.explode(
-                F.slice(
-                    "items",
-                    F.col("_i") + 2,
-                    F.greatest(F.size("items") - F.col("_i") - 1, F.lit(0)),
-                )
-            ).alias("_y"),
-        )
-        return pairs.select(
-            pair_with_hamming(F.col("_x"), F.col("_y")).alias("p")
-        ).select("p.doc1", "p.doc2", "p.hamming")
-
-    small = buckets.filter(F.size("items") <= max_bucket)
-    hot = buckets.filter(F.size("items") > max_bucket)
-
-    # Cheap existence probe on the materialized buckets: the common case
-    # (no hot bands) skips planning the second-pass shuffle chains.
-    if hot.limit(1).count() == 0:
-        return (
-            all_pairs(small).filter(F.col("hamming") <= max_hamming).distinct()
-        )
-
-    # --- second pass: re-band hot buckets on the 45 out-of-band bits.
-    # rest_i = sh with band i's 15 bits excised (low bits | high bits
-    # shifted down) — a 45-bit value, computed with static shifts per
-    # possible band index and selected by the bucket's parsed index.
-    b_idx = F.element_at(F.split("band", ":"), 1).cast("int")
-    hot_rows = hot.select(
-        F.col("band").alias("band0"), b_idx.alias("b0"), F.explode("items").alias("it")
-    ).select(
-        "band0",
-        "b0",
-        F.col("it.doc_id").alias("doc_id"),
-        F.col("it.sh").alias("sh"),
-    )
+def _simhash_subbands(hot_rows: DataFrame) -> DataFrame:
+    """SimHash second-pass keys for :func:`_banded_pairs`: rest = sh with
+    the hot band's 15 bits excised (low bits | high bits shifted down),
+    a 45-bit value computed with static shifts per possible band index
+    and selected by ``b0``, split into sub-bands of 12+11+11+11 bits —
+    ≤3 flips leave one untouched."""
+    width = SIMHASH_BITS // SIMHASH_BANDS
 
     def rest_for(i: int) -> Column:
         low = F.col("sh") % F.lit(1 << (i * width)) if i > 0 else F.lit(0).cast("long")
@@ -608,11 +580,9 @@ def simhash_neardup_pairs(
         return low + high
 
     rest = F.when(F.col("b0") == 0, rest_for(0))
-    for i in range(1, 4):
+    for i in range(1, SIMHASH_BANDS):
         rest = rest.when(F.col("b0") == i, rest_for(i))
-    hot_rows = hot_rows.select("band0", "doc_id", "sh", rest.alias("rest"))
-
-    # 45 bits → sub-bands of 12+11+11+11; ≤3 flips leave one untouched.
+    rows = hot_rows.select("band0", "doc_id", "sh", rest.alias("rest"))
     sub_widths = (12, 11, 11, 11)
     sub_offsets = (0, 12, 23, 34)
     sub_keys = F.array(
@@ -628,29 +598,7 @@ def simhash_neardup_pairs(
             for j in range(4)
         ]
     )
-    sub_buckets = (
-        hot_rows.select("doc_id", "sh", F.explode(sub_keys).alias("band"))
-        .groupBy("band")
-        .agg(F.array_sort(F.collect_list(F.struct("doc_id", "sh"))).alias("items"))
-        .filter(F.size("items") > 1)
-        .localCheckpoint(eager=True)  # consumed by both fine and star
-    )
-    fine = sub_buckets.filter(F.size("items") <= max_bucket)
-
-    # --- residual hot sub-buckets: star-link to the min-id member
-    # (codegen explode shape, same as _bucket_star_pairs).
-    star = (
-        sub_buckets.filter(F.size("items") > max_bucket)
-        .select(
-            F.element_at("items", 1).alias("_x"),
-            F.explode(F.slice("items", 2, F.size("items") - 1)).alias("_y"),
-        )
-        .select(pair_with_hamming(F.col("_x"), F.col("_y")).alias("p"))
-        .select("p.doc1", "p.doc2", "p.hamming")
-    )
-
-    pairs = all_pairs(small).unionByName(all_pairs(fine)).unionByName(star)
-    return pairs.filter(F.col("hamming") <= max_hamming).distinct()
+    return rows.select("doc_id", "sh", F.explode(sub_keys).alias("band"))
 
 
 def neardup_clusters(
@@ -676,8 +624,8 @@ def neardup_clusters(
     edges = pairs.select(F.col("doc1").alias("src"), F.col("doc2").alias("dst"))
     # Materialize the (symmetrized) edge list ONCE — every propagation
     # round joins against it, and without the checkpoint each round
-    # would re-run the whole upstream pair-detection pipeline. LAZY
-    # (r12): the round-0 convergence count is a full aggregate, so it
+    # would re-run the whole upstream pair-detection pipeline. LAZY:
+    # the round-0 convergence count is a full aggregate, so it
     # materializes these blocks inside its own job instead of paying a
     # separate eager-checkpoint job (see graph.checkpoint_edges for the
     # lazy-safety contract; measured with the loop A/B below).
@@ -699,13 +647,10 @@ def neardup_clusters(
         # One checkpointed frame carries both the new label and the
         # did-it-move flag, so convergence detection is a cheap count on
         # materialized data instead of a second join per round. The
-        # checkpoint is LAZY (r12): the convergence count is a full
-        # aggregate over the frame, so ONE job both materializes the
-        # round's blocks and returns the count — the eager shape paid a
-        # separate checkpoint job per round (measured, interleaved A/B
-        # at sf0.1: 1.26/0.90 → 1.01/0.80 s per fixpoint, labels
-        # identical; ~2 jobs saved per round across the two loops of
-        # incremental_neardup_clusters).
+        # checkpoint is LAZY: the convergence count is a full aggregate
+        # over the frame, so ONE job both materializes the round's
+        # blocks and returns the count, with no separate checkpoint job
+        # per round.
         new_labels = (
             labels.join(neigh, labels.id == neigh.dst, "left")
             .select(
@@ -789,7 +734,7 @@ def incremental_cluster_update(
     # endpoint → supernode: old endpoints contract to their cluster
     # label; batch endpoints (no label row) stay their own supernode.
     # The tiny endpoint set broadcasts, the label table streams map-side.
-    # Lazy checkpoint (r12): both consumers are broadcast builds (full
+    # Lazy checkpoint: both consumers are broadcast builds (full
     # materialization), so the first broadcast's job stores the blocks
     # and the second reuses them — no separate eager-checkpoint job.
     sup = (
@@ -892,7 +837,7 @@ def retract_from_cluster_state(
     step (3) then reuses it (restricted to the affected members by the
     same semi-join as ``aff_docs``) instead of re-hashing the affected
     text; callers that already built corpus-wide pairs from the same
-    frame share one signature pass across both stages (r13).
+    frame share one signature pass across both stages.
 
     Returns ``(id_col, cluster_id)`` over corpus MINUS deleted —
     identical to the one-shot over the surviving corpus (asserted in
@@ -981,18 +926,18 @@ def dedup_corpus(
 
 def _materialize(df: DataFrame, durable: bool) -> DataFrame:
     """Shared materialization point of the one-shot prefix/blocked
-    tiers' reused intermediates (the tokenized doc frame and the prefix
-    postings — each feeds the df aggregate, the hot-posting probe, the
-    candidate join AND the exact verify, so recomputing them per
-    consumer would repeat the CPU-bound tokenize/rank stages).
+    tiers' reused intermediates (the token-set frame and the prefix
+    postings — between them they feed the df aggregate, the hot-posting
+    probe, the candidate join AND the exact verify, so recomputing them
+    per consumer would repeat the CPU-bound tokenize/rank stages).
 
-    ``durable=False`` (default): eager ``localCheckpoint`` — the
+    ``durable=False`` (default): lazy ``localCheckpoint`` — the
     measured-fastest shape at sandbox scale, but LINEAGE-FREE: on a
     real cluster an executor loss mid-query kills the job instead of
-    recomputing the lost blocks (the round-8 lesson this flag
-    config-gates). ``durable=True``: ``persist(DISK_ONLY)`` — blocks
-    live on executor disk WITH lineage retained, so a lost executor
-    recomputes its partitions and the query survives; the sf0.1 delta
+    recomputing the lost blocks. ``durable=True``:
+    ``persist(DISK_ONLY)`` — blocks live on executor disk WITH lineage
+    retained, so a lost executor recomputes its partitions and the
+    query survives; the sf0.1 delta
     vs the checkpoint shape is near-zero (SCALING part 23). Values are
     identical either way — the flag changes fault-tolerance, never
     results — so the τ-boundary battery runs bit-identically through
@@ -1004,18 +949,10 @@ def _materialize(df: DataFrame, durable: bool) -> DataFrame:
         from pyspark.storagelevel import StorageLevel
 
         return df.persist(StorageLevel.DISK_ONLY)
-    # Lazy since r12 (guide §1.2 step 1): every _materialize consumer
-    # chain opens with a FULL-scan action — the hot-posting guard
-    # aggregate (blocked/prefix tiers) or the df-frequency aggregate —
-    # so the first such job materializes the blocks instead of a
-    # dedicated eager-checkpoint job per frame (the lazy-checkpoint
-    # contract of graph.checkpoint_edges — r13 correction there: a
-    # limit-probe first consumer is SAFE too, Spark backfills; it just
-    # wouldn't save the job). Measured on
-    # prefix_jaccard_pairs at sf0.1, interleaved: 3.52/3.00 →
-    # 2.95/2.87 s wall, 22.5/24.6 → 17.3/20.4 s JVM CPU, pairs
-    # identical. The τ-boundary battery runs bit-identically through
-    # both this and the durable path (tests/test_blocked_join_boundaries).
+    # Lazy: every _materialize consumer chain opens with the
+    # hot-posting guard, a FULL-scan aggregate, so that job materializes
+    # the blocks instead of a dedicated eager-checkpoint job per frame
+    # (the lazy-checkpoint contract of graph.checkpoint_edges).
     return df.localCheckpoint(eager=False)
 
 
@@ -1034,14 +971,13 @@ def blocked_jaccard_pairs(
 
     Why not join on the block key alone: blocks grow linearly with the
     corpus, so a raw block self-join is quadratic in corpus size inside
-    every block — at ×100 each block's pair count grows ×10⁴ (the one
-    scale-killer the round-10 audit found). Instead this composes the
-    block key into :func:`prefix_jaccard_pairs`' lossless candidate
-    machinery: tokens are ordered per-block by (block df ASC, token),
-    each doc keeps only its ``m − ⌈τ·m⌉ + 1`` rarest tokens (the
-    prefix — a pair with J ≥ τ provably shares a prefix token), and
-    candidates come from an equi-join on the COMPOSITE key
-    ``(block, token)`` with the lossless size filter
+    every block — at ×100 each block's pair count grows ×10⁴. Instead
+    this is :func:`prefix_jaccard_pairs`' lossless candidate machinery
+    with the block as a group key: tokens are ordered per-block by
+    (block df ASC, token), each doc keeps only its ``m − ⌈τ·m⌉ + 1``
+    rarest tokens (the prefix — a pair with J ≥ τ provably shares a
+    prefix token), and candidates come from an equi-join on the
+    COMPOSITE key ``(block, token)`` with the lossless size filter
     (τ·|x| ≤ |y| ≤ |x|/τ) and PPJoin positional filter applied in the
     join condition. Both docs of any within-block pair see the same
     per-block token order, so the prefix bound holds exactly as in the
@@ -1064,7 +1000,7 @@ def blocked_jaccard_pairs(
     pair sharing two blocks returns one row per block — never a
     cross-membership mixture.
 
-    ``durable=True`` swaps the reused intermediates' eager
+    ``durable=True`` swaps the reused intermediates' lazy
     localCheckpoint for ``persist(DISK_ONLY)`` — identical values,
     lineage retained for executor-loss recovery (see
     :func:`_materialize` for the full fault-tolerance contract).
@@ -1072,56 +1008,13 @@ def blocked_jaccard_pairs(
     Returns ``(doc1, doc2, jaccard)`` with jaccard ≥ threshold, rounded
     to 4 decimals, doc1 < doc2, pairs within a block only.
     """
-    tau = threshold - 1e-4  # filters honor the round-then-threshold contract
-    t = _materialize(  # feeds dfreq, postings AND both verify sides
-        spread_small_input(df).select(
-            F.col(id_col).alias("doc_id"),
-            F.col(block_col).alias("block"),
-            F.array_distinct(ws_tokens(text_col)).alias("toks"),
-        ),
+    return _ppjoin_self_join(
+        _token_sets(df, text_col, id_col, block_col),
+        threshold,
+        max_prefix_posting,
         durable,
-    )
-    dfreq = (
-        t.select("doc_id", "block", F.explode("toks").alias("tok"))
-        .groupBy("block", "tok")
-        .agg(F.count(F.lit(1)).alias("df"))
-    )
-    prefix = _materialize(postings_from_sets(t, tau, dfreq=dfreq, group_cols=("block",)), durable)
-
-    _assert_posting_cap(prefix, ("block", "tok"), max_prefix_posting, "blocked_jaccard_pairs")
-
-    a, b = prefix.alias("a"), prefix.alias("b")
-    need = F.ceil(F.lit(tau / (1.0 + tau)) * (F.col("a.m") + F.col("b.m")) - 1e-9)
-    cand = (
-        a.join(
-            b,
-            (F.col("a.block") == F.col("b.block"))
-            & (F.col("a.tok") == F.col("b.tok"))
-            & (F.col("a.doc_id") < F.col("b.doc_id"))
-            & (F.col("b.m").cast("double") >= F.lit(tau) * F.col("a.m"))
-            & (F.col("a.m").cast("double") >= F.lit(tau) * F.col("b.m"))
-            & (
-                F.least(F.col("a.m") - F.col("a.pos"), F.col("b.m") - F.col("b.pos")) + 1
-                >= need
-            ),
-        )
-        .select(
-            F.col("a.block").alias("block"),
-            F.col("a.doc_id").alias("doc1"),
-            F.col("b.doc_id").alias("doc2"),
-        )
-        .distinct()
-    )
-    x = t.select(F.col("doc_id").alias("doc1"), "block", F.col("toks").alias("__tx"))
-    y = t.select(F.col("doc_id").alias("doc2"), "block", F.col("toks").alias("__ty"))
-    inter = F.size(F.array_intersect(F.col("__tx"), F.col("__ty"))).cast("double")
-    union = (F.size("__tx") + F.size("__ty")).cast("double") - inter
-    jac = F.round(inter / union, 4)
-    return (
-        cand.join(x, ["doc1", "block"])
-        .join(y, ["doc2", "block"])
-        .select("doc1", "doc2", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
+        ("block",),
+        "blocked_jaccard_pairs",
     )
 
 
@@ -1168,43 +1061,9 @@ def incremental_blocked_jaccard(
 
     Returns ``(new_id, old_id, jaccard)``, jaccard ≥ τ rounded 4 dp.
     """
-    tau = threshold - 1e-4
-
-    def prep(df: DataFrame) -> DataFrame:
-        return (
-            spread_small_input(df)
-            .select(
-                F.col(id_col).alias("doc_id"),
-                F.col(block_col).alias("block"),
-                F.array_distinct(ws_tokens(text_col)).alias("toks"),
-            )
-            .localCheckpoint(eager=True)
-        )
-
-    to, tn = prep(old), prep(new)
-    _assert_one_row_per_doc(to, "incremental_blocked_jaccard: corpus side")
-    _assert_one_row_per_doc(tn, "incremental_blocked_jaccard: batch side")
-    dfreq = (
-        to.select("doc_id", "block", F.explode("toks").alias("tok"))
-        .groupBy("block", "tok")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .localCheckpoint(eager=True)
-    )
-    po = postings_from_sets(to, tau, dfreq=dfreq, group_cols=("block",)).localCheckpoint(
-        eager=True
-    )
-    pn = postings_from_sets(tn, tau, dfreq=dfreq, group_cols=("block",))
-    _assert_posting_cap(
-        po, ("block", "tok"), max_prefix_posting, "incremental_blocked_jaccard: corpus side"
-    )
-    key = F.struct("block", "tok").alias("tok")
-    return _prefix_candidates_verify(
-        po.select("doc_id", key, "pos", "m"),
-        pn.select("doc_id", key, "pos", "m"),
-        to.select("doc_id", "toks"),
-        tn.select("doc_id", "toks"),
-        tau,
-        threshold,
+    return _ppjoin_incremental(
+        old, new, text_col, id_col, threshold, max_prefix_posting, block_col,
+        shingles=False, what="incremental_blocked_jaccard",
     )
 
 
@@ -1270,13 +1129,8 @@ def blocked_posting_frame(
     would silently invalidate the prefix bound once block frequencies
     shift); the price is longer posting lists, never recall. Same
     one-block-per-doc contract as :func:`incremental_blocked_jaccard`."""
-    tau = threshold - 1e-4
-    sets = spread_small_input(df).select(
-        F.col(id_col).alias("doc_id"),
-        F.col(block_col).alias("block"),
-        F.array_distinct(ws_tokens(text_col)).alias("toks"),
-    )
-    return sets, postings_from_sets(sets, tau, dfreq=None, group_cols=("block",))
+    sets = _token_sets(df, text_col, id_col, block_col)
+    return sets, postings_from_sets(sets, threshold - 1e-4, group_cols=("block",))
 
 
 def incremental_neardup(
@@ -1330,9 +1184,11 @@ def band_signature_frame(
     """``(doc_id, hs, band)`` — the exploded LSH band/signature frame,
     the thing a production ingest PERSISTS per document so the corpus
     text is hashed exactly once, at ingest (see neardup_ingest_sink in
-    streaming.windows). spread_small_input parallelizes the CPU-bound
-    signature stage (an under-partitioned scan would serialize it on one
-    core — measured 3.7× on the corpus side at sf0.1).
+    streaming.windows). Signatures come from
+    :func:`minhash_doc_signatures`, whose spread_small_input
+    parallelizes the CPU-bound signature stage (an under-partitioned
+    scan would serialize it on one core — measured 3.7× on the corpus
+    side at sf0.1).
 
     ``with_sig=True`` additionally carries the packed 16-minhash ``sig``
     array (``(doc_id, hs, sig, band)``) — the column
@@ -1342,23 +1198,22 @@ def band_signature_frame(
     3-column shape the pure new×old join paths use.
 
     ``sig_frame``: a precomputed :func:`minhash_doc_signatures` frame
-    for exactly the rows of ``df`` (see there) — skips re-running the
-    signature stage in chained multi-tier queries."""
-    if sig_frame is not None:
-        sigs = sig_frame.select(
-            "doc_id", F.col("shingles").alias("hs"), *[F.col(f"mh{j}") for j in range(MINHASH_K)]
-        )
+    for exactly the rows of ``df``, used instead of re-running the
+    signature stage in chained multi-tier queries. This is where every
+    precomputed signature frame enters the MinHash tiers: one without
+    ``doc_id``, ``shingles`` and ``mh0..mh{K-1}``, or built with a
+    different ``k``, raises ``ValueError``."""
+    if sig_frame is None:
+        sig_frame = minhash_doc_signatures(df, text_col, id_col, k)
     else:
-        sigs = spread_small_input(df).select(
-            F.col(id_col).alias("doc_id"), shingle_hash_set(text_col, k).alias("hs")
-        ).select("doc_id", "hs", *minhash_signature_cols("hs"))
-    keep = ["doc_id", "hs"]
-    if with_sig:
-        sigs = sigs.withColumn(
-            "sig", F.array(*[F.col(f"mh{j}") for j in range(MINHASH_K)])
-        )
-        keep.append("sig")
-    return sigs.select(*keep, F.explode(F.array(*lsh_band_keys())).alias("band"))
+        _check_sig_frame(sig_frame, k)
+    sig = [F.array(*[F.col(f"mh{j}") for j in range(MINHASH_K)]).alias("sig")]
+    return sig_frame.select(
+        "doc_id",
+        F.col("shingles").alias("hs"),
+        *(sig if with_sig else []),
+        F.explode(F.array(*lsh_band_keys())).alias("band"),
+    )
 
 
 def incremental_neardup_from_bands(
@@ -1370,16 +1225,12 @@ def incremental_neardup_from_bands(
     frames (columns ``(old_id, old_hs, band)`` / ``(new_id, new_hs,
     band)``): lets the corpus side come from a PERSISTED signature table
     instead of re-hashing text every ingest."""
-    inter = F.size(F.array_intersect(F.col("new_hs"), F.col("old_hs"))).cast("double")
-    union = (
-        F.size(F.col("new_hs")) + F.size(F.col("old_hs"))
-    ).cast("double") - inter
     return (
         old_bands.join(F.broadcast(new_bands), "band")
         .select(
             "new_id",
             "old_id",
-            F.round(inter / union, 4).alias("jaccard"),
+            _jaccard(F.col("new_hs"), F.col("old_hs")).alias("jaccard"),
         )
         # threshold first: the distinct (the one shuffle of pair rows)
         # then only carries surviving pairs, not every band collision.
@@ -1391,21 +1242,17 @@ def incremental_neardup_from_bands(
 def pairs_from_band_table(
     bands: DataFrame, threshold: float = 0.8, max_bucket: int = 1024
 ) -> DataFrame:
-    """Symmetric within-set MinHash pairs from a persisted band table
+    """Symmetric within-set MinHash pairs from a band table
     (band_signature_frame's output): bucket the rows by band key, emit
     candidate pairs bucket-locally with their exact Jaccard (verified on
-    the carried shingle sets), collapse band duplicates. The
-    re-derivation path for state that stores SIGNATURES but not text —
-    cluster_purge_state retracts labels from the streaming sink's band
-    table through this (the corpus text was hashed once at ingest and
-    never needs re-reading).
+    the carried shingle sets), collapse band duplicates. This is the
+    body of :func:`minhash_neardup_pairs` and the re-derivation path for
+    state that stores SIGNATURES but not text — cluster_purge_state
+    retracts labels from the streaming sink's band table through this
+    (the corpus text was hashed once at ingest and never needs
+    re-reading).
 
-    Hot-band handling IS :func:`minhash_neardup_pairs`'s bounded-work
-    contract — both call the same ``_bucket_all_pairs`` /
-    ``_hot_subband_buckets`` / ``_bucket_star_pairs`` helpers, so the
-    build path and this re-derivation path cannot silently diverge
-    (the extraction was verified plan-identical for the build path):
-    buckets over ``max_bucket`` take a finer
+    Hot-band handling: buckets over ``max_bucket`` take the finer
     second banding pass on the out-of-band minhashes when the table
     carries the packed ``sig`` column (``band_signature_frame(...,
     with_sig=True)`` — what cluster_ingest_sink persists), and residual
@@ -1414,46 +1261,24 @@ def pairs_from_band_table(
     table (no ``sig``) cannot sub-band, so its hot buckets go straight
     to the star tier; either way a boilerplate band costs O(n), which
     is what cluster_purge_state's re-derivation needs to stay bounded
-    by the affected-cluster mass. Note the guard tiers fire on the
-    bucket sizes of the frame THIS call sees: a retraction restricted
-    to affected survivors sees smaller buckets than the full-corpus
-    build did, so around the ``max_bucket`` boundary the star tier may
-    legitimately produce edges the build-time star dropped (both are
-    true ≥ threshold pairs); below the guard boundary — every planted
-    fixture and both testdata SFs — the pair sets are identical."""
-    has_sig = "sig" in bands.columns
-    base = bands.select(
-        "doc_id",
-        F.col("hs").alias("shingles"),
-        *(["sig"] if has_sig else []),
-        "band",
+    by the affected-cluster mass. A hot band whose rows carry a NULL
+    ``sig`` (legacy batches mixed into a with_sig table) raises
+    ``ValueError``. The guard tiers fire on the bucket sizes of the
+    frame THIS call sees: a retraction restricted to affected survivors
+    sees smaller buckets than the full-corpus build did, so around the
+    ``max_bucket`` boundary the star tier may legitimately produce edges
+    the build-time star dropped (both are true ≥ threshold pairs); below
+    the guard boundary the pair sets are identical."""
+    sig = ["sig"] if "sig" in bands.columns else []
+    banded = bands.select("doc_id", F.col("hs").alias("shingles"), *sig, "band")
+    return _banded_pairs(
+        banded,
+        _jaccard_pair,
+        F.col("jaccard") >= threshold,
+        max_bucket,
+        "-",
+        _minhash_subbands if sig else None,
     )
-    item = (
-        F.struct("doc_id", "shingles", "sig") if has_sig else F.struct("doc_id", "shingles")
-    )
-    buckets = (
-        base.groupBy("band")
-        .agg(F.array_sort(F.collect_list(item)).alias("items"))
-        .filter(F.size("items") > 1)
-        .localCheckpoint(eager=True)
-    )
-
-    small = buckets.filter(F.size("items") <= max_bucket)
-    hot = buckets.filter(F.size("items") > max_bucket)
-    if hot.limit(1).count() == 0:
-        return _bucket_all_pairs(small).filter(F.col("jaccard") >= threshold).distinct()
-
-    if not has_sig:
-        pairs = _bucket_all_pairs(small).unionByName(_bucket_star_pairs(hot))
-        return pairs.filter(F.col("jaccard") >= threshold).distinct()
-
-    sub_buckets = _hot_subband_buckets(hot, guard_null_sig=True)
-    pairs = (
-        _bucket_all_pairs(small)
-        .unionByName(_bucket_all_pairs(sub_buckets.filter(F.size("items") <= max_bucket)))
-        .unionByName(_bucket_star_pairs(sub_buckets.filter(F.size("items") > max_bucket)))
-    )
-    return pairs.filter(F.col("jaccard") >= threshold).distinct()
 
 
 def containment_pairs(
@@ -1574,63 +1399,20 @@ def prefix_jaccard_pairs(
     every pair with true shingle-Jaccard ≥ τ, no sketch recall loss.
     ``shingles=False`` switches to unigram token sets.
 
-    ``durable=True`` swaps the reused intermediates' eager
+    ``durable=True`` swaps the reused intermediates' lazy
     localCheckpoint for ``persist(DISK_ONLY)`` — identical values,
     lineage retained for executor-loss recovery (see
     :func:`_materialize` for the full fault-tolerance contract).
 
     Returns ``(doc1, doc2, jaccard)``, doc1 < doc2, jaccard ≥ τ.
     """
-    from pyspark.sql import Window
-
-    tau = threshold - 1e-4  # filters honor the round-then-threshold contract
-    elems = shingle_hash_set(text_col) if shingles else F.array_distinct(ws_tokens(text_col))
-    t = spread_small_input(df).select(F.col(id_col).alias("doc_id"), elems.alias("toks"))
-    # Token posting frame feeds the df aggregate AND the ranked prefix —
-    # materialize once (same discipline as containment_pairs).
-    tok = _materialize(t.select("doc_id", F.explode("toks").alias("tok")), durable)
-    dfreq = tok.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
-    wdoc = Window.partitionBy("doc_id").orderBy("df", "tok")
-    sized = tok.join(dfreq, "tok").select(
-        "doc_id",
-        "tok",
-        F.row_number().over(wdoc).alias("pos"),
-        F.count(F.lit(1)).over(Window.partitionBy("doc_id")).alias("m"),
-    )
-    prefix = _materialize(
-        sized.filter(F.col("pos") <= F.col("m") - F.ceil(F.lit(tau) * F.col("m") - 1e-9) + 1),
+    return _ppjoin_self_join(
+        _token_sets(df, text_col, id_col, shingles=shingles),
+        threshold,
+        max_prefix_posting,
         durable,
-    )
-
-    _assert_posting_cap(prefix, ("tok",), max_prefix_posting, "prefix_jaccard_pairs")
-
-    a, b = prefix.alias("a"), prefix.alias("b")
-    need = F.ceil(F.lit(tau / (1.0 + tau)) * (F.col("a.m") + F.col("b.m")) - 1e-9)
-    cand = (
-        a.join(
-            b,
-            (F.col("a.tok") == F.col("b.tok"))
-            & (F.col("a.doc_id") < F.col("b.doc_id"))
-            & (F.col("b.m").cast("double") >= F.lit(tau) * F.col("a.m"))
-            & (F.col("a.m").cast("double") >= F.lit(tau) * F.col("b.m"))
-            & (
-                F.least(F.col("a.m") - F.col("a.pos"), F.col("b.m") - F.col("b.pos")) + 1
-                >= need
-            ),
-        )
-        .select(F.col("a.doc_id").alias("doc1"), F.col("b.doc_id").alias("doc2"))
-        .distinct()
-    )
-    x = t.select(F.col("doc_id").alias("doc1"), F.col("toks").alias("__tx"))
-    y = t.select(F.col("doc_id").alias("doc2"), F.col("toks").alias("__ty"))
-    inter = F.size(F.array_intersect(F.col("__tx"), F.col("__ty"))).cast("double")
-    union = (F.size("__tx") + F.size("__ty")).cast("double") - inter
-    jac = F.round(inter / union, 4)
-    return (
-        cand.join(x, "doc1")
-        .join(y, "doc2")
-        .select("doc1", "doc2", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
+        (),
+        "prefix_jaccard_pairs",
     )
 
 
@@ -1667,10 +1449,8 @@ def prefix_posting_frame(
       prefix_ingest_sink); the price is longer posting lists than
       rarest-first, not recall.
     """
-    tau = threshold - 1e-4
-    elems = shingle_hash_set(text_col) if shingles else F.array_distinct(ws_tokens(text_col))
-    sets = spread_small_input(df).select(F.col(id_col).alias("doc_id"), elems.alias("toks"))
-    return sets, postings_from_sets(sets, tau, dfreq=dfreq)
+    sets = _token_sets(df, text_col, id_col, shingles=shingles)
+    return sets, postings_from_sets(sets, threshold - 1e-4, dfreq=dfreq)
 
 
 def postings_from_sets(
@@ -1685,15 +1465,12 @@ def postings_from_sets(
     the corpus exactly once for dfreq + verify + postings) never
     re-runs the CPU-bound shingle stage.
 
-    This is the shared implementation of the correctness-critical
-    prefix bound ``pos ≤ m − ⌈τ·m⌉ + 1`` (1e-9 under the ceil against
-    float representation error) used by the incremental, blocked, and
-    streaming tiers; :func:`prefix_jaccard_pairs` keeps one historical
-    inline copy of the same expression (its tok-frame checkpoint
-    discipline differs) — a change to the bound must touch BOTH, and
-    the planted τ-boundary batteries in
-    tests/test_blocked_join_boundaries.py cover each tier
-    independently. ``group_cols`` (the blocked tiers pass
+    This is the one implementation of the correctness-critical prefix
+    bound ``pos ≤ m − ⌈τ·m⌉ + 1`` (1e-9 under the ceil against float
+    representation error), used by every prefix-filter tier — one-shot,
+    incremental and streaming, blocked or not; the planted τ-boundary
+    batteries in tests/test_blocked_join_boundaries.py cover each tier.
+    ``group_cols`` (the blocked tiers pass
     ``("block",)``) are carried through, the df order joins on
     ``(*group_cols, tok)``, and the per-doc window partitions on
     ``(doc_id, *group_cols)`` — a doc listed under several blocks
@@ -1752,29 +1529,128 @@ def incremental_prefix_jaccard(
     Returns ``(new_id, old_id, jaccard)``, jaccard ≥ τ rounded to 4 dp
     BEFORE the threshold (cross-engine contract).
     """
-    tau = threshold - 1e-4
-    elems = shingle_hash_set(text_col) if shingles else F.array_distinct(ws_tokens(text_col))
-    # ONE shingle pass per side: the checkpointed set frames feed dfreq,
-    # postings AND the exact verify (the CPU-bound stage of this plan).
-    to = (
-        spread_small_input(old)
-        .select(F.col(id_col).alias("doc_id"), elems.alias("toks"))
-        .localCheckpoint(eager=True)
+    return _ppjoin_incremental(
+        old, new, text_col, id_col, threshold, max_prefix_posting, None,
+        shingles=shingles, what="incremental_prefix_jaccard",
     )
-    tn = (
-        spread_small_input(new)
-        .select(F.col(id_col).alias("doc_id"), elems.alias("toks"))
-        .localCheckpoint(eager=True)
-    )
-    tok_o = to.select("doc_id", F.explode("toks").alias("tok"))
-    dfreq = (
-        tok_o.groupBy("tok").agg(F.count(F.lit(1)).alias("df")).localCheckpoint(eager=True)
-    )
-    po = postings_from_sets(to, tau, dfreq=dfreq).localCheckpoint(eager=True)
-    pn = postings_from_sets(tn, tau, dfreq=dfreq)
 
-    _assert_posting_cap(po, ("tok",), max_prefix_posting, "incremental_prefix_jaccard: corpus side")
-    return _prefix_candidates_verify(po, pn, to, tn, tau, threshold)
+
+def _token_sets(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    block_col: str | None = None,
+    shingles: bool = False,
+) -> DataFrame:
+    """The one set builder of the prefix-filter tiers: ``(doc_id,
+    [block,] toks)`` with ``toks`` the distinct 3-word-shingle hashes
+    (``shingles=True``) or distinct whitespace tokens, over a spread
+    input (the CPU-bound stage these plans materialize once)."""
+    elems = shingle_hash_set(text_col) if shingles else F.array_distinct(ws_tokens(text_col))
+    block = [F.col(block_col).alias("block")] if block_col else []
+    return spread_small_input(df).select(
+        F.col(id_col).alias("doc_id"), *block, elems.alias("toks")
+    )
+
+
+def _ppjoin_self_join(
+    sets: DataFrame,
+    threshold: float,
+    max_prefix_posting: int,
+    durable: bool,
+    group_cols: tuple[str, ...],
+    what: str,
+) -> DataFrame:
+    """The one PPJoin self-join body of :func:`prefix_jaccard_pairs`
+    (``group_cols=()``) and :func:`blocked_jaccard_pairs`
+    (``("block",)``): tokens ranked by (group df ASC, token), prefix
+    postings from :func:`postings_from_sets`, the posting-cap guard, a
+    candidate equi-join on ``(*group_cols, tok)`` with the lossless size
+    and positional prunes in the join condition, and the exact Jaccard
+    verify within the group. The set frame and the postings are
+    materialized (:func:`_materialize`, honoring ``durable``): the sets
+    feed the df aggregate, the postings and both verify sides, and the
+    postings feed the guard and both join sides."""
+    tau = threshold - 1e-4  # filters honor the round-then-threshold contract
+    g = list(group_cols)
+    t = _materialize(sets, durable)
+    dfreq = (
+        t.select(*g, F.explode("toks").alias("tok"))
+        .groupBy(*g, "tok")
+        .agg(F.count(F.lit(1)).alias("df"))
+    )
+    prefix = _materialize(postings_from_sets(t, tau, dfreq=dfreq, group_cols=group_cols), durable)
+    _assert_posting_cap(prefix, (*g, "tok"), max_prefix_posting, what)
+
+    a, b = prefix.alias("a"), prefix.alias("b")
+    need = F.ceil(F.lit(tau / (1.0 + tau)) * (F.col("a.m") + F.col("b.m")) - 1e-9)
+    same_key = reduce(and_, [F.col(f"a.{c}") == F.col(f"b.{c}") for c in (*g, "tok")])
+    cand = (
+        a.join(
+            b,
+            same_key
+            & (F.col("a.doc_id") < F.col("b.doc_id"))
+            & (F.col("b.m").cast("double") >= F.lit(tau) * F.col("a.m"))
+            & (F.col("a.m").cast("double") >= F.lit(tau) * F.col("b.m"))
+            & (
+                F.least(F.col("a.m") - F.col("a.pos"), F.col("b.m") - F.col("b.pos")) + 1
+                >= need
+            ),
+        )
+        .select(
+            *[F.col(f"a.{c}").alias(c) for c in g],
+            F.col("a.doc_id").alias("doc1"),
+            F.col("b.doc_id").alias("doc2"),
+        )
+        .distinct()
+    )
+    x = t.select(F.col("doc_id").alias("doc1"), *g, F.col("toks").alias("__tx"))
+    y = t.select(F.col("doc_id").alias("doc2"), *g, F.col("toks").alias("__ty"))
+    return (
+        cand.join(x, ["doc1", *g])
+        .join(y, ["doc2", *g])
+        .select("doc1", "doc2", _jaccard(F.col("__tx"), F.col("__ty")).alias("jaccard"))
+        .filter(F.col("jaccard") >= threshold)
+    )
+
+
+def _ppjoin_incremental(
+    old: DataFrame,
+    new: DataFrame,
+    text_col: str,
+    id_col: str,
+    threshold: float,
+    max_prefix_posting: int,
+    block_col: str | None,
+    shingles: bool,
+    what: str,
+) -> DataFrame:
+    """The one new×old PPJoin body of :func:`incremental_prefix_jaccard`
+    (``block_col=None``) and :func:`incremental_blocked_jaccard`: ONE
+    set pass per side (eagerly checkpointed — the sets feed dfreq,
+    postings AND the exact verify), the corpus df snapshot as the shared
+    token order for both sides' postings, the posting-cap guard on the
+    corpus side, then :func:`_prefix_candidates_verify` on the
+    ``(block, tok)`` struct key or the bare token. The blocked entry
+    enforces one row per doc_id on each side first, because the verify
+    joins sets by doc id alone."""
+    tau = threshold - 1e-4
+    g = ("block",) if block_col else ()
+    to = _token_sets(old, text_col, id_col, block_col, shingles).localCheckpoint(eager=True)
+    tn = _token_sets(new, text_col, id_col, block_col, shingles).localCheckpoint(eager=True)
+    if block_col:
+        _assert_one_row_per_doc(to, f"{what}: corpus side")
+        _assert_one_row_per_doc(tn, f"{what}: batch side")
+    dfreq = (
+        to.select(*g, F.explode("toks").alias("tok"))
+        .groupBy(*g, "tok")
+        .agg(F.count(F.lit(1)).alias("df"))
+        .localCheckpoint(eager=True)
+    )
+    po = postings_from_sets(to, tau, dfreq=dfreq, group_cols=g).localCheckpoint(eager=True)
+    pn = postings_from_sets(tn, tau, dfreq=dfreq, group_cols=g)
+    _assert_posting_cap(po, (*g, "tok"), max_prefix_posting, f"{what}: corpus side")
+    return _prefix_candidates_verify(po, pn, to, tn, tau, threshold, (*g, "tok"))
 
 
 def _prefix_candidates_verify(
@@ -1784,21 +1660,24 @@ def _prefix_candidates_verify(
     new_sets: DataFrame,
     tau: float,
     threshold: float,
+    key_cols: tuple[str, ...] = ("tok",),
 ) -> DataFrame:
-    """Candidate join + exact verify shared by the batch operator and
-    the streaming sink: corpus postings ⋈ BROADCAST batch postings with
-    the lossless size/positional prunes, then exact Jaccard on the full
+    """Candidate join + exact verify shared by the incremental tiers and
+    the streaming sinks: corpus postings ⋈ BROADCAST batch postings on
+    ``key_cols`` (several columns join as one struct key) with the
+    lossless size/positional prunes, then exact Jaccard on the full
     sets (batch side broadcast again — candidate rows are
     corpus-partitioned throughout; the corpus never shuffles)."""
+    key = F.struct(*key_cols) if len(key_cols) > 1 else F.col(key_cols[0])
     o = po.select(
         F.col("doc_id").alias("old_id"),
-        "tok",
+        key.alias("tok"),
         F.col("pos").alias("opos"),
         F.col("m").alias("om"),
     )
     n = pn.select(
         F.col("doc_id").alias("new_id"),
-        "tok",
+        key.alias("tok"),
         F.col("pos").alias("npos"),
         F.col("m").alias("nm"),
     )
@@ -1815,13 +1694,10 @@ def _prefix_candidates_verify(
     )
     x = old_sets.select(F.col("doc_id").alias("old_id"), F.col("toks").alias("__tx"))
     y = new_sets.select(F.col("doc_id").alias("new_id"), F.col("toks").alias("__ty"))
-    inter = F.size(F.array_intersect(F.col("__tx"), F.col("__ty"))).cast("double")
-    union = (F.size("__tx") + F.size("__ty")).cast("double") - inter
-    jac = F.round(inter / union, 4)
     return (
         cand.join(x, "old_id")
         .join(F.broadcast(y), "new_id")
-        .select("new_id", "old_id", jac.alias("jaccard"))
+        .select("new_id", "old_id", _jaccard(F.col("__tx"), F.col("__ty")).alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
     )
 
@@ -1841,10 +1717,11 @@ def _edit_distinct_titles(df: DataFrame, id_col: str, title_col: str) -> DataFra
     )
 
 
-def _symdelete_keys(t: DataFrame, id_out: str) -> DataFrame:
-    """Symmetric-deletion keys (FastSS — Bocek et al. 2007; the SymSpell
-    scheme) for the SHORT-title tier: every title emits itself plus its
-    ``len`` one-character-deletion variants. Two strings with lev ≤ 1
+def _symdelete_keys(t: DataFrame) -> DataFrame:
+    """Symmetric-deletion keys ``(tid, chunk=0, clen=0, sub)`` (FastSS —
+    Bocek et al. 2007; the SymSpell scheme) for the SHORT-title tier:
+    every title emits itself plus its ``len`` one-character-deletion
+    variants. Two strings with lev ≤ 1
     always share a key (substitution: delete the differing position
     from both; insert/delete: the shorter IS a deletion of the longer),
     and sharing a key bounds lev ≤ 2, so the exact ``levenshtein``
@@ -1855,7 +1732,7 @@ def _symdelete_keys(t: DataFrame, id_out: str) -> DataFrame:
         t.filter(F.length("tt") <= _EDIT_SHORT_MAX)
         .select("tid", "tt", F.explode(F.expr("sequence(0, length(tt))")).alias("p"))
         .select(
-            F.col("tid").alias(id_out),
+            "tid",
             F.when(F.col("p") == 0, F.col("tt"))
             .otherwise(
                 F.expr("concat(substring(tt, 1, p - 1), substring(tt, p + 1, 2147483647))")
@@ -1863,18 +1740,26 @@ def _symdelete_keys(t: DataFrame, id_out: str) -> DataFrame:
             .alias("sub"),
         )
         .distinct()  # "aab": deleting position 1 or 2 both yield "ab"
+        .select("tid", F.lit(0).alias("chunk"), F.lit(0).alias("clen"), "sub")
     )
 
 
-def _edit_hot_key_guard(keys: DataFrame, key_cols: list, hot_key_cap: int, what: str) -> None:
-    """The no-silent-cliff convention shared by both edit tiers: a key
-    shared by more than ``hot_key_cap`` distinct titles would make the
-    candidate equi-join quadratic in that group — raise with the
-    escalation path instead of degrading silently."""
-    hot = keys.groupBy(*key_cols).count().filter(F.col("count") > hot_key_cap).limit(1).collect()
+def _edit_hot_key_guard(keys: DataFrame, hot_key_cap: int, caller: str) -> None:
+    """The no-silent-cliff convention shared by both edit tiers: a
+    blocking key ``(chunk, clen, sub)`` held by more than ``hot_key_cap``
+    distinct titles would make the candidate equi-join quadratic in that
+    group — ``caller`` raises with the escalation path instead of
+    degrading silently."""
+    hot = (
+        keys.groupBy("chunk", "clen", "sub")
+        .count()
+        .filter(F.col("count") > hot_key_cap)
+        .limit(1)
+        .collect()
+    )
     if hot:
         raise ValueError(
-            f"edit_neardup_pairs: >{hot_key_cap} distinct titles share the {what} "
+            f"{caller}: >{hot_key_cap} distinct titles share the blocking "
             f"key {hot[0].sub!r} — the candidate join would go quadratic. "
             "Strip the shared boilerplate prefix first (lev(xu,xv)=lev(u,v)) "
             "or raise hot_key_cap deliberately."
@@ -1904,9 +1789,9 @@ def edit_neardup_pairs(
       et al. 2007; SymSpell). Each title emits itself + its ≤ 31
       one-deletion variants; lev ≤ 1 pairs always share a key. This
       tier exists because the chunk pigeonhole degrades below ~2×16
-      chars (a pre-round-9 version silently returned NO pairs among
-      short titles — exact dedup cannot catch lev=1 pairs, so short
-      strings need their own lossless blocking, not a hand-off).
+      chars (chunk keys alone return NO pairs among short titles, and
+      exact dedup cannot catch lev=1 pairs, so short strings need
+      their own lossless blocking, not a hand-off).
 
     Any true pair has |Δlen| ≤ 1, so with the tiers overlapping at
     len = 31 every pair lands wholly inside at least one tier:
@@ -1917,9 +1802,9 @@ def edit_neardup_pairs(
     representative (min id, group size kept). That is not an
     optimization but the tier contract — identical titles are the
     exact_dedup tier's output (group membership, linear), and a pair
-    list over them is inherently quadratic: the round-8 ×100 probe hit
-    a corpus of 5,000-member identical-title groups whose TRUE pair
-    expansion is 1.25 B rows (OOM by construction, for any algorithm).
+    list over them is inherently quadratic: a ×100 corpus of
+    5,000-member identical-title groups has a TRUE pair expansion of
+    1.25 B rows (OOM by construction, for any algorithm).
     After the collapse the edit tier's output is pairs of DISTINCT
     titles, which only a pathological corpus makes quadratic.
 
@@ -1941,188 +1826,103 @@ def edit_neardup_pairs(
     before returning instead of pinning a cached frame per call for
     the session lifetime; the candidate/verify plan executes here."""
     # persist (spillable), not localCheckpoint: the distinct-title frame
-    # feeds SEVEN consumers (two hot-key probes, index keys, probe keys,
-    # short-tier keys, both verify sides) and would otherwise re-derive
-    # the corpus scan + dedup per consumer; it is key-space-sized, so
-    # pinning it as heap blocks is the exact mistake the arc compaction
-    # made — cache with disk spill instead, released in the finally.
+    # feeds the key builders and both verify sides and would otherwise
+    # re-derive the corpus scan + dedup per consumer; it is
+    # key-space-sized, so cache with disk spill and release it in the
+    # finally instead of pinning heap blocks.
     t = _edit_distinct_titles(df, id_col, title_col).persist()
     try:
-        return _edit_neardup_pairs_impl(t, hot_key_cap)
+        # lazy ckpt: the guard's full-scan aggregate materializes the
+        # index keys inside its own job; the candidate join then reads
+        # blocks instead of re-deriving the key expansion.
+        idx = _edit_index_keys(t, "tid").localCheckpoint(eager=False)
+        _edit_hot_key_guard(idx, hot_key_cap, "edit_neardup_pairs")
+        cand = (
+            idx.join(_edit_probe_keys(t, "pid"), ["chunk", "clen", "sub"])
+            .filter(F.col("tid") != F.col("pid"))
+            .select(F.least("tid", "pid").alias("a"), F.greatest("tid", "pid").alias("b"))
+            .distinct()
+        )
+        ta = t.select(
+            F.col("tid").alias("a"), F.col("tt").alias("__ta"), F.col("grp").alias("na")
+        )
+        tb = t.select(
+            F.col("tid").alias("b"), F.col("tt").alias("__tb"), F.col("grp").alias("nb")
+        )
+        out = (
+            cand.join(ta, "a")
+            .join(tb, "b")
+            .withColumn("lev", F.levenshtein("__ta", "__tb").cast("int"))
+            .filter(F.col("lev") <= 1)
+            .select("a", "b", "lev", "na", "nb")
+        )
+        # materialize before the unpersist (bounded by the true near-dup
+        # pair count — the small-frame side of the checkpoint rule)
+        return out.localCheckpoint(eager=True)
     finally:
         t.unpersist()
 
 
-def _edit_neardup_pairs_impl(t: DataFrame, hot_key_cap: int) -> DataFrame:
-    L1 = _EDIT_L1
-    long_t = t.filter(F.length("tt") >= _EDIT_SHORT_MAX)
-    idx = long_t.select(
-        "tid",
-        F.explode(
-            F.array(
-                F.struct(
-                    F.lit(1).alias("chunk"),
-                    F.lit(L1).alias("clen"),
-                    F.substring("tt", 1, L1).alias("sub"),
-                ),
-                F.struct(
-                    F.lit(2).alias("chunk"),
-                    (F.length("tt") - L1).cast("int").alias("clen"),
-                    F.substring("tt", L1 + 1, 1 << 30).alias("sub"),
-                ),
-            )
-        ).alias("k"),
-    ).select("tid", "k.chunk", "k.clen", "k.sub")
-    # Probe keys are COUPLED to the partner's length: for a true pair,
-    # δ = len(t) − len(s) ∈ {−1, 0, +1}, s's chunk2 (length len(s) − 16
-    # = len(t) − δ − 16) appears in t at start 17 + δ. One key per δ —
-    # deriving the length from the probe's own length keeps the scheme
-    # lossless for ANY title length ≥ 31 (a fixed {15,16} length grid
-    # silently misses partners longer than 32 chars).
-    probe_structs = [
-        F.struct(
-            F.lit(1).alias("chunk"),
-            F.lit(L1).alias("clen"),
-            F.substring("tt", 1, L1).alias("sub"),
-        )
-    ]
-    for d in (-1, 0, 1):
-        clen = (F.length("tt") - F.lit(d + L1)).cast("int")
-        probe_structs.append(
-            F.struct(
-                F.lit(2).alias("chunk"),
-                clen.alias("clen"),
-                F.col("tt").substr(F.lit(L1 + 1 + d), clen).alias("sub"),
-            )
-        )
-    probe = long_t.select(
-        "tid",
-        F.explode(F.array(*probe_structs)).alias("k"),
-    ).select(
-        F.col("tid").alias("pid"), F.col("k.chunk").alias("chunk"),
-        F.col("k.clen").alias("clen"), F.col("k.sub").alias("sub"),
+def _edit_chunk_key(chunk: int, clen: Column, sub: Column) -> Column:
+    return F.struct(F.lit(chunk).alias("chunk"), clen.alias("clen"), sub.alias("sub"))
+
+
+def _edit_keys(t: DataFrame, long_keys: list[Column], id_out: str, probe: bool) -> DataFrame:
+    """``(id, chunk, clen, sub)``: the long titles' PassJoin ``long_keys``
+    unioned with every short title's symmetric-deletion keys. Probe keys
+    whose substring was truncated by the string end can never match a
+    true-pair index key (the shift math keeps required substrings in
+    range), so ``probe=True`` drops them before the join."""
+    long_rows = (
+        t.filter(F.length("tt") >= _EDIT_SHORT_MAX)
+        .select("tid", F.explode(F.array(*long_keys)).alias("k"))
+        .select("tid", "k.chunk", "k.clen", "k.sub")
     )
-    # hot-key guards (the no-silent-cliff convention), one tiny aggregate
-    # per tier's index frame. The key frames are lazily checkpointed
-    # first (r13): each guard's full-scan aggregate materializes its
-    # frame's blocks inside the guard job it was going to run anyway,
-    # and the candidate joins then read blocks instead of re-deriving
-    # the key expansion (the ≤32-deletions-per-title explode previously
-    # ran 3x: guard + both sides of the short self-join).
-    idx = idx.localCheckpoint(eager=False)
-    _edit_hot_key_guard(idx, ["chunk", "clen", "sub"], hot_key_cap, "chunk")
-    short_keys = _symdelete_keys(t, "tid").localCheckpoint(eager=False)
-    _edit_hot_key_guard(short_keys, ["sub"], hot_key_cap, "deletion")
-    # a probe substring truncated by the string end can never correspond
-    # to a true-pair key (the shift math keeps required substrings in
-    # range), so mismatched lengths just fail the equi-join
-    cand_long = (
-        idx.join(probe.filter(F.length("sub") == F.col("clen")), ["chunk", "clen", "sub"])
-        .filter(F.col("tid") != F.col("pid"))
-        .select(
-            F.least("tid", "pid").alias("a"), F.greatest("tid", "pid").alias("b")
-        )
-    )
-    cand_short = (
-        short_keys.join(
-            short_keys.select(F.col("tid").alias("pid"), "sub"), ["sub"]
-        )
-        .filter(F.col("tid") < F.col("pid"))
-        .select(F.col("tid").alias("a"), F.col("pid").alias("b"))
-    )
-    cand = cand_long.unionByName(cand_short).distinct()
-    ta = t.select(F.col("tid").alias("a"), F.col("tt").alias("__ta"), F.col("grp").alias("na"))
-    tb = t.select(F.col("tid").alias("b"), F.col("tt").alias("__tb"), F.col("grp").alias("nb"))
-    out = (
-        cand.join(ta, "a")
-        .join(tb, "b")
-        .withColumn("lev", F.levenshtein("__ta", "__tb").cast("int"))
-        .filter(F.col("lev") <= 1)
-        .select("a", "b", "lev", "na", "nb")
-    )
-    # materialize before the caller's unpersist (bounded by the true
-    # near-dup pair count — the small-frame side of the checkpoint rule)
-    return out.localCheckpoint(eager=True)
+    if probe:
+        long_rows = long_rows.filter(F.length("sub") == F.col("clen"))
+    return long_rows.unionByName(_symdelete_keys(t)).withColumnRenamed("tid", id_out)
 
 
 def _edit_index_keys(t: DataFrame, id_out: str = "tid") -> DataFrame:
-    """Unified blocking-index keys ``(id, chunk, clen, sub)`` for one
-    side of a new×old edit join — the PERSISTABLE per-distinct-title
-    postings of the edit tier (the character-level sibling of
-    prefix_posting_frame): long titles (len ≥ 31) emit their 2 PassJoin
-    chunk keys; short titles (len ≤ 31) emit their ≤ 32 symmetric-
-    deletion keys under ``chunk = 0`` (a disjoint namespace, ``clen``
-    pinned to 0 so both sides construct identical join keys). Like the
-    fixed token order of the prefix postings, these keys NEVER drift as
-    the corpus grows — a title's keys are a pure function of the title
-    — so postings persisted at any past ingest stay jointly lossless
-    against every future probe batch."""
+    """Blocking-index keys ``(id, chunk, clen, sub)`` of distinct titles
+    — the PERSISTABLE postings of the edit tier (the character-level
+    sibling of prefix_posting_frame): long titles (len ≥ 31) emit their
+    2 PassJoin chunk keys; short titles (len ≤ 31) emit their ≤ 32
+    symmetric-deletion keys under ``chunk = 0`` (a disjoint namespace,
+    ``clen`` pinned to 0 so both sides construct identical join keys).
+    Like the fixed token order of the prefix postings, these keys NEVER
+    drift as the corpus grows — a title's keys are a pure function of
+    the title — so postings persisted at any past ingest stay jointly
+    lossless against every future probe batch."""
     L1 = _EDIT_L1
-    long_keys = (
-        t.filter(F.length("tt") >= _EDIT_SHORT_MAX)
-        .select(
-            "tid",
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.lit(1).alias("chunk"),
-                        F.lit(L1).alias("clen"),
-                        F.substring("tt", 1, L1).alias("sub"),
-                    ),
-                    F.struct(
-                        F.lit(2).alias("chunk"),
-                        (F.length("tt") - L1).cast("int").alias("clen"),
-                        F.substring("tt", L1 + 1, 1 << 30).alias("sub"),
-                    ),
-                )
-            ).alias("k"),
-        )
-        .select("tid", "k.chunk", "k.clen", "k.sub")
-    )
-    short_keys = _symdelete_keys(t, "tid").select(
-        "tid", F.lit(0).alias("chunk"), F.lit(0).alias("clen"), "sub"
-    )
-    return long_keys.unionByName(short_keys).withColumnRenamed("tid", id_out)
+    chunks = [
+        _edit_chunk_key(1, F.lit(L1), F.substring("tt", 1, L1)),
+        _edit_chunk_key(
+            2, (F.length("tt") - L1).cast("int"), F.substring("tt", L1 + 1, 1 << 30)
+        ),
+    ]
+    return _edit_keys(t, chunks, id_out, probe=False)
 
 
 def _edit_probe_keys(n: DataFrame, id_out: str = "pid") -> DataFrame:
-    """Probe keys for the batch side of the asymmetric new×old edit
-    join: against an index of chunk keys the probe must enumerate every
-    position a partner's chunk could occupy — chunk1 at position 1 and
-    chunk2 at 17+δ for δ ∈ {−1,0,+1} (4 keys, the one-shot operator's
-    probe grid) — plus the symmetric-deletion keys for the short tier.
-    idx(old) ⋈ probe(new) alone is lossless for every lev ≤ 1 pair:
-    if the edit sits past position 16 (in old's coordinates) the two
-    first-16 prefixes are equal (chunk1 hit); otherwise old's chunk2
-    survives verbatim in new at start 17+δ with length len(old)−16 =
-    len(new)−(δ+16) — exactly the δ-coupled probe key."""
+    """Probe keys joined against :func:`_edit_index_keys`: the probe must
+    enumerate every position a partner's chunk could occupy — chunk1 at
+    position 1 and chunk2 at 17+δ for δ ∈ {−1,0,+1} (4 keys) — plus the
+    symmetric-deletion keys for the short tier. idx(s) ⋈ probe(t) alone
+    is lossless for every lev ≤ 1 pair: if the edit sits past position
+    16 (in s's coordinates) the two first-16 prefixes are equal (chunk1
+    hit); otherwise s's chunk2 survives verbatim in t at start 17+δ with
+    length len(s)−16 = len(t)−(δ+16) — exactly the δ-coupled probe key
+    (deriving the length from the probe's own length keeps the scheme
+    lossless for ANY title length ≥ 31). The one-shot tier joins a
+    title set's index with its own probes; the incremental tier joins
+    the corpus index with the batch's probes."""
     L1 = _EDIT_L1
-    probe_structs = [
-        F.struct(
-            F.lit(1).alias("chunk"),
-            F.lit(L1).alias("clen"),
-            F.substring("tt", 1, L1).alias("sub"),
-        )
-    ]
+    chunks = [_edit_chunk_key(1, F.lit(L1), F.substring("tt", 1, L1))]
     for d in (-1, 0, 1):
         clen = (F.length("tt") - F.lit(d + L1)).cast("int")
-        probe_structs.append(
-            F.struct(
-                F.lit(2).alias("chunk"),
-                clen.alias("clen"),
-                F.col("tt").substr(F.lit(L1 + 1 + d), clen).alias("sub"),
-            )
-        )
-    long_probes = (
-        n.filter(F.length("tt") >= _EDIT_SHORT_MAX)
-        .select("tid", F.explode(F.array(*probe_structs)).alias("k"))
-        .select("tid", "k.chunk", "k.clen", "k.sub")
-        .filter(F.length("sub") == F.col("clen"))
-    )
-    short_probes = _symdelete_keys(n, "tid").select(
-        "tid", F.lit(0).alias("chunk"), F.lit(0).alias("clen"), "sub"
-    )
-    return long_probes.unionByName(short_probes).withColumnRenamed("tid", id_out)
+        chunks.append(_edit_chunk_key(2, clen, F.col("tt").substr(F.lit(L1 + 1 + d), clen)))
+    return _edit_keys(n, chunks, id_out, probe=True)
 
 
 def incremental_edit_neardup(
@@ -2162,12 +1962,12 @@ def incremental_edit_neardup(
     tests). Returns ``(new_id, old_id, lev, n_old)``."""
     t_old = _edit_distinct_titles(old, id_col, title_col).persist()
     try:
-        # lazy ckpt (r13): the guard's full-scan aggregate materializes
-        # the key frame inside its own job; the candidate join then
-        # reads blocks instead of re-deriving the key expansion.
+        # lazy ckpt: the guard's full-scan aggregate materializes the
+        # key frame inside its own job; the candidate join then reads
+        # blocks instead of re-deriving the key expansion.
         idx = _edit_index_keys(t_old, "old_id").localCheckpoint(eager=False)
-        _edit_hot_key_guard(idx, ["chunk", "clen", "sub"], hot_key_cap, "corpus")
-        # lazy (r13): first consumer is the probe broadcast build (full).
+        _edit_hot_key_guard(idx, hot_key_cap, "incremental_edit_neardup")
+        # lazy: first consumer is the probe broadcast build (full).
         t_new = new.select(
             F.col(id_col).alias("tid"), F.col(title_col).alias("tt")
         ).localCheckpoint(eager=False)

@@ -674,14 +674,8 @@ def _exact_ingest_sink(
                     "the corpus — the doc_id-keyed exact verify would fan out; "
                     "dedup ids upstream or purge the old rows first"
                 )
-            key = F.struct(*group_cols).alias("tok") if len(group_cols) > 1 else F.col("tok")
             pairs = _prefix_candidates_verify(
-                corpus_postings.select("doc_id", key, "pos", "m"),
-                postings_b.select("doc_id", key, "pos", "m"),
-                corpus_sets.select("doc_id", "toks"),
-                sets_b.select("doc_id", "toks"),
-                tau,
-                threshold,
+                corpus_postings, postings_b, corpus_sets, sets_b, tau, threshold, group_cols
             )
             L.write_batch(pairs, pairs_dir, batch_id)
         L.write_batch(postings_b, postings_dir, batch_id)

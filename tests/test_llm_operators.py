@@ -347,6 +347,76 @@ def test_simhash_small_buckets_unchanged_by_cap(spark):
     assert capped == tiny_corpus_exact
 
 
+def test_simhash_rejects_max_hamming_beyond_pigeonhole(spark):
+    """With 4 bands, 4 flipped bits can touch every band, so qualifying
+    pairs would share no band key and be dropped. The check must raise
+    a real error, not an assert that ``python -O`` strips."""
+    df = spark.createDataFrame([(1, "a b c"), (2, "a b d")], ["doc_id", "text"])
+    with pytest.raises(ValueError, match="pigeonhole"):
+        D.simhash_neardup_pairs(df, "text", "doc_id", max_hamming=4)
+
+
+def test_sig_frame_checked_where_it_enters(spark):
+    """A precomputed signature frame built with another shingle length,
+    or missing signature columns, must be rejected, not bucketed: its
+    sets are not the sets the call's k describes."""
+    df = spark.createDataFrame(
+        [(1, "alpha beta gamma delta epsilon"), (2, "alpha beta gamma delta zeta")],
+        ["doc_id", "text"],
+    )
+    k5 = D.minhash_doc_signatures(df, "text", "doc_id", k=5)
+    with pytest.raises(ValueError, match="k=5"):
+        D.minhash_neardup_pairs(df, "text", "doc_id", k=3, sig_frame=k5)
+    with pytest.raises(ValueError, match="k=5"):
+        D.incremental_neardup(df, df, "text", "doc_id", k=3, old_sig_frame=k5)
+    with pytest.raises(ValueError, match="mh15"):
+        D.band_signature_frame(df, "text", "doc_id", sig_frame=k5.drop("mh15"))
+    # the matching k passes and equals the self-computed signatures
+    k3 = D.minhash_doc_signatures(df, "text", "doc_id", k=3)
+    got = D.minhash_neardup_pairs(df, "text", "doc_id", threshold=0.1, sig_frame=k3)
+    want = D.minhash_neardup_pairs(df, "text", "doc_id", threshold=0.1)
+    assert sorted(got.collect()) == sorted(want.collect())
+
+
+def _jobs_of(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        rows = fn().collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group)), rows
+
+
+def test_band_tiers_job_counts_pinned(spark):
+    """With no hot band, a MinHash or SimHash call runs the bucket
+    checkpoint, the hot-bucket probe and the pair job — 6 Spark jobs
+    each with the result collected, as measured before the two tiers
+    shared one bucket body. Any further probe on the common path (such
+    as the band table's NULL-sig check) shows up here."""
+    base = "the quick brown fox jumps over the lazy dog again and again today"
+    df = spark.createDataFrame(
+        [
+            (1, base),
+            (2, base.replace("today", "tomorrow")),
+            (3, base),
+            (4, "completely unrelated content about spark shuffles and parquet files"),
+            (5, "a third document with its own words and nothing shared at all"),
+        ],
+        ["doc_id", "text"],
+    )
+    n_mh, mh = _jobs_of(
+        spark, "minhash_job_pin", lambda: D.minhash_neardup_pairs(df, "text", "doc_id")
+    )
+    n_sh, sh = _jobs_of(
+        spark, "simhash_job_pin", lambda: D.simhash_neardup_pairs(df, "text", "doc_id")
+    )
+    assert {(r.doc1, r.doc2) for r in mh} >= {(1, 3)}
+    assert (1, 3, 0) in {(r.doc1, r.doc2, r.hamming) for r in sh}
+    assert (n_mh, n_sh) == (6, 6)
+
+
 def test_dedup_lines_keeps_first_occurrence_only(spark):
     from is3107datapipelineproject_spark.operators.contamination import dedup_lines
 
