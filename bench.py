@@ -296,65 +296,12 @@ def _sf_of(sf_dir: str) -> float:
     return float(m.group(1)) if m else -1.0
 
 
-def _cpu_now() -> dict[int, float]:
-    """Per-PID cumulative CPU seconds of this process tree: this driver
-    process, every live descendant (the local-mode JVM — which IS the
-    executor on local[N] — plus pyspark.daemon and its workers), and each
-    member's already-reaped children (cutime/cstime, where a dead Python
-    worker's CPU lands when its parent wait()s). Round-12 verdict item:
-    the sf0.1 wall-clock bench is job-overhead-bound (8c/32c ratios
-    0.73–1.31) and cannot resolve CPU-level wins, so BENCH_DETAIL records
-    executor CPU per query alongside wall. Returned per-PID (not as one
-    tree total) so `_cpu_delta` can diff pidwise: a reused Python worker
-    that dies mid-bench takes its accumulated ticks out of the tree
-    total (SIG_IGN-autoreaped children never reach cutime), which made a
-    naive total-minus-total delta NEGATIVE for the query that happened
-    to span the death. One /proc sweep costs ~1 ms; it runs once per
-    timed run, a negligible and constant overhead inside the span."""
-    import glob
-
-    tick = float(os.sysconf("SC_CLK_TCK"))
-    ppid_of: dict[int, int] = {}
-    ticks_of: dict[int, int] = {}
-    for stat in glob.glob("/proc/[0-9]*/stat"):
-        try:
-            with open(stat) as f:
-                raw = f.read()
-        except OSError:  # process exited mid-sweep
-            continue
-        # comm (field 2) may contain spaces/parens: split at the LAST ')'
-        head, _, rest = raw.rpartition(")")
-        f_ = rest.split()
-        # rest fields (0-indexed): state=0, ppid=1, ..., utime=11,
-        # stime=12, cutime=13, cstime=14 (man proc(5), fields 14-17)
-        try:
-            pid = int(head.split()[0])
-            ppid_of[pid] = int(f_[1])
-            ticks_of[pid] = int(f_[11]) + int(f_[12]) + int(f_[13]) + int(f_[14])
-        except (ValueError, IndexError):
-            continue
-    me = os.getpid()
-    mine = {me}
-    grew = True
-    while grew:  # transitive closure over ppid (tree is shallow: ~3 levels)
-        grew = False
-        for pid, ppid in ppid_of.items():
-            if ppid in mine and pid not in mine:
-                mine.add(pid)
-                grew = True
-    return {p: ticks_of[p] / tick for p in mine if p in ticks_of}
-
-
-def _cpu_delta(before: dict[int, float], after: dict[int, float]) -> float:
-    """CPU seconds spent between two `_cpu_now` snapshots, summed
-    pidwise. A pid present in both contributes its increment (clamped at
-    0 against pid reuse); a pid new in `after` contributes its full
-    count (it was born inside the span). A pid that DIED inside the span
-    contributes only what its parent's cutime picked up — and for a
-    child reaped by a wait()ing parent that is the child's WHOLE
-    lifetime CPU, so a span containing the reap OVERCOUNTS by the
-    child's pre-span CPU (never negative; diagnostics only)."""
-    return sum(max(0.0, t1 - before.get(pid, 0.0)) for pid, t1 in after.items())
+# perfbench's process-tree CPU meter, imported by path (appended, so its
+# modules never shadow others). It keys each process by (pid, start
+# time), so a Python worker reaped inside a timed span is not counted
+# twice.
+sys.path.append(os.path.join(os.path.dirname(os.path.abspath(__file__)), "perfbench"))
+import proctree  # noqa: E402
 
 
 def _jobs_now(spark) -> int:
@@ -379,12 +326,12 @@ def _timed(fn, spark, sf_dir: str) -> tuple[float, float, int]:
     cpu/jobs are measured over exactly the same span as the wall time."""
 
     def one_run() -> tuple[float, float, int]:
-        c0, j0 = _cpu_now(), _jobs_now(spark)
+        c0, j0 = proctree.snapshot(), _jobs_now(spark)
         t0 = time.perf_counter()
         fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
         wall = time.perf_counter() - t0
         jobs = _jobs_now(spark) - j0 if j0 >= 0 else -1
-        return wall, _cpu_delta(c0, _cpu_now()), jobs
+        return wall, sum(proctree.cpu_between(c0, proctree.snapshot()).values()), jobs
 
     fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
     first = one_run()

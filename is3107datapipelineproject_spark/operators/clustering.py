@@ -142,8 +142,8 @@ def _fit(t: DataFrame, k: int, iters: int) -> DataFrame:
     for i in range(iters):
         assigned = _assign(t, cents)
         cents = _update(assigned)
-        # Periodic (not per-round) intermediate checkpoint — r13: even a
-        # LAZY localCheckpoint costs jobs at plan-construction time
+        # Periodic (not per-round) intermediate checkpoint: even a lazy
+        # localCheckpoint costs jobs at plan-construction time
         # (.rdd forces the AQE map stages), so at the default iters=2
         # the loop builds one nested plan with no intermediate cut
         # (measured: 15 -> 12 jobs for a single-consumer caller, values
@@ -287,7 +287,7 @@ def kmeans_assign_two_level(
     t = spread_small_input(df).select(
         F.col(id_col).alias("vid"), F.col(vec_col).cast("array<double>").alias("vec")
     )
-    # same periodic-checkpoint shape as _fit (r13): no plan cut needed
+    # same periodic-checkpoint shape as _fit: no plan cut needed
     # at the default iters=2; deep counts cut every 3rd round.
     cents = _fit(t, k, iters)
 
@@ -391,12 +391,6 @@ def semantic_dedup(
     families and ``max_block`` in fuzzy matching; the oracle replays the
     identical routing, so correctness checking stays exact.
     """
-    # lazy ckpt: asg feeds both the sizes broadcast build and the main
-    # join, which may materialize in concurrent AQE stages — safe here
-    # ONLY because the upstream is deterministic (kmeans init orders by
-    # unique vid), per the determinism clause of the lazy-checkpoint
-    # contract (graph.checkpoint_edges); block-manager dedup then makes
-    # whichever stage computes a partition first authoritative.
     asg = kmeans_assign(df, id_col, vec_col, k=k, iters=iters).localCheckpoint(eager=False)
     vecs = df.select(
         F.col(id_col).alias("vid"), F.col(vec_col).cast("array<double>").alias("vec")

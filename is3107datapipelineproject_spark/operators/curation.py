@@ -123,14 +123,11 @@ def unigram_surprisal(
     (tf, vocab) are multi-consumer subplans and Spark's exchange reuse
     does not dedupe them on a fresh plan (same recompute trap as the
     MinHash bucket frame, operators/dedup.py) — without materialization
-    the corpus scan+explode runs THREE times. Both are
-    localCheckpoint'ed LAZILY (r13: every consumer — the vocab
-    aggregate, the total aggregate, the broadcast builds — scans all
-    partitions, so the first consumer's job materializes the blocks;
-    upstream is a deterministic tokenize/aggregate): the CPU-heavy
-    explode/aggregate executes exactly once, vocab (tiny) once; the
-    trade is executor-local storage of the (doc, token, tf) frame,
-    which is what every multi-pass consumer of a tokenized corpus pays.
+    the corpus scan+explode runs THREE times. Both are localCheckpoint'ed:
+    the CPU-heavy explode/aggregate executes exactly once, vocab (tiny)
+    once; the trade is executor-local storage of the (doc, token, tf)
+    frame, which is what every multi-pass consumer of a tokenized corpus
+    pays.
     """
     toks = df.select(F.col(id_col), F.explode(ws_tokens(text_col)).alias("__tok"))
     tf = (
@@ -240,7 +237,7 @@ def importance_resample(
     tf = (
         toks.groupBy(id_col, "__tgt", "__tok")
         .agg(F.count(F.lit(1)).alias("__tf"))
-        .localCheckpoint(eager=False)  # lazy (r13): same full-consumer audit as unigram_surprisal
+        .localCheckpoint(eager=False)
     )
     src = tf.groupBy("__tok").agg(F.sum("__tf").alias("__src_cnt")).localCheckpoint(eager=False)
     tgt = (
@@ -376,7 +373,7 @@ def bigram_surprisal(
     bg = (
         df.select(F.col(id_col), F.explode(pairs).alias("__p"))
         .select(id_col, F.col("__p.w1").alias("__w1"), F.col("__p.w2").alias("__w2"))
-        .localCheckpoint(eager=False)  # lazy (r13): first consumer is the cb aggregate (full scan)
+        .localCheckpoint(eager=False)
     )
     cb = bg.groupBy("__w1", "__w2").agg(F.count(F.lit(1)).alias("__c")).localCheckpoint(eager=False)
     cp = cb.groupBy("__w1").agg(F.sum("__c").cast("long").alias("__cp"))

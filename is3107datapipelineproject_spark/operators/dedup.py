@@ -40,6 +40,7 @@ from operator import add, and_
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 from is3107datapipelineproject_spark.operators.text import normalize_text, ws_tokens
 
@@ -405,7 +406,7 @@ def _band_buckets(rows: DataFrame) -> DataFrame:
         rows.groupBy("band")
         .agg(F.array_sort(F.collect_list(F.struct(*fields))).alias("items"))
         .filter(F.size("items") > 1)
-        .localCheckpoint(eager=True)
+        .localCheckpoint(eager=True)  # eager: first read is the hot-bucket limit probe
     )
 
 
@@ -624,11 +625,7 @@ def neardup_clusters(
     edges = pairs.select(F.col("doc1").alias("src"), F.col("doc2").alias("dst"))
     # Materialize the (symmetrized) edge list ONCE — every propagation
     # round joins against it, and without the checkpoint each round
-    # would re-run the whole upstream pair-detection pipeline. LAZY:
-    # the round-0 convergence count is a full aggregate, so it
-    # materializes these blocks inside its own job instead of paying a
-    # separate eager-checkpoint job (see graph.checkpoint_edges for the
-    # lazy-safety contract; measured with the loop A/B below).
+    # would re-run the whole upstream pair-detection pipeline.
     both = (
         edges.unionByName(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
         .distinct()
@@ -646,11 +643,7 @@ def neardup_clusters(
         )
         # One checkpointed frame carries both the new label and the
         # did-it-move flag, so convergence detection is a cheap count on
-        # materialized data instead of a second join per round. The
-        # checkpoint is LAZY: the convergence count is a full aggregate
-        # over the frame, so ONE job both materializes the round's
-        # blocks and returns the count, with no separate checkpoint job
-        # per round.
+        # materialized data instead of a second join per round.
         new_labels = (
             labels.join(neigh, labels.id == neigh.dst, "left")
             .select(
@@ -734,9 +727,6 @@ def incremental_cluster_update(
     # endpoint → supernode: old endpoints contract to their cluster
     # label; batch endpoints (no label row) stay their own supernode.
     # The tiny endpoint set broadcasts, the label table streams map-side.
-    # Lazy checkpoint: both consumers are broadcast builds (full
-    # materialization), so the first broadcast's job stores the blocks
-    # and the second reuses them — no separate eager-checkpoint job.
     sup = (
         labels.join(F.broadcast(ends), labels.id == F.col("eid"), "inner")
         .select(F.col("eid"), F.col("label").alias("sup"))
@@ -846,6 +836,7 @@ def retract_from_cluster_state(
     """
     dset = deleted.select(F.col(id_col).alias("did")).distinct()
     lab = old_labels.select(F.col(id_col).alias("id"), "cluster_id")
+    # eager: cluster_purge_state rewrites the label state these read
     affected = (
         lab.join(F.broadcast(dset), lab.id == F.col("did"), "inner")
         .select(F.col("cluster_id").alias("acid"))
@@ -924,38 +915,6 @@ def dedup_corpus(
     return docs.join(keepers, id_col, "left_semi")
 
 
-def _materialize(df: DataFrame, durable: bool) -> DataFrame:
-    """Shared materialization point of the one-shot prefix/blocked
-    tiers' reused intermediates (the token-set frame and the prefix
-    postings — between them they feed the df aggregate, the hot-posting
-    probe, the candidate join AND the exact verify, so recomputing them
-    per consumer would repeat the CPU-bound tokenize/rank stages).
-
-    ``durable=False`` (default): lazy ``localCheckpoint`` — the
-    measured-fastest shape at sandbox scale, but LINEAGE-FREE: on a
-    real cluster an executor loss mid-query kills the job instead of
-    recomputing the lost blocks. ``durable=True``:
-    ``persist(DISK_ONLY)`` — blocks live on executor disk WITH lineage
-    retained, so a lost executor recomputes its partitions and the
-    query survives; the sf0.1 delta
-    vs the checkpoint shape is near-zero (SCALING part 23). Values are
-    identical either way — the flag changes fault-tolerance, never
-    results — so the τ-boundary battery runs bit-identically through
-    both paths (tests/test_blocked_join_boundaries.py). Long-lived
-    sessions calling durable=True in a loop should unpersist via
-    ``spark.catalog.clearCache()`` between calls; the blocks also age
-    out under the LRU store, unlike checkpoint blocks."""
-    if durable:
-        from pyspark.storagelevel import StorageLevel
-
-        return df.persist(StorageLevel.DISK_ONLY)
-    # Lazy: every _materialize consumer chain opens with the
-    # hot-posting guard, a FULL-scan aggregate, so that job materializes
-    # the blocks instead of a dedicated eager-checkpoint job per frame
-    # (the lazy-checkpoint contract of graph.checkpoint_edges).
-    return df.localCheckpoint(eager=False)
-
-
 def blocked_jaccard_pairs(
     df: DataFrame,
     text_col: str,
@@ -1000,10 +959,17 @@ def blocked_jaccard_pairs(
     pair sharing two blocks returns one row per block — never a
     cross-membership mixture.
 
-    ``durable=True`` swaps the reused intermediates' lazy
-    localCheckpoint for ``persist(DISK_ONLY)`` — identical values,
-    lineage retained for executor-loss recovery (see
-    :func:`_materialize` for the full fault-tolerance contract).
+    The reused intermediates (the token sets and the prefix postings)
+    are materialized once: by default a lazy ``localCheckpoint``, which
+    is lineage-free, so on a real cluster an executor lost mid-query
+    fails the job instead of recomputing its blocks. ``durable=True``
+    keeps them with ``persist(DISK_ONLY)`` instead: blocks on executor
+    disk WITH lineage, so a lost executor recomputes its partitions; the
+    sf0.1 cost is near zero (SCALING part 23). Values are identical
+    either way (tests/test_blocked_join_boundaries.py runs the τ battery
+    through both). Long-lived sessions calling ``durable=True`` in a
+    loop should clear them with ``spark.catalog.clearCache()`` between
+    calls; they also age out under the LRU store.
 
     Returns ``(doc1, doc2, jaccard)`` with jaccard ≥ threshold, rounded
     to 4 decimals, doc1 < doc2, pairs within a block only.
@@ -1314,7 +1280,9 @@ def containment_pairs(
     # set, and the survivors feed sizes plus BOTH sides of the pair
     # join — exchange reuse does not dedupe those branches, so without
     # materialization the CPU-bound shingle/md5 stage recomputes up to
-    # 4×. Same localCheckpoint discipline as simhash's bucket frame.
+    # 4×.
+    # eager: fits neither clause of the session.py contract; lazy is
+    # untested here.
     per_doc = (
         spread_small_input(df)
         .select(
@@ -1399,10 +1367,10 @@ def prefix_jaccard_pairs(
     every pair with true shingle-Jaccard ≥ τ, no sketch recall loss.
     ``shingles=False`` switches to unigram token sets.
 
-    ``durable=True`` swaps the reused intermediates' lazy
-    localCheckpoint for ``persist(DISK_ONLY)`` — identical values,
-    lineage retained for executor-loss recovery (see
-    :func:`_materialize` for the full fault-tolerance contract).
+    ``durable=True`` keeps the reused intermediates with
+    ``persist(DISK_ONLY)`` instead of a lazy localCheckpoint — identical
+    values, lineage retained for executor-loss recovery (see
+    :func:`blocked_jaccard_pairs` for the fault-tolerance contract).
 
     Returns ``(doc1, doc2, jaccard)``, doc1 < doc2, jaccard ≥ τ.
     """
@@ -1568,18 +1536,23 @@ def _ppjoin_self_join(
     candidate equi-join on ``(*group_cols, tok)`` with the lossless size
     and positional prunes in the join condition, and the exact Jaccard
     verify within the group. The set frame and the postings are
-    materialized (:func:`_materialize`, honoring ``durable``): the sets
-    feed the df aggregate, the postings and both verify sides, and the
-    postings feed the guard and both join sides."""
+    materialized (``durable`` picks the level, see
+    :func:`blocked_jaccard_pairs`): the sets feed the df aggregate, the
+    postings and both verify sides, and the postings feed the guard and
+    both join sides."""
+
+    def pin(df: DataFrame) -> DataFrame:
+        return df.persist(StorageLevel.DISK_ONLY) if durable else df.localCheckpoint(eager=False)
+
     tau = threshold - 1e-4  # filters honor the round-then-threshold contract
     g = list(group_cols)
-    t = _materialize(sets, durable)
+    t = pin(sets)
     dfreq = (
         t.select(*g, F.explode("toks").alias("tok"))
         .groupBy(*g, "tok")
         .agg(F.count(F.lit(1)).alias("df"))
     )
-    prefix = _materialize(postings_from_sets(t, tau, dfreq=dfreq, group_cols=group_cols), durable)
+    prefix = pin(postings_from_sets(t, tau, dfreq=dfreq, group_cols=group_cols))
     _assert_posting_cap(prefix, (*g, "tok"), max_prefix_posting, what)
 
     a, b = prefix.alias("a"), prefix.alias("b")
@@ -1636,6 +1609,8 @@ def _ppjoin_incremental(
     joins sets by doc id alone."""
     tau = threshold - 1e-4
     g = ("block",) if block_col else ()
+    # eager: fits neither clause of the session.py contract; lazy is
+    # untested here.
     to = _token_sets(old, text_col, id_col, block_col, shingles).localCheckpoint(eager=True)
     tn = _token_sets(new, text_col, id_col, block_col, shingles).localCheckpoint(eager=True)
     if block_col:
@@ -1820,47 +1795,28 @@ def edit_neardup_pairs(
     Returns ``(a, b, lev, na, nb)``: representative (min) ids of the
     two distinct titles, their edit distance (always 1 — identical
     titles collapsed), and each title's exact-duplicate group size.
-    The result is MATERIALIZED (eager localCheckpoint — it is
-    bounded by the true near-duplicate pair count, small by contract)
-    so the key-space-sized distinct-title cache can be unpersisted
-    before returning instead of pinning a cached frame per call for
-    the session lifetime; the candidate/verify plan executes here."""
-    # persist (spillable), not localCheckpoint: the distinct-title frame
-    # feeds the key builders and both verify sides and would otherwise
-    # re-derive the corpus scan + dedup per consumer; it is
-    # key-space-sized, so cache with disk spill and release it in the
-    # finally instead of pinning heap blocks.
-    t = _edit_distinct_titles(df, id_col, title_col).persist()
-    try:
-        # lazy ckpt: the guard's full-scan aggregate materializes the
-        # index keys inside its own job; the candidate join then reads
-        # blocks instead of re-deriving the key expansion.
-        idx = _edit_index_keys(t, "tid").localCheckpoint(eager=False)
-        _edit_hot_key_guard(idx, hot_key_cap, "edit_neardup_pairs")
-        cand = (
-            idx.join(_edit_probe_keys(t, "pid"), ["chunk", "clen", "sub"])
-            .filter(F.col("tid") != F.col("pid"))
-            .select(F.least("tid", "pid").alias("a"), F.greatest("tid", "pid").alias("b"))
-            .distinct()
-        )
-        ta = t.select(
-            F.col("tid").alias("a"), F.col("tt").alias("__ta"), F.col("grp").alias("na")
-        )
-        tb = t.select(
-            F.col("tid").alias("b"), F.col("tt").alias("__tb"), F.col("grp").alias("nb")
-        )
-        out = (
-            cand.join(ta, "a")
-            .join(tb, "b")
-            .withColumn("lev", F.levenshtein("__ta", "__tb").cast("int"))
-            .filter(F.col("lev") <= 1)
-            .select("a", "b", "lev", "na", "nb")
-        )
-        # materialize before the unpersist (bounded by the true near-dup
-        # pair count — the small-frame side of the checkpoint rule)
-        return out.localCheckpoint(eager=True)
-    finally:
-        t.unpersist()
+    The result is LAZY: the hot-key guard runs here, and the candidate
+    join and verify run in the caller's action. The distinct-title frame
+    feeds the key builders and both verify sides, so it is checkpointed
+    once instead of re-deriving the corpus scan and dedup per consumer."""
+    t = _edit_distinct_titles(df, id_col, title_col).localCheckpoint(eager=False)
+    idx = _edit_index_keys(t, "tid").localCheckpoint(eager=False)
+    _edit_hot_key_guard(idx, hot_key_cap, "edit_neardup_pairs")
+    cand = (
+        idx.join(_edit_probe_keys(t, "pid"), ["chunk", "clen", "sub"])
+        .filter(F.col("tid") != F.col("pid"))
+        .select(F.least("tid", "pid").alias("a"), F.greatest("tid", "pid").alias("b"))
+        .distinct()
+    )
+    ta = t.select(F.col("tid").alias("a"), F.col("tt").alias("__ta"), F.col("grp").alias("na"))
+    tb = t.select(F.col("tid").alias("b"), F.col("tt").alias("__tb"), F.col("grp").alias("nb"))
+    return (
+        cand.join(ta, "a")
+        .join(tb, "b")
+        .withColumn("lev", F.levenshtein("__ta", "__tb").cast("int"))
+        .filter(F.col("lev") <= 1)
+        .select("a", "b", "lev", "na", "nb")
+    )
 
 
 def _edit_chunk_key(chunk: int, clen: Column, sub: Column) -> Column:
@@ -1959,37 +1915,29 @@ def incremental_edit_neardup(
     candidate join + exact ``levenshtein`` verify of the survivors.
     The streaming twin with PERSISTED postings is
     streaming.windows::edit_ingest_sink (stream==batch asserted in
-    tests). Returns ``(new_id, old_id, lev, n_old)``."""
-    t_old = _edit_distinct_titles(old, id_col, title_col).persist()
-    try:
-        # lazy ckpt: the guard's full-scan aggregate materializes the
-        # key frame inside its own job; the candidate join then reads
-        # blocks instead of re-deriving the key expansion.
-        idx = _edit_index_keys(t_old, "old_id").localCheckpoint(eager=False)
-        _edit_hot_key_guard(idx, hot_key_cap, "incremental_edit_neardup")
-        # lazy: first consumer is the probe broadcast build (full).
-        t_new = new.select(
-            F.col(id_col).alias("tid"), F.col(title_col).alias("tt")
-        ).localCheckpoint(eager=False)
-        probes = _edit_probe_keys(t_new, "new_id")
-        cand = (
-            idx.join(F.broadcast(probes), ["chunk", "clen", "sub"])
-            .select("new_id", "old_id")
-            .distinct()
-        )
-        to = t_old.select(
-            F.col("tid").alias("old_id"), F.col("tt").alias("__to"), F.col("grp").alias("n_old")
-        )
-        tn = t_new.select(F.col("tid").alias("new_id"), F.col("tt").alias("__tn"))
-        out = (
-            cand.join(to, "old_id")
-            .join(F.broadcast(tn), "new_id")
-            .withColumn("lev", F.levenshtein("__tn", "__to").cast("int"))
-            .filter(F.col("lev") <= 1)
-            .select("new_id", "old_id", "lev", "n_old")
-        )
-        # materialized for the same reason as the one-shot: release the
-        # corpus-keyed cache instead of pinning it per call
-        return out.localCheckpoint(eager=True)
-    finally:
-        t_old.unpersist()
+    tests). Returns ``(new_id, old_id, lev, n_old)``. The result is
+    LAZY, as in the one-shot: the hot-key guard runs here, and the
+    candidate join and verify run in the caller's action."""
+    t_old = _edit_distinct_titles(old, id_col, title_col).localCheckpoint(eager=False)
+    idx = _edit_index_keys(t_old, "old_id").localCheckpoint(eager=False)
+    _edit_hot_key_guard(idx, hot_key_cap, "incremental_edit_neardup")
+    t_new = new.select(
+        F.col(id_col).alias("tid"), F.col(title_col).alias("tt")
+    ).localCheckpoint(eager=False)
+    probes = _edit_probe_keys(t_new, "new_id")
+    cand = (
+        idx.join(F.broadcast(probes), ["chunk", "clen", "sub"])
+        .select("new_id", "old_id")
+        .distinct()
+    )
+    to = t_old.select(
+        F.col("tid").alias("old_id"), F.col("tt").alias("__to"), F.col("grp").alias("n_old")
+    )
+    tn = t_new.select(F.col("tid").alias("new_id"), F.col("tt").alias("__tn"))
+    return (
+        cand.join(to, "old_id")
+        .join(F.broadcast(tn), "new_id")
+        .withColumn("lev", F.levenshtein("__tn", "__to").cast("int"))
+        .filter(F.col("lev") <= 1)
+        .select("new_id", "old_id", "lev", "n_old")
+    )

@@ -22,55 +22,19 @@ Scale notes (100 TB): edges are shuffled on ``src`` once into
 degree table again). In :func:`pagerank` that subtree stays lazy —
 Catalyst's ReuseExchange executes it once and every iteration re-reads
 the shuffle files (an eager checkpoint measured 2.8× SLOWER at ×100,
-see SCALING.md round-5 A/B). :func:`personalized_pagerank` and
-:func:`label_propagation` eagerly spill-checkpoint their edge frames
-(:func:`checkpoint_edges`) where that shape measured fine. Each
-iteration re-shuffles only the O(|V|) rank vector, never the O(|E|)
-edge list; for deep iteration counts checkpoint the RANK vector every
-~10 rounds.
+see SCALING.md round-5 A/B). :func:`personalized_pagerank`,
+:func:`label_propagation` and :func:`kcore` checkpoint their edge
+frames where that shape measured fine. Each iteration re-shuffles only
+the O(|V|) rank vector, never the O(|E|) edge list; for deep iteration
+counts checkpoint the RANK vector every ~10 rounds.
 """
 
 from __future__ import annotations
 
-from pyspark.storagelevel import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 SCALE = 1_000_000_000  # fixed-point: rank 1.0 == 10^9
-
-
-def checkpoint_edges(df: DataFrame, eager: bool = False) -> DataFrame:
-    """localCheckpoint with a SPILLABLE storage level. The edge set is
-    O(|E|) — at x100 scale the default deserialized on-heap blocks OOM
-    a 48g driver (measured: the serialized+spill level runs the same
-    sweep in bounded memory). Iteration cost is unchanged: the blocks
-    stay in memory when they fit and page to disk when they don't,
-    exactly what a cluster executor would do.
-
-    LAZY by default since r12 (guide §1.2 step 1 — fewer job
-    barriers): materialization folds into the first consuming job
-    instead of paying a separate eager job per checkpoint; blocks,
-    lineage truncation and every downstream read are identical.
-    Measured on copurchase_kcore's 3 per-round checkpoints: 5.92 →
-    5.17 s wall (interleaved A/B, identical output).
-
-    LAZY-CHECKPOINT CONTRACT (corrected r13 per the r12 advice, and
-    re-verified on this Spark): lazy is COMPLETE after ANY first
-    action — even a ``limit`` probe — because Spark backfills the
-    missing partitions with its own job at the end of that first
-    action (LocalRDDCheckpointData.doCheckpoint runs over the
-    partitions the action skipped; measured: probe job + backfill job,
-    then full reads succeed). Two real caveats remain: (1) COST — under
-    a probe-first consumer lazy saves nothing (probe + backfill ≈ the
-    eager job), so probe-heavy sites (the LSH hot-bucket pattern) keep
-    ``eager=True`` for cost attribution, not correctness; (2)
-    DETERMINISM — values pin only when the FIRST action materializes
-    them; a frame whose upstream is nondeterministic (rand(), changing
-    source files, tie-broken limits) and whose consumers could race to
-    materialize different partitions in concurrent AQE stages must stay
-    eager so the pin happens at a single well-defined point. Every
-    call site here has a deterministic upstream."""
-    return df.localCheckpoint(eager=eager, storageLevel=StorageLevel.MEMORY_AND_DISK)
 
 
 def undirected_to_directed(pairs: DataFrame, m1: str, m2: str, w: str) -> DataFrame:
@@ -169,9 +133,7 @@ def personalized_pagerank(
     the seeds, not the whole graph.
     """
     outw = edges.groupBy("src").agg(F.sum("w").cast("long").alias("ow"))
-    edge_norm = (
-        checkpoint_edges(edges.join(outw, "src").select("src", "dst", "w", "ow"))
-    )
+    edge_norm = edges.join(outw, "src").select("src", "dst", "w", "ow").localCheckpoint(eager=False)
     # outw is already one row per node — reuse its count instead of a
     # second distinct pass over the checkpointed edges.
     return personalized_pagerank_prenorm(
@@ -248,12 +210,12 @@ def label_propagation(edges: DataFrame, iterations: int = 2) -> DataFrame:
     synchronous (Jacobi) update is part of the contract: asynchronous
     LPA is partition-order-dependent and could never be oracle-checked.
 
-    Scale: edges are eagerly checkpointed once (the upstream pair
+    Scale: edges are checkpointed once (the upstream pair
     generation never rides in iteration lineage — same discipline as
     :func:`pagerank`); each round is one |E|-row join + two aggregates
     shuffling on node keys, and the label vector stays O(|V|).
     """
-    edges = checkpoint_edges(edges)
+    edges = edges.localCheckpoint(eager=False)
     labels = (
         edges.select(F.col("src").alias("node")).distinct().withColumn("label", F.col("node"))
     )
@@ -271,9 +233,7 @@ def label_propagation(edges: DataFrame, iterations: int = 2) -> DataFrame:
     return labels
 
 
-def bfs_hops(
-    edges: DataFrame, seeds: DataFrame, max_hops: int = 3, checkpoint_every: int = 0
-) -> DataFrame:
+def bfs_hops(edges: DataFrame, seeds: DataFrame, max_hops: int = 3) -> DataFrame:
     """Minimum-hop distance from a seed set over directed ``(src, dst,
     w)`` edges: returns ``(node, hop)`` for every node reachable in at
     most ``max_hops`` hops (seeds at hop 0). The canonical frontier
@@ -286,16 +246,14 @@ def bfs_hops(
     reachable, and rounds are synchronous barriers), so any engine
     running level-synchronous BFS agrees exactly.
 
-    Scale (100 TB): by default the whole traversal stays LAZY — one
+    Scale (100 TB): the whole traversal stays LAZY — one
     Catalyst plan in which the IDENTICAL edge subtree recurs every
     round and ReuseExchange executes it once (the pagerank shape; the
     measured A/B at sf0.1 has lazy at 6.1 s vs 7.8 s for per-round
     eager checkpoints, and at ×100 at 114 s vs 269 s — see SCALING.md).
     Frontier *i*'s subtree nests inside frontier *i+1* and visited, so
-    plan DEPTH grows linearly with hops: for high-diameter sweeps set
-    ``checkpoint_every`` (e.g. 5) to spill-checkpoint the frontier
-    periodically, bounding lineage exactly as the PageRank rank-vector
-    discipline does. Visited stays O(reached nodes).
+    plan DEPTH grows linearly with hops, which the small ``max_hops``
+    of a seeded sweep keeps shallow. Visited stays O(reached nodes).
 
     Both per-round joins pin SHUFFLE_HASH on the vertex-sized side
     (frontier / visited): those frames are O(|V|) once the sweep
@@ -316,10 +274,6 @@ def bfs_hops(
             .distinct()
             .join(visited.select("node").hint("shuffle_hash"), "node", "left_anti")
         )
-        if checkpoint_every and i % checkpoint_every == 0:
-            nxt = nxt.localCheckpoint(
-                eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK
-            )
         visited = visited.unionByName(nxt.select("node", F.lit(i).alias("hop")))
         frontier = nxt
     return visited
@@ -343,10 +297,10 @@ def kcore(edges: DataFrame, k: int, rounds: int = 3) -> DataFrame:
 
     Scale: each round is two semi-joins (edge set restricted by the
     alive set, both hash-partitioned on node keys) + one count
-    aggregate; the edge frame is spill-checkpointed per round so round
+    aggregate; the edge frame is checkpointed per round so round
     r's lineage does not re-derive rounds 0..r-1. Alive sets are O(|V|)
     and shrink monotonically."""
-    edges = checkpoint_edges(edges.select("src", "dst"))
+    edges = edges.select("src", "dst").localCheckpoint(eager=False)
     for _ in range(rounds):
         deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("c"))
         alive = deg.filter(F.col("c") >= k).select("src")
@@ -354,6 +308,6 @@ def kcore(edges: DataFrame, k: int, rounds: int = 3) -> DataFrame:
             edges.join(alive, "src", "left_semi")
             .join(alive.withColumnRenamed("src", "dst"), "dst", "left_semi")
         )
-        edges = checkpoint_edges(edges)
+        edges = edges.localCheckpoint(eager=False)
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).cast("long").alias("degree"))
     return deg.filter(F.col("degree") >= k).select(F.col("src").alias("node"), "degree")

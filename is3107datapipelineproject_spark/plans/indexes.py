@@ -532,16 +532,12 @@ def edge_table_append(
     Pass None for either to opt out (e.g. when an orchestrator owns
     the compaction schedule, or for demo surfaces that must preserve
     the merge-on-read state)."""
-    # Materialize the batch ONCE (batch-sized, the small-frame side of
-    # the checkpoint rule): the arc write and the touched-pb log must
-    # see the SAME rows — re-evaluating a nondeterministic source
+    # Materialize the batch ONCE: the arc write and the touched-pb log
+    # must see the SAME rows — re-evaluating a nondeterministic source
     # (sample(), changing files) between the two jobs could dirty a
     # partition the log never hears about, leaving its edges stale with
-    # no error. Deliberately EAGER (r13 lazy sweep skipped this site):
-    # the upstream may be nondeterministic, which is exactly the
-    # determinism clause of the lazy-checkpoint contract
-    # (graph.checkpoint_edges) — the pin must happen at one
-    # well-defined point before either state-mutating write.
+    # no error.
+    # eager: pins the batch before either state write
     batch = new_lineitem.select("l_orderkey", "l_partkey").localCheckpoint(eager=True)
     # Log touched pbs BEFORE appending the arcs: a crash between the
     # two jobs must err toward an extra logged pb (an idempotent
@@ -631,6 +627,7 @@ def edge_table_retract(
     order that was never ingested) is a caller error: the positive
     filter hides the negative residue from consumers, so pair it with a
     dq_constraints-style audit if the deletion feed is untrusted."""
+    # eager: pins the batch before either state write
     batch = deleted_lineitem.select("l_orderkey", "l_partkey").localCheckpoint(
         eager=True
     )

@@ -12,6 +12,30 @@ defaults below are the ones that matter at that scale and are harmless on
 - UTC session timezone so date/timestamp semantics are deterministic
   regardless of host configuration (and so naive/NTZ parquet timestamps
   cast to ``timestamp`` without shifting the wall-clock value).
+
+Materialization contract. An intermediate that several consumers read
+is kept with ``DataFrame.localCheckpoint`` at Spark's default storage
+level: memory and disk, deserialized, so it spills, and its in-memory
+blocks cost no decode per read but take about 12× the serialized size
+(measured on the k-core edge frames). No site picks another level,
+except ``durable=True`` in the prefix-filter dedup tiers, which keeps
+lineage with ``persist(DISK_ONLY)``.
+
+- Lazy (``eager=False``) by default: the first action that reads the
+  frame stores its blocks, with no job of its own (under AQE, building
+  the checkpoint still runs the map stages of the frame's own
+  shuffles). The checkpoint is complete after ANY first action, even a
+  ``limit`` probe, because Spark backfills the skipped partitions at
+  the end of that action.
+- Eager only (a) to pin values at one point before a state write, so
+  every later write sees the same rows, or (b) under a probe-first
+  consumer, where lazy saves nothing (probe plus backfill costs what
+  the eager job does). Each eager site says which, in one line.
+- Determinism: a lazy frame's values pin when its first action
+  materializes them. A frame whose upstream is nondeterministic
+  (``rand()``, source files that change, tie-broken limits) and whose
+  consumers could materialize different partitions in concurrent
+  stages must be eager, so the pin happens at one point.
 """
 
 from __future__ import annotations

@@ -389,11 +389,6 @@ def neardup_ingest_sink(
 
     def apply(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        # lazy (r13 sink sweep): both consumers — the pairs join's
-        # broadcast build and the bands append — scan every partition,
-        # so the first write job materializes the blocks; one fewer job
-        # per micro-batch. batch_df is pinned to the epoch's offsets,
-        # satisfying the determinism clause (graph.checkpoint_edges).
         nb = band_signature_frame(batch_df, text_col, id_col, k).localCheckpoint(eager=False)
         state = L.read_earlier(spark, batch_id, [sig_dir], owned=[pairs_dir])
         if state is not None:
@@ -653,8 +648,6 @@ def _exact_ingest_sink(
         spark = batch_df.sparkSession
         what = f"{name}: batch {batch_id}"
         sets_b, postings_b = frames(batch_df)
-        # lazy (r13 sink sweep): first consumers are the one-row-per-doc
-        # guard and the hot-posting guard — full-scan aggregates.
         sets_b = sets_b.localCheckpoint(eager=False)
         postings_b = postings_b.localCheckpoint(eager=False)
         _assert_one_row_per_doc(sets_b, what)
@@ -759,9 +752,6 @@ def edit_ingest_sink(
     def apply(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         L.assert_no_purge_intent(spark, titles_dir, "edit_ingest_sink")
-        # lazy (r13 sink sweep): every consumer of these per-batch
-        # frames (probe broadcast build, guard aggregates, the state
-        # appends) is a full scan; the first job materializes each.
         b = _edit_distinct_titles(batch_df, id_col, title_col).localCheckpoint(eager=False)
         keys_b = _edit_index_keys(b, "tid").localCheckpoint(eager=False)
         t_new = batch_df.select(
@@ -783,7 +773,6 @@ def edit_ingest_sink(
                 corpus_keys.withColumnRenamed("tid", "old_id")
                 .join(F.broadcast(probes), ["chunk", "clen", "sub"])
                 .join(to, "old_id")
-                # lazy: first consumer is the hot-key guard's full agg
                 .localCheckpoint(eager=False)
             )
             hot = (
@@ -999,12 +988,8 @@ def edit_purge_state(
             )
     else:
         dset = dset.unionByName(pending.toDF("did", "dtt")).distinct()
-    # deliberately EAGER (r13 sink sweep skipped the purge pins): the
-    # crash protocol stages dset via write_purge_intent and every later
-    # rewrite must drop EXACTLY the staged set — pin at one well-defined
-    # point before any state mutation (the determinism clause of the
-    # lazy-checkpoint contract); the cost is one tiny job per
-    # governance batch, not per ingest.
+    # eager: write_purge_intent stages dset and every later rewrite must
+    # drop exactly that set, so it is pinned before any state write.
     dset = dset.localCheckpoint(eager=True)
     L.write_purge_intent(spark, titles_dir, dset)
     dids = dset.select("did")
@@ -1136,7 +1121,7 @@ def cluster_ingest_sink(
         # hot-band sub-banding tier (pairs_from_band_table).
         nb = band_signature_frame(
             batch_df, text_col, id_col, k, with_sig=True
-        ).localCheckpoint(eager=False)  # lazy (r13 sink sweep): all consumers full-scan
+        ).localCheckpoint(eager=False)
         state = L.read_earlier(spark, batch_id, [sig_dir], owned=[labels_dir])
         edges = minhash_neardup_pairs(
             batch_df, text_col, id_col, k=k, threshold=threshold
@@ -1270,13 +1255,13 @@ def cluster_purge_state(
         # set in, so this run completes BOTH purges (exact — purges
         # compose by union) before the marker clears.
         dset = dset.unionByName(pending.toDF("did")).distinct()
-    # deliberately EAGER — purge pin, see edit_purge_state's note.
+    # eager: pins the purge set before any state write
     dset = dset.localCheckpoint(eager=True)
     L.write_purge_intent(spark, labels_dir, dset)
     # the labels pre-merge re-derives affected pairs from the PRE-purge
-    # band table: safe lazily (no corpus-sized checkpoint — the round-8
-    # convention) because the labels rewrite completes before the bands
-    # dir is touched, in program order below.
+    # band table: safe without a corpus-sized checkpoint because the
+    # labels rewrite completes before the bands dir is touched, in
+    # program order below.
     # mergeSchema: a mixed-era band table (legacy 3-column batches +
     # with_sig batches) must ALWAYS surface the sig column — default
     # schema sampling may infer from a legacy file and silently drop it,
@@ -1344,7 +1329,7 @@ def purge_stream_state(
     to the frame's only column). Quiesced-stream caveat as for every
     compaction. Returns ``(files_before, files_after)``."""
     dc = deleted_col or deleted.columns[0]
-    # deliberately EAGER — purge pin, see edit_purge_state's note.
+    # eager: pins the purge set before any state write
     dset = deleted.select(F.col(dc).alias("__purged")).distinct().localCheckpoint(
         eager=True
     )
@@ -1415,8 +1400,6 @@ def semantic_ingest_sink(
             assign_to_centroids(batch_df, id_col, vec_col, cents)
             .select(F.col(id_col).alias("vid"), "cluster")
             .join(vn, "vid")
-            # lazy (r13 sink sweep): consumers (pairs join broadcast
-            # build, member append) are full scans
             .localCheckpoint(eager=False)
         )
         state = L.read_earlier(spark, batch_id, [members_dir], owned=[pairs_dir])

@@ -1570,11 +1570,9 @@ def q_quality_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     j = _scored_label_frame(spark, sf_dir)
     # The (cnt, pos)-per-score table is <= 10001 rows forever; checkpoint
-    # it (LAZILY, r13: distributed_cumsum's first consumer — the
-    # quantile probe — aggregates over every partition, materializing
-    # the blocks in its own job) so the multi-consumer DAG (quantile
-    # probe + local sums + bucket totals + offset join) pays the
-    # tokenize -> score -> join pipeline exactly once.
+    # it so the multi-consumer DAG (quantile probe + local sums + bucket
+    # totals + offset join) pays the tokenize -> score -> join pipeline
+    # exactly once.
     g = (
         j.groupBy("p4")
         .agg(F.count(F.lit(1)).alias("cnt"), F.sum("lbl").alias("pos"))
@@ -1746,8 +1744,6 @@ def q_kneser_ney_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     cb = (
         bg.groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).alias("c"))
-        # lazy (r13): consumers (cp, pr, tot aggregates + score join)
-        # all scan every partition; the first materializes the blocks.
         .localCheckpoint(eager=False)
     )
     cp = cb.groupBy("w1").agg(

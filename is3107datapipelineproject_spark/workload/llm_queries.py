@@ -536,12 +536,9 @@ def q_incremental_neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFram
     cluster_ingest_sink maintains.)
 
     The three MinHash tiers (old×old pairs, new×old incremental join,
-    new×new batch pairs) share ONE signature pass (r13, guide §1.2
-    step 1): minhash_doc_signatures runs once over the whole corpus,
-    is localCheckpoint'd (lazy — the first consumer, the old tier's
-    band-bucket aggregate, scans every partition; signatures are a
-    deterministic row-wise function of the text, satisfying the lazy
-    contract), and each tier receives its side's filtered view. Each
+    new×new batch pairs) share ONE signature pass:
+    minhash_doc_signatures runs once over the whole corpus, is
+    localCheckpoint'd, and each tier receives its side's filtered view. Each
     side's text was previously shingled+hashed twice."""
     docs = _t(spark, sf_dir, "documents")
     new = docs.filter(F.col("doc_id") % 5 == 0)
@@ -583,8 +580,8 @@ def q_cluster_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
     production reads the persisted label table.)
 
     The corpus-wide pair build and the affected-cluster re-derivation
-    share ONE signature pass (r13; same shared-frame discipline as
-    incremental_neardup_clusters — minhash_doc_signatures once, lazy
+    share ONE signature pass (same shared-frame discipline as
+    incremental_neardup_clusters — minhash_doc_signatures once,
     localCheckpoint, filtered views per stage)."""
     docs = _t(spark, sf_dir, "documents")
     deleted = docs.filter(F.col("doc_id") % 17 == 3).select("doc_id")
@@ -1516,11 +1513,10 @@ def q_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     with TRUE/TRUE, so the row hashes only if the sketch obeys both
     bounds. Estimates are md5-hash deterministic — no flakiness.
 
-    Plan: token counts are one partial-agg shuffle (localCheckpointed
-    LAZILY, r13: all three consumers — total, top-k, sketch build — are
-    full-scan aggregates, so the first materializes the blocks in its
-    own job; the consumers must not re-tokenize
-    the corpus); the sketch is d×w = 8192 rows, broadcast for probing.
+    Plan: token counts are one partial-agg shuffle (localCheckpointed:
+    the three consumers — total, top-k, sketch build — must not
+    re-tokenize the corpus); the sketch is d×w = 8192 rows, broadcast
+    for probing.
     """
     from is3107datapipelineproject_spark.operators import sketches as K
 
@@ -3706,12 +3702,6 @@ def q_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         # plan grows multiplicatively with _MMR_K (242 exchanges / 121
         # sort-merge joins at K=5). Same inter-pass lesson as the rfm
         # multi-rank chain. The frame is bounded by queries x K rows.
-        # LAZY (r13): the greedy loop is a FIXED unroll — no driver-side
-        # convergence decision reads any round's frame — so nothing needs
-        # materializing until the final action, which computes every
-        # round's (plan-truncating) RDD once in one job instead of one
-        # eager checkpoint job per round. Upstreams are deterministic
-        # (rounded sims, id tiebreaks), satisfying the lazy contract.
         selected = selected.unionByName(pick).localCheckpoint(eager=False)
     return selected.join(cand, ["query_id", "neighbor_id"]).select(
         "query_id", F.col("step").cast("int").alias("step"), "neighbor_id", "cosine"
@@ -3786,8 +3776,6 @@ def q_embedding_release_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = s.filter(F.col("rel") == "B").select(
         "dim", F.col("sx").alias("sb"), F.col("n").alias("nb")
     )
-    # lazy (r13): both consumers (agg, top) are full-scan aggregates
-    # over the 64-row frame; the first materializes it in its own job.
     j = a.join(b, "dim").localCheckpoint(eager=False)
     agg = j.agg(
         F.max("na").cast("long").alias("n_a"),
@@ -3962,9 +3950,6 @@ def q_ivf_probe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 50)
-    # lazy (r12 discipline): the first consumer is the first sweep
-    # point's join over every exact row, which materializes the blocks
-    # inside its own job.
     exact = (
         S.cosine_topk(emb, queries, "vec_id", "embedding", k=5)
         .select("query_id", "neighbor_id")

@@ -2407,9 +2407,8 @@ def q_trend_robust_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ranked frame + bucket totals), and (3) without the cut Catalyst
     # fuses the rank's bucket-assignment expression into the pair
     # join's pushed IsNotNull predicate — a 63-cut bucket evaluation
-    # per candidate PAIR (measured on the then-interpreted fold:
-    # 92 s -> 21 s at sf0.01; the r12 when-tree shrinks the expression
-    # but the checkpoint still blocks the per-pair re-evaluation). The
+    # per candidate PAIR (the checkpoint blocks that per-pair
+    # re-evaluation). The
     # repartition matters too: AQE coalesces the tiny day aggregate to
     # ONE partition, so without it every downstream map (the bucket
     # fold over 2.9M pair rows) runs single-threaded (21 s -> ~4 s).
@@ -2426,7 +2425,7 @@ def q_trend_robust_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=False)
     )
     # S and m derive from the CHECKPOINTED slope frame, not from p —
-    # r13: `p.agg(...)` re-executed the whole day-pair broadcast NLJ a
+    # `p.agg(...)` would re-execute the whole day-pair broadcast NLJ a
     # second time. signum(s) == signum(cb - ca) exactly (every kept
     # pair has datediff >= 1 > 0 and s = (cb-ca)/datediff in float64,
     # which preserves sign and zero), so s_stat and the pair count are

@@ -178,14 +178,13 @@ def test_temperature_sample_membership_is_stable_under_growth(spark, rows, targe
 
 
 def test_lazy_local_checkpoint_backfills_after_partial_first_action(spark):
-    """The foundation of the repo-wide lazy-checkpoint contract
-    (operators/graph.py::checkpoint_edges, corrected in r13): after ANY
-    first action — even a limit probe that computes one partition —
-    Spark backfills the missing partitions at the end of that action,
-    so later full reads over the truncated lineage succeed and values
-    are pinned. Every eager→lazy conversion since r12 leans on this; if
-    a Spark upgrade ever changes it, this test fails first and the
-    whole lazy sweep must be re-audited.
+    """The foundation of the materialization contract in session.py's
+    module docstring: after ANY first action — even a limit probe that
+    computes one partition — Spark backfills the missing partitions at
+    the end of that action, so later full reads over the truncated
+    lineage succeed and values are pinned. Every lazy checkpoint in the
+    package leans on this; if a Spark upgrade ever changes it, this
+    test fails first and every lazy site must be re-audited.
 
     The values come from a nondeterministic Python UDF, so a recompute
     draws new ones: without the checkpoint the two sums differ, and
@@ -205,3 +204,21 @@ def test_lazy_local_checkpoint_backfills_after_partial_first_action(spark):
     s1 = df.agg(F.sum("x")).first()[0]
     s2 = df.agg(F.sum("x")).first()[0]
     assert s1 == s2  # values pinned at (the end of) the first action
+
+
+def test_default_local_checkpoint_level_spills_to_disk(spark):
+    """The contract keeps every checkpoint at Spark's default level
+    because that level already spills: its blocks may go to disk when
+    memory runs short, so an edge frame larger than the heap pages out
+    instead of failing. If a Spark upgrade makes the default
+    memory-only, this fails and the large frames need an explicit
+    level again."""
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    assert spark.range(100).localCheckpoint().count() == 100
+    rdds = jsc.getPersistentRDDs()
+    added = [k for k in rdds.keys() if k not in before]
+    assert added, "localCheckpoint registered no persistent RDD"
+    for k in added:
+        level = rdds[k].getStorageLevel()
+        assert level.useDisk() and level.useMemory(), level.toString()

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import os
 import re
+import time
 
 from is3107datapipelineproject_spark.workload import registry
 
@@ -163,23 +164,32 @@ _SPLIT_FAMILY = re.compile(
 _SPLIT_PROBE_EXEMPT: dict[str, str] = {}
 
 
-def test_cpu_now_counts_this_process_tree():
-    """Round-13 bench diagnostics: `_cpu_now` must be positive, monotone,
-    and actually attribute CPU burned by this process (the wall-clock
-    bench at sf0.1 is overhead-bound — the r12 verdict's scaling block —
-    so BENCH_DETAIL's per-query cpu_sec column is what makes CPU-level
-    optimizations measurable; a reader that silently returned 0 would
-    make every future round's CPU evidence vacuous)."""
+def test_bench_cpu_meter_counts_this_process_tree():
+    """`bench._timed`'s CPU column must attribute CPU burned by this
+    process: the wall-clock bench at sf0.1 is overhead-bound, so
+    BENCH_DETAIL's per-query cpu_sec column is what makes CPU-level
+    optimizations measurable, and a meter that silently returned 0 would
+    make that evidence vacuous. A stand-in query whose noop write burns
+    CPU drives the real timing loop without Spark."""
     import bench
 
-    a = bench._cpu_now()
-    assert os.getpid() in a and a[os.getpid()] > 0.0
-    acc = 0
-    while bench._cpu_delta(a, bench._cpu_now()) < 0.05:  # burn visible CPU
-        acc += sum(i * i for i in range(100_000))
-    assert bench._cpu_delta(a, bench._cpu_now()) >= 0.05
-    # pidwise diffing never goes negative, even against a shrunk tree
-    assert bench._cpu_delta(a, {}) == 0.0
+    class _Burn:
+        def __getattr__(self, _name):
+            return self
+
+        def __call__(self, *_args):
+            return self
+
+        def save(self):
+            t0 = time.process_time()
+            while time.process_time() - t0 < 0.05:  # burn visible CPU
+                sum(i * i for i in range(10_000))
+
+    wall, cpu, jobs = bench._timed(lambda _spark, _sf: _Burn(), None, "sf0.1")
+    assert cpu >= 0.05 and wall > 0.0
+    assert jobs == -1  # no Spark session: the jobs column degrades, never raises
+    # the meter is perfbench's clamped one, not a private copy
+    assert bench.proctree.__file__.endswith(os.path.join("perfbench", "proctree.py"))
 
 
 def test_every_split_family_query_has_a_probe():

@@ -177,3 +177,60 @@ def test_edit_neardup_lossless_beyond_32_chars(spark):
     assert set(out) == {(1, 2), (1, 3), (1, 4)}, out
     assert all(v[0] == 1 for v in out.values())
     assert out[(1, 2)][1] == 2, "identical titles 1 and 5 must collapse with grp=2"
+
+
+def _jobs_of(spark, group: str, action):
+    """``(Spark jobs run by action(), its result)``."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        result = action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group)), result
+
+
+def _edit_rows(spark):
+    base = "the quick brown fox jumps over the dog!"  # 40 chars
+    rows = [
+        (1, base),
+        (2, base[:20] + "Z" + base[21:]),
+        (3, base[:33] + "Z" + base[33:]),
+        (4, base[:5] + base[6:]),
+        (5, base),
+        (6, "a completely unrelated title of size 40"),
+        (7, "short one"),
+        (8, "short onx"),
+    ]
+    return spark.createDataFrame(rows, ["tid", "tt"])
+
+
+def test_edit_neardup_pairs_job_pin(spark):
+    """Call plus collect: the hot-key guard's jobs and the result's, with
+    no eager result checkpoint in between (13 jobs with it, 11 without,
+    on this input at local[4] with 8 shuffle partitions)."""
+    from is3107datapipelineproject_spark.operators.dedup import edit_neardup_pairs
+
+    df = _edit_rows(spark)
+    jobs, out = _jobs_of(
+        spark, "edit_neardup_job_pin", lambda: edit_neardup_pairs(df, "tid", "tt").collect()
+    )
+    assert len(out) == 4, out
+    assert jobs <= 11, jobs
+
+
+def test_incremental_edit_neardup_job_pin(spark):
+    """Same pin for the new×old twin: guard jobs plus the result's (13
+    jobs with the eager result checkpoint, 11 without)."""
+    from is3107datapipelineproject_spark.operators.dedup import incremental_edit_neardup
+
+    df = _edit_rows(spark)
+    old, new = df.filter("tid % 2 = 1"), df.filter("tid % 2 = 0")
+    jobs, out = _jobs_of(
+        spark,
+        "incremental_edit_neardup_job_pin",
+        lambda: incremental_edit_neardup(old, new, "tid", "tt").collect(),
+    )
+    assert len(out) == 3, out
+    assert jobs <= 11, jobs

@@ -4,13 +4,20 @@ Breaks the bench's timed span into its two components — driver-side
 plan construction (the ``fn(spark, sf_dir)`` call: Python DSL build,
 any eager driver jobs like approxQuantile probes or guard collects)
 and distributed execution (the noop-sink write) — and optionally dumps
-``.explain("formatted")`` for plan evidence. Uses the exact bench
-methodology (warm-up run, then a timed fresh-plan run) so numbers are
-comparable with BENCH_DETAIL.json rows.
+plan evidence. Uses the exact bench methodology (warm-up run, then a
+timed fresh-plan run) so numbers are comparable with BENCH_DETAIL.json
+rows.
+
+``--explain DIR`` writes two files per query. ``DIR/q.txt`` is the
+final DataFrame's ``.explain("formatted")``. ``DIR/q.executions.txt``
+holds every SQL execution of the timed run(s), read back from the
+session's event log: the plan at execution start and the last adaptive
+(AQE) update. Eager driver jobs (guards, probes, eager checkpoints)
+run as executions of their own, so only the second file shows them.
 
 Usage:
     python tools/qprof.py q1,q2,...            # profile named queries
-    python tools/qprof.py q1 --explain DIR     # also write DIR/q1.txt
+    python tools/qprof.py q1 --explain DIR     # also write DIR/q1.txt, DIR/q1.executions.txt
     python tools/qprof.py --top N              # slowest N from BENCH_DETAIL.json
 """
 
@@ -20,7 +27,10 @@ import argparse
 import io
 import json
 import os
+import shlex
+import shutil
 import sys
+import tempfile
 import time
 
 HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -36,6 +46,33 @@ def _explain_str(df) -> str:
     finally:
         sys.stdout = stdout
     return buf.getvalue()
+
+
+_SQL_START = "org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart"
+_SQL_AQE = "org.apache.spark.sql.execution.ui.SparkListenerSQLAdaptiveExecutionUpdate"
+
+
+def _execution_plans(log_dir: str) -> dict[str, list[tuple[int, str, str]]]:
+    """``description -> [(execution id, start plan, last AQE plan)]`` from
+    the uncompressed event log(s) in ``log_dir``; the description is the
+    job description set when the execution started."""
+    start: dict[int, tuple[str, str]] = {}
+    final: dict[int, str] = {}
+    for name in sorted(os.listdir(log_dir)):
+        with open(os.path.join(log_dir, name)) as f:
+            for line in f:
+                if _SQL_START not in line and _SQL_AQE not in line:
+                    continue
+                ev = json.loads(line)
+                if ev["Event"] == _SQL_START:
+                    start[ev["executionId"]] = (ev["description"], ev["physicalPlanDescription"])
+                elif ev["Event"] == _SQL_AQE:
+                    final[ev["executionId"]] = ev["physicalPlanDescription"]
+    out: dict[str, list[tuple[int, str, str]]] = {}
+    for eid in sorted(start):
+        desc, plan = start[eid]
+        out.setdefault(desc, []).append((eid, plan, final.get(eid, plan)))
+    return out
 
 
 def main() -> None:
@@ -56,6 +93,19 @@ def main() -> None:
             for k, _ in sorted(det["queries"].items(), key=lambda kv: -kv[1])[: args.top]
             if k not in names
         ]
+
+    log_dir = ""
+    if args.explain:
+        # Plain-text event log, set before the JVM starts (the confs are static).
+        log_dir = tempfile.mkdtemp(prefix="qprof-eventlog-")
+        confs = {
+            "spark.eventLog.enabled": "true",
+            "spark.eventLog.dir": "file://" + log_dir,
+            "spark.eventLog.compress": "false",
+            "spark.eventLog.rolling.enabled": "false",
+        }
+        submit = [a for k, v in confs.items() for a in ("--conf", f"{k}={v}")]
+        os.environ["PYSPARK_SUBMIT_ARGS"] = shlex.join(submit + ["pyspark-shell"])
 
     from is3107datapipelineproject_spark.session import get_spark
     from is3107datapipelineproject_spark.workload import registry
@@ -85,11 +135,20 @@ def main() -> None:
         total, t_plan, t_exec = best
         print(f"{name:35s} {t_plan:7.3f} {t_exec:7.3f} {total:8.3f}", flush=True)
         if args.explain:
+            spark.sparkContext.setJobDescription(f"qprof explain: {name}")
             os.makedirs(args.explain, exist_ok=True)
             with open(os.path.join(args.explain, f"{name}.txt"), "w") as f:
                 f.write(_explain_str(fn(spark, args.sf)))
         spark.sparkContext.setJobDescription(None)
-    spark.stop()
+    spark.stop()  # flushes the event log
+    if log_dir:
+        plans = _execution_plans(log_dir)
+        for name in names:
+            with open(os.path.join(args.explain, f"{name}.executions.txt"), "w") as f:
+                for eid, first, last in plans.get(f"qprof timed: {name}", []):
+                    f.write(f"== execution {eid}: start ==\n{first}\n")
+                    f.write(f"== execution {eid}: last AQE update ==\n{last}\n\n")
+        shutil.rmtree(log_dir, ignore_errors=True)
 
 
 if __name__ == "__main__":
