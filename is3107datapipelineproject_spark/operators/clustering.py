@@ -391,6 +391,7 @@ def semantic_dedup(
     families and ``max_block`` in fuzzy matching; the oracle replays the
     identical routing, so correctness checking stays exact.
     """
+    # lazy is deterministic here: kmeans init orders by the unique vid
     asg = kmeans_assign(df, id_col, vec_col, k=k, iters=iters).localCheckpoint(eager=False)
     vecs = df.select(
         F.col(id_col).alias("vid"), F.col(vec_col).cast("array<double>").alias("vec")

@@ -23,18 +23,31 @@ degree table again). In :func:`pagerank` that subtree stays lazy —
 Catalyst's ReuseExchange executes it once and every iteration re-reads
 the shuffle files (an eager checkpoint measured 2.8× SLOWER at ×100,
 see SCALING.md round-5 A/B). :func:`personalized_pagerank`,
-:func:`label_propagation` and :func:`kcore` checkpoint their edge
-frames where that shape measured fine. Each iteration re-shuffles only
-the O(|V|) rank vector, never the O(|E|) edge list; for deep iteration
-counts checkpoint the RANK vector every ~10 rounds.
+:func:`label_propagation` and :func:`kcore` spill-checkpoint their edge
+frames (:func:`checkpoint_edges`) where that shape measured fine. Each
+iteration re-shuffles only the O(|V|) rank vector, never the O(|E|)
+edge list; for deep iteration counts checkpoint the RANK vector every
+~10 rounds.
 """
 
 from __future__ import annotations
 
+from pyspark.storagelevel import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 SCALE = 1_000_000_000  # fixed-point: rank 1.0 == 10^9
+
+
+def checkpoint_edges(df: DataFrame, eager: bool = False) -> DataFrame:
+    """localCheckpoint of an O(|E|) edge frame at the serialized
+    ``MEMORY_AND_DISK`` level, the graph exception to the default level
+    in session.py's materialization contract. At x100 the default
+    deserialized blocks ran a 16g and a 48g driver out of memory
+    (SCALING.md round 5); serialized, the same sweep ran in bounded
+    memory. The price is a decode per read: at sf0.1 the k-core queries
+    run about 1.5x slower than at the default level."""
+    return df.localCheckpoint(eager=eager, storageLevel=StorageLevel.MEMORY_AND_DISK)
 
 
 def undirected_to_directed(pairs: DataFrame, m1: str, m2: str, w: str) -> DataFrame:
@@ -133,7 +146,9 @@ def personalized_pagerank(
     the seeds, not the whole graph.
     """
     outw = edges.groupBy("src").agg(F.sum("w").cast("long").alias("ow"))
-    edge_norm = edges.join(outw, "src").select("src", "dst", "w", "ow").localCheckpoint(eager=False)
+    edge_norm = (
+        checkpoint_edges(edges.join(outw, "src").select("src", "dst", "w", "ow"))
+    )
     # outw is already one row per node — reuse its count instead of a
     # second distinct pass over the checkpointed edges.
     return personalized_pagerank_prenorm(
@@ -215,7 +230,7 @@ def label_propagation(edges: DataFrame, iterations: int = 2) -> DataFrame:
     :func:`pagerank`); each round is one |E|-row join + two aggregates
     shuffling on node keys, and the label vector stays O(|V|).
     """
-    edges = edges.localCheckpoint(eager=False)
+    edges = checkpoint_edges(edges)
     labels = (
         edges.select(F.col("src").alias("node")).distinct().withColumn("label", F.col("node"))
     )
@@ -297,10 +312,10 @@ def kcore(edges: DataFrame, k: int, rounds: int = 3) -> DataFrame:
 
     Scale: each round is two semi-joins (edge set restricted by the
     alive set, both hash-partitioned on node keys) + one count
-    aggregate; the edge frame is checkpointed per round so round
+    aggregate; the edge frame is spill-checkpointed per round so round
     r's lineage does not re-derive rounds 0..r-1. Alive sets are O(|V|)
     and shrink monotonically."""
-    edges = edges.select("src", "dst").localCheckpoint(eager=False)
+    edges = checkpoint_edges(edges.select("src", "dst"))
     for _ in range(rounds):
         deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("c"))
         alive = deg.filter(F.col("c") >= k).select("src")
@@ -308,6 +323,6 @@ def kcore(edges: DataFrame, k: int, rounds: int = 3) -> DataFrame:
             edges.join(alive, "src", "left_semi")
             .join(alive.withColumnRenamed("src", "dst"), "dst", "left_semi")
         )
-        edges = edges.localCheckpoint(eager=False)
+        edges = checkpoint_edges(edges)
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).cast("long").alias("degree"))
     return deg.filter(F.col("degree") >= k).select(F.col("src").alias("node"), "degree")

@@ -15,11 +15,18 @@ defaults below are the ones that matter at that scale and are harmless on
 
 Materialization contract. An intermediate that several consumers read
 is kept with ``DataFrame.localCheckpoint`` at Spark's default storage
-level: memory and disk, deserialized, so it spills, and its in-memory
-blocks cost no decode per read but take about 12× the serialized size
-(measured on the k-core edge frames). No site picks another level,
-except ``durable=True`` in the prefix-filter dedup tiers, which keeps
-lineage with ``persist(DISK_ONLY)``.
+level: memory and disk, deserialized, so its in-memory blocks cost no
+decode per read but take about 12× the serialized size (measured on
+the k-core edge frames at sf0.1). Two sites pick another level:
+
+- the O(|E|) edge frames of the iterative graph operators go through
+  ``operators/graph.py::checkpoint_edges``, serialized
+  ``MEMORY_AND_DISK``, because deserialized edge blocks ran the driver
+  out of memory at x100 (SCALING.md round 5);
+- ``durable=True`` in the prefix-filter dedup tiers keeps lineage with
+  ``persist(DISK_ONLY)``.
+
+When to materialize, at any level:
 
 - Lazy (``eager=False``) by default: the first action that reads the
   frame stores its blocks, with no job of its own (under AQE, building
@@ -35,7 +42,9 @@ lineage with ``persist(DISK_ONLY)``.
   materializes them. A frame whose upstream is nondeterministic
   (``rand()``, source files that change, tie-broken limits) and whose
   consumers could materialize different partitions in concurrent
-  stages must be eager, so the pin happens at one point.
+  stages must be eager, so the pin happens at one point. A lazy site
+  whose upstream is not plainly deterministic says in one line why it
+  is.
 """
 
 from __future__ import annotations

@@ -389,6 +389,7 @@ def neardup_ingest_sink(
 
     def apply(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
+        # lazy is deterministic here: batch_df is pinned to the epoch's offsets
         nb = band_signature_frame(batch_df, text_col, id_col, k).localCheckpoint(eager=False)
         state = L.read_earlier(spark, batch_id, [sig_dir], owned=[pairs_dir])
         if state is not None:
@@ -648,6 +649,7 @@ def _exact_ingest_sink(
         spark = batch_df.sparkSession
         what = f"{name}: batch {batch_id}"
         sets_b, postings_b = frames(batch_df)
+        # lazy is deterministic here: batch_df is pinned to the epoch's offsets
         sets_b = sets_b.localCheckpoint(eager=False)
         postings_b = postings_b.localCheckpoint(eager=False)
         _assert_one_row_per_doc(sets_b, what)
@@ -752,6 +754,7 @@ def edit_ingest_sink(
     def apply(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         L.assert_no_purge_intent(spark, titles_dir, "edit_ingest_sink")
+        # lazy is deterministic here: batch_df is pinned to the epoch's offsets
         b = _edit_distinct_titles(batch_df, id_col, title_col).localCheckpoint(eager=False)
         keys_b = _edit_index_keys(b, "tid").localCheckpoint(eager=False)
         t_new = batch_df.select(
@@ -1119,6 +1122,7 @@ def cluster_ingest_sink(
         # with_sig: the persisted band table carries the packed minhash
         # array so a later cluster_purge_state re-derivation keeps the
         # hot-band sub-banding tier (pairs_from_band_table).
+        # lazy is deterministic here: batch_df is pinned to the epoch's offsets
         nb = band_signature_frame(
             batch_df, text_col, id_col, k, with_sig=True
         ).localCheckpoint(eager=False)
@@ -1396,6 +1400,7 @@ def semantic_ingest_sink(
         vn = batch_df.select(
             F.col(id_col).alias("vid"), F.col(vec_col).cast("array<double>").alias("vec")
         ).select("vid", "vec", l2_norm(F.col("vec")).alias("norm"))
+        # lazy is deterministic here: batch_df is pinned to the epoch's offsets
         b = (
             assign_to_centroids(batch_df, id_col, vec_col, cents)
             .select(F.col(id_col).alias("vid"), "cluster")

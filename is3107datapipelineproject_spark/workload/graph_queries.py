@@ -116,9 +116,7 @@ def q_related_parts_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
     with the same full-outer teleport merge."""
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     pairs = pair_counts(li, "l_orderkey", "l_partkey")
-    edges = G.undirected_to_directed(pairs, "member1", "member2", "cnt").localCheckpoint(
-        eager=False
-    )
+    edges = G.checkpoint_edges(G.undirected_to_directed(pairs, "member1", "member2", "cnt"))
     seeds = (
         edges.groupBy("src").agg(F.sum("w").alias("_"))
         .orderBy("src")

@@ -2,10 +2,12 @@
 
 The package keeps intermediates with ``localCheckpoint`` at Spark's
 default storage level (the contract in session.py's module docstring).
-The one exception is the ``durable`` branch of the prefix-filter dedup
-tiers, ``persist(StorageLevel.DISK_ONLY)``, which keeps lineage. A
+Two exceptions are stated there and nowhere else: the graph edge frames'
+serialized level, set once in ``operators/graph.py::checkpoint_edges``,
+and the ``durable`` branch of the prefix-filter dedup tiers,
+``persist(StorageLevel.DISK_ONLY)``, which keeps lineage. Another
 ``storageLevel=`` argument, another ``StorageLevel``, a second
-``persist`` or an ``unpersist`` would bring back a second mechanism."""
+``persist`` or an ``unpersist`` would bring back a further mechanism."""
 
 from __future__ import annotations
 
@@ -31,14 +33,19 @@ def _calls(attr: str):
                 yield rel, node
 
 
-def test_no_storage_level_argument():
+def test_storage_level_argument_only_in_checkpoint_edges():
+    sites = []
     for rel, tree in _trees():
-        for node in ast.walk(tree):
-            if isinstance(node, ast.keyword) and node.arg == "storageLevel":
-                raise AssertionError(f"{rel}:{node.value.lineno}: storageLevel= argument")
+        for fn in ast.walk(tree):
+            if not isinstance(fn, ast.FunctionDef):
+                continue
+            for node in ast.walk(fn):
+                if isinstance(node, ast.keyword) and node.arg == "storageLevel":
+                    sites.append((str(rel), fn.name))
+    assert sites == [("operators/graph.py", "checkpoint_edges")], sites
 
 
-def test_storage_level_only_in_the_durable_branch():
+def test_storage_level_only_at_the_two_stated_exceptions():
     uses = []
     for rel, tree in _trees():
         for node in ast.walk(tree):
@@ -48,7 +55,10 @@ def test_storage_level_only_in_the_durable_branch():
                 and node.value.id == "StorageLevel"
             ):
                 uses.append((str(rel), node.attr))
-    assert uses == [("operators/dedup.py", "DISK_ONLY")], uses
+    assert sorted(uses) == [
+        ("operators/dedup.py", "DISK_ONLY"),
+        ("operators/graph.py", "MEMORY_AND_DISK"),
+    ], uses
 
 
 def test_one_persist_and_no_unpersist():
@@ -63,6 +73,6 @@ def test_no_materialization_wrappers():
     for rel, tree in _trees():
         for node in ast.walk(tree):
             if isinstance(node, ast.FunctionDef):
-                assert node.name not in ("checkpoint_edges", "_materialize"), (
+                assert node.name != "_materialize", (
                     f"{rel}:{node.lineno}: def {node.name} — call localCheckpoint directly"
                 )

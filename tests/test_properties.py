@@ -206,19 +206,29 @@ def test_lazy_local_checkpoint_backfills_after_partial_first_action(spark):
     assert s1 == s2  # values pinned at (the end of) the first action
 
 
-def test_default_local_checkpoint_level_spills_to_disk(spark):
-    """The contract keeps every checkpoint at Spark's default level
-    because that level already spills: its blocks may go to disk when
-    memory runs short, so an edge frame larger than the heap pages out
-    instead of failing. If a Spark upgrade makes the default
-    memory-only, this fails and the large frames need an explicit
-    level again."""
+def test_edge_checkpoint_is_serialized_unlike_the_default_level(spark):
+    """The two storage levels of session.py's materialization contract.
+    A default ``localCheckpoint`` keeps deserialized blocks in memory
+    (spilling to disk): no decode per read, but about 12x the serialized
+    size. ``graph.checkpoint_edges`` keeps the O(|E|) edge frames
+    serialized, the level that bounded driver memory at x100. If a
+    Spark upgrade changes either level, this fails and the contract's
+    memory reasoning must be re-measured."""
+    from is3107datapipelineproject_spark.operators.graph import checkpoint_edges
+
     jsc = spark.sparkContext._jsc
-    before = set(jsc.getPersistentRDDs().keys())
-    assert spark.range(100).localCheckpoint().count() == 100
-    rdds = jsc.getPersistentRDDs()
-    added = [k for k in rdds.keys() if k not in before]
-    assert added, "localCheckpoint registered no persistent RDD"
-    for k in added:
-        level = rdds[k].getStorageLevel()
+
+    def level_of(make):
+        before = set(jsc.getPersistentRDDs().keys())
+        assert make().count() == 100
+        rdds = jsc.getPersistentRDDs()
+        added = [k for k in rdds.keys() if k not in before]
+        assert len(added) == 1, added
+        return rdds[added[0]].getStorageLevel()
+
+    default = level_of(lambda: spark.range(100).localCheckpoint())
+    edges = level_of(lambda: checkpoint_edges(spark.range(100)))
+    for level in (default, edges):
         assert level.useDisk() and level.useMemory(), level.toString()
+    assert default.deserialized(), default.toString()
+    assert not edges.deserialized(), edges.toString()

@@ -209,7 +209,9 @@ def _edit_rows(spark):
 def test_edit_neardup_pairs_job_pin(spark):
     """Call plus collect: the hot-key guard's jobs and the result's, with
     no eager result checkpoint in between (13 jobs with it, 11 without,
-    on this input at local[4] with 8 shuffle partitions)."""
+    on this input at local[4] with 8 shuffle partitions). Adaptive
+    execution's stage timing adds one job to the result's action in
+    some runs, so the pin is 12: still one below the eager version."""
     from is3107datapipelineproject_spark.operators.dedup import edit_neardup_pairs
 
     df = _edit_rows(spark)
@@ -217,12 +219,13 @@ def test_edit_neardup_pairs_job_pin(spark):
         spark, "edit_neardup_job_pin", lambda: edit_neardup_pairs(df, "tid", "tt").collect()
     )
     assert len(out) == 4, out
-    assert jobs <= 11, jobs
+    assert jobs <= 12, jobs
 
 
 def test_incremental_edit_neardup_job_pin(spark):
     """Same pin for the new×old twin: guard jobs plus the result's (13
-    jobs with the eager result checkpoint, 11 without)."""
+    jobs with the eager result checkpoint, 11 without, plus the one job
+    adaptive execution's timing may add)."""
     from is3107datapipelineproject_spark.operators.dedup import incremental_edit_neardup
 
     df = _edit_rows(spark)
@@ -233,4 +236,4 @@ def test_incremental_edit_neardup_job_pin(spark):
         lambda: incremental_edit_neardup(old, new, "tid", "tt").collect(),
     )
     assert len(out) == 3, out
-    assert jobs <= 11, jobs
+    assert jobs <= 12, jobs

@@ -105,7 +105,10 @@ def main() -> None:
             "spark.eventLog.rolling.enabled": "false",
         }
         submit = [a for k, v in confs.items() for a in ("--conf", f"{k}={v}")]
-        os.environ["PYSPARK_SUBMIT_ARGS"] = shlex.join(submit + ["pyspark-shell"])
+        # Keep the caller's submit args; ours come last so the log lands in log_dir.
+        given = shlex.split(os.environ.get("PYSPARK_SUBMIT_ARGS", ""))
+        given = [a for a in given if a != "pyspark-shell"]
+        os.environ["PYSPARK_SUBMIT_ARGS"] = shlex.join(given + submit + ["pyspark-shell"])
 
     from is3107datapipelineproject_spark.session import get_spark
     from is3107datapipelineproject_spark.workload import registry
