@@ -1,21 +1,14 @@
-"""Build-once / query-many derived tables: the materialized co-purchase
-edge table and the persisted IVF-PQ vector index.
-
-Round-5 bench audit (VERDICT r5): the five most expensive headline
-queries were all pair-gen-subtree-dominated — every graph query rebuilt
-the co-purchase edges from lineitem, and every PQ query re-ran coarse
-k-means + encode. A production workload builds these ONCE at ingest and
-amortizes them across every subsequent query; this module is that
-contract, expressed as catalog tables so the physical layout carries
-the query-time win:
+"""Build-once / query-many derived tables: the co-purchase edge and arc
+tables, the persisted IVF-PQ indexes, the near-dup label and band
+tables, and the re-laid-out fact tables (bucketed, z-ordered,
+year-partitioned).
 
 - ``copurchase_edge_table``: pre-normalized arcs ``(src, dst, w, ow)``
   BUCKETED by ``src`` (plans/layout.py::write_bucketed). A bucketed
   scan reports HashPartitioning(src), so each PageRank/BFS/k-core
   iteration shuffles ONLY the O(|V|) rank/frontier vector — the O(|E|)
   edge side never exchanges again, and the pair-generation double
-  shuffle (the r5 bench's dominant cost) is paid exactly once per
-  corpus version.
+  shuffle is paid once per corpus version.
 - ``ivfpq_index_tables``: the three tables a billion-vector ANN
   deployment stores — coarse k-means centroids (k rows), the PQ
   codebook (m·k rows), and the per-vector codes PARTITIONED by coarse
@@ -24,22 +17,39 @@ the query-time win:
   scoring runs purely in the compressed domain (codes join the
   broadcast ADC table; the original d-dim vectors are never read).
 
-Build functions are idempotent per (sf_dir) within a session
-(``tableExists`` guard) and overwrite stale directories across
-sessions (the default in-memory catalog forgets, ``mode=overwrite``
-re-registers). Derived contents are pure functions of the source
-parquet, so the DuckDB oracles of the from-index queries are the SAME
-unrolled chains as their rebuild-every-time siblings — identical
-results, amortized plan.
+Every builder goes through :func:`build_once`, the one build-once
+contract:
+
+- latch: a build counts as done only when its ``*_ready`` marker AND
+  every table it writes are in the catalog;
+- otherwise each of those tables and the marker is DROPped and its
+  warehouse location swept (a new session's in-memory catalog forgets
+  tables whose directories survive on disk), the build runs, and the
+  marker is written LAST — a build that dies midway never latches, and
+  a table lost after a build is rebuilt, not latched.
+
+Derived contents are pure functions of the source parquet, so a rebuild
+is always safe, and the DuckDB oracles of the from-index queries are
+the same unrolled chains as their rebuild-every-time siblings.
 """
 
 from __future__ import annotations
 
 import re
+from collections.abc import Callable, Iterable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from is3107datapipelineproject_spark.plans.layout import (
+    _data_files,
+    _sweep_stale_location,
+    _table_location,
+    compact_table,
+    layout_stats,
+    should_compact,
+    write_bucketed,
+)
 from is3107datapipelineproject_spark.sources.tables import load_table
 
 
@@ -47,20 +57,36 @@ def _tag(sf_dir: str) -> str:
     return re.sub(r"[^a-zA-Z0-9]", "_", sf_dir.strip("/"))
 
 
-def _sweep_stale_location(spark: SparkSession, table: str) -> None:
-    """A NEW session's in-memory catalog is empty, but the warehouse
-    directory of a previous session's managed table survives on disk —
-    and saveAsTable refuses to CREATE over a non-empty location
-    (LOCATION_ALREADY_EXISTS). When the catalog does not know the table
-    but its default-database location exists, remove it so the rebuild
-    is a clean overwrite (the rebuild produces identical bytes anyway:
-    derived contents are pure functions of the source parquet)."""
-    wh = spark.conf.get("spark.sql.warehouse.dir")
-    jvm = spark.sparkContext._jvm
-    path = jvm.org.apache.hadoop.fs.Path(wh, table.lower())
-    fs = path.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    if fs.exists(path):
-        fs.delete(path, True)
+def _drop_table(spark: SparkSession, table: str) -> None:
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    _sweep_stale_location(spark, table)
+
+
+def _write_marker(spark: SparkSession, marker: str) -> None:
+    spark.range(1).coalesce(1).write.mode("overwrite").format("parquet").saveAsTable(marker)
+
+
+def build_once(
+    spark: SparkSession,
+    marker: str,
+    tables: Iterable[str],
+    build: Callable[[], None],
+    recover: Callable[[], bool] | None = None,
+) -> None:
+    """Run ``build``, which writes ``tables``, unless ``marker`` and all
+    of ``tables`` are already in the catalog (the contract in the module
+    docstring). ``recover``, tried before anything is dropped, may
+    restore a complete state that a crashed maintenance step left; it
+    returns True once it has written the marker itself."""
+    tables = tuple(tables)
+    if all(spark.catalog.tableExists(t) for t in (marker, *tables)):
+        return
+    if recover is not None and recover():
+        return
+    for t in (*tables, marker):
+        _drop_table(spark, t)
+    build()
+    _write_marker(spark, marker)
 
 
 # The arc/edges tables carry an explicit src-derived partition column
@@ -117,14 +143,16 @@ def copurchase_edge_table(
     from is3107datapipelineproject_spark.operators.pair_counts import pair_counts
 
     table = f"copurchase_edges_{_tag(sf_dir)}"
-    if not spark.catalog.tableExists(table):
-        _sweep_stale_location(spark, table)
+
+    def build() -> None:
         li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
         pairs = pair_counts(li, "l_orderkey", "l_partkey")
         edges = undirected_to_directed(pairs, "member1", "member2", "cnt")
         outw = edges.groupBy("src").agg(F.sum("w").cast("long").alias("ow"))
         edge_norm = edges.join(outw, "src").select("src", "dst", "w", "ow")
         _write_pb_bucketed(edge_norm, table, n_buckets)
+
+    build_once(spark, f"{table}_ready", [table], build)
     return spark.table(table)
 
 
@@ -138,11 +166,9 @@ def _refresh_edges_from_arcs(
     append log makes it possible). Clears the touched-pb log: a full
     refresh covers everything the log remembers."""
     staged = f"{edges_table}__renorm"
-    spark.sql(f"DROP TABLE IF EXISTS {staged}")
-    _sweep_stale_location(spark, staged)
+    _drop_table(spark, staged)
     _write_pb_bucketed(merged_edge_norm(spark, arc_table), staged, n_buckets)
-    spark.sql(f"DROP TABLE IF EXISTS {edges_table}")
-    _sweep_stale_location(spark, edges_table)
+    _drop_table(spark, edges_table)
     spark.sql(f"ALTER TABLE {staged} RENAME TO {edges_table}")
     # renaming a PARTITIONED managed table keeps each partition's
     # ABSOLUTE location pointing at the old path — repair or the
@@ -306,8 +332,9 @@ def _recover_crashed_compaction(
     spark: SparkSession, table: str, n_buckets: int = 16
 ) -> bool:
     """Distinguish a crashed COMPACTION from a crashed initial BUILD
-    when the ``*_ready`` marker is missing, and recover the former
-    instead of dropping production-appended arcs.
+    when edge_append_tables does not latch, and recover the former
+    instead of dropping production-appended arcs (the ``recover`` step
+    of :func:`build_once`, run before its drop).
 
     compact_arc_table's swap ordering is: staged merge written →
     marker DROP → table DROP → RENAME staged→table → marker rewrite.
@@ -320,7 +347,8 @@ def _recover_crashed_compaction(
     finding). The discriminator is the ``*_compactmeta`` table: it is
     only ever written AFTER a fully-completed build or compaction, so
     meta-present + marker-missing ⟹ the table once reached a complete
-    state ⟹ what survives is recoverable, never half-built. (A crash
+    state ⟹ what survives is recoverable, never half-built (the build
+    drops a stale meta before it writes anything). (A crash
     DURING the staged write leaves the marker intact, so a surviving
     staged table on this path is always complete.)
 
@@ -352,11 +380,6 @@ def _recover_crashed_compaction(
         return False  # never completed a build — rebuild is correct
     staged = f"{table}__compacting"
     recovering = f"{table}__recovering"
-    marker = f"{table}_ready"
-
-    def _drop(t: str) -> None:
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        _sweep_stale_location(spark, t)
 
     def _swap_in(src_table: str) -> None:
         _sweep_stale_location(spark, table)
@@ -369,8 +392,8 @@ def _recover_crashed_compaction(
 
     if spark.catalog.tableExists(table) and spark.catalog.tableExists(staged):
         if _total_w(table) >= _total_w(staged):
-            _drop(recovering)
-            _drop(staged)
+            _drop_table(spark, recovering)
+            _drop_table(spark, staged)
         else:
             # burst-only remnant + corpus snapshot → union both
             union = (
@@ -378,24 +401,24 @@ def _recover_crashed_compaction(
                 .select("src", "dst", "w")
                 .unionByName(spark.table(table).select("src", "dst", "w"))
             )
-            _drop(recovering)
+            _drop_table(spark, recovering)
             _write_pb_bucketed(union, recovering, n_buckets)
-            _drop(table)
+            _drop_table(spark, table)
             _swap_in(recovering)
-            _drop(staged)
+            _drop_table(spark, staged)
     elif spark.catalog.tableExists(table):
-        _drop(recovering)  # stale leftover of an earlier recovery
+        _drop_table(spark, recovering)  # stale leftover of an earlier recovery
     elif spark.catalog.tableExists(recovering):
         # crashed union recovery: __recovering is complete and ⊇ staged
         _swap_in(recovering)
-        _drop(staged)
+        _drop_table(spark, staged)
     elif spark.catalog.tableExists(staged):
         # crash between the table DROP and the RENAME, no append since:
         # the staged merge is the complete copy — finish the swap.
         _swap_in(staged)
     else:
         return False  # meta is stale but nothing survives — rebuild
-    spark.range(1).coalesce(1).write.mode("overwrite").format("parquet").saveAsTable(marker)
+    _write_marker(spark, f"{table}_ready")
     record_arc_compact_meta(spark, table)  # fresh growth-policy baseline
     return True
 
@@ -418,21 +441,14 @@ def edge_append_tables(
     full-corpus oracle. The groupBy(src, dst) merge and the groupBy(src)
     out-weight both run WITHOUT an exchange: HashPartitioning(src) from
     the bucketed scan satisfies clustering on (src, dst) (src is a
-    subset of the keys) — plan-asserted in tests/test_indexes.py.
-
-    Idempotence guard: the build is TWO writes (base + append), so the
-    guard is a separate marker table written LAST — guarding on the arc
-    table itself would latch a base-only state if the append failed
-    mid-build (the completion-marker invariant ivfpq_index_tables gets
-    for free by writing its codes table last)."""
+    subset of the keys) — plan-asserted in tests/test_indexes.py."""
     table = f"copurchase_arcs_{_tag(sf_dir)}"
-    marker = f"{table}_ready"
-    if not spark.catalog.tableExists(marker):
-        if _recover_crashed_compaction(spark, table, n_buckets=n_buckets):
-            return table
-        for t in (table, marker, f"{table}__compacting", f"{table}__recovering"):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")  # clear a half-built prior attempt
-            _sweep_stale_location(spark, t)
+
+    def build() -> None:
+        # leftovers recovery could not use, and a stale growth baseline:
+        # recovery trusts the meta only when a complete build wrote it
+        for t in (f"{table}__compacting", f"{table}__recovering", _arc_meta_table(table)):
+            _drop_table(spark, t)
         li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
         arriving = F.col("l_orderkey") % EDGE_APPEND_MOD == EDGE_APPEND_REM
         _write_pb_bucketed(
@@ -448,13 +464,17 @@ def edge_append_tables(
             spark, table, li.filter(arriving), n_buckets=n_buckets,
             compact_max_files=None, compact_delta_frac=None,
         )
-        spark.range(1).coalesce(1).write.mode("overwrite").format("parquet").saveAsTable(marker)
-        record_arc_compact_meta(spark, table)
         # the built state (base + demo append = the FULL corpus) is the
         # canonical baseline a scratch copurchase_edge_table build also
         # produces, so the demo append's touched rows are not "dirt" —
         # clear them or the first incremental renorm rewrites everything
         _clear_touched_log(spark, table)
+        record_arc_compact_meta(spark, table)
+
+    build_once(
+        spark, f"{table}_ready", [table], build,
+        recover=lambda: _recover_crashed_compaction(spark, table, n_buckets=n_buckets),
+    )
     return table
 
 
@@ -467,8 +487,6 @@ def record_arc_compact_meta(spark: SparkSession, table: str) -> None:
     compaction baseline (one-row table — the arc sibling of the *_ready
     marker). The growth policy in edge_table_append compares future
     sizes against it."""
-    from is3107datapipelineproject_spark.plans.layout import _table_location, layout_stats
-
     _, total = layout_stats(spark, _table_location(spark, table))
     meta = _arc_meta_table(table)
     if not spark.catalog.tableExists(meta):
@@ -566,12 +584,6 @@ def _maybe_compact_arcs(
     and refresh the pre-normalized edges twin incrementally)."""
     if compact_max_files is None and compact_delta_frac is None:
         return
-    from is3107datapipelineproject_spark.plans.layout import (
-        _table_location,
-        layout_stats,
-        should_compact,
-    )
-
     loc = _table_location(spark, table)
     trigger = False
     if compact_delta_frac is not None:
@@ -654,11 +666,6 @@ def compact_arc_table(
     query path after an append burst (×100: merge-on-read 175 s vs
     45 s pre-merged). Quiesced-table caveat as everywhere. Returns
     ``(files_before, files_after)``."""
-    from is3107datapipelineproject_spark.plans.layout import (
-        _data_files,
-        _table_location,
-    )
-
     loc = _table_location(spark, table)
     before = _data_files(spark, loc)
     # Stage-and-swap, NOT read-checkpoint-overwrite: an eager
@@ -677,8 +684,7 @@ def compact_arc_table(
         .filter(F.col("w") > 0)
     )
     staged = f"{table}__compacting"
-    spark.sql(f"DROP TABLE IF EXISTS {staged}")
-    _sweep_stale_location(spark, staged)
+    _drop_table(spark, staged)
     _write_pb_bucketed(merged, staged, n_buckets)
     # The swap is not crash-atomic: if it dies between DROP and RENAME the
     # table is missing while the *_ready marker would still latch it as
@@ -692,8 +698,7 @@ def compact_arc_table(
     had_marker = spark.catalog.tableExists(marker)
     if had_marker:
         spark.sql(f"DROP TABLE IF EXISTS {marker}")
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    _sweep_stale_location(spark, table)
+    _drop_table(spark, table)
     spark.sql(f"ALTER TABLE {staged} RENAME TO {table}")
     # renaming a PARTITIONED managed table keeps each partition's
     # ABSOLUTE location pointing at the old path — repair or the
@@ -706,7 +711,7 @@ def compact_arc_table(
     # every production-appended arc). A stale meta merely makes the next
     # append re-trigger compaction; a lost marker loses data.
     if had_marker:
-        spark.range(1).coalesce(1).write.mode("overwrite").format("parquet").saveAsTable(marker)
+        _write_marker(spark, marker)
     record_arc_compact_meta(spark, table)  # new growth-policy baseline
     return before, _data_files(spark, _table_location(spark, table))
 
@@ -752,17 +757,18 @@ def ivfpq_index_tables(
     cluster id, so the scan prunes to that partition's files before a
     single row is read."""
     p = f"ivfpq_{_tag(sf_dir)}"
-    names = {
-        "centroids": f"{p}_centroids",
-        "codebook": f"{p}_codebook",
-        "codes": f"{p}_codes",
-    }
-    if not spark.catalog.tableExists(names["codes"]):
-        for t in names.values():
-            _sweep_stale_location(spark, t)
-        emb = load_table(spark, sf_dir, "embeddings")
-        _build_ivfpq(spark, emb, names, k_coarse, km_iters, m, k)
+    names = _ivfpq_names(p)
+    build_once(
+        spark, f"{p}_ready", names.values(),
+        lambda: _build_ivfpq(
+            spark, load_table(spark, sf_dir, "embeddings"), names, k_coarse, km_iters, m, k
+        ),
+    )
     return names
+
+
+def _ivfpq_names(prefix: str) -> dict[str, str]:
+    return {t: f"{prefix}_{t}" for t in ("centroids", "codebook", "codes")}
 
 
 def _build_ivfpq(
@@ -857,12 +863,6 @@ def ann_index_append(
         .saveAsTable(names["codes"])
     )
     if compact_max_files is not None:
-        from is3107datapipelineproject_spark.plans.layout import (
-            _table_location,
-            compact_table,
-            should_compact,
-        )
-
         if should_compact(
             spark, _table_location(spark, names["codes"]), max_files=compact_max_files
         ):
@@ -960,28 +960,32 @@ def ann_appended_index_tables(
     prefix ``ivfpqa_`` keeps it distinct from the one-shot
     :func:`ivfpq_index_tables`; the model parameters are part of the
     name, so callers with different (k_coarse, iters, m, k) can never
-    silently share one cached index.
-
-    Idempotence guard: build + append is multi-write, so completion is
-    a marker table written LAST — guarding on the codes table would
-    latch a base-only index if the append failed mid-build."""
+    silently share one cached index."""
     p = f"ivfpqa_{_tag(sf_dir)}_c{k_coarse}i{km_iters}m{m}k{k}"
-    names = {
-        "centroids": f"{p}_centroids",
-        "codebook": f"{p}_codebook",
-        "codes": f"{p}_codes",
-    }
-    marker = f"{p}_ready"
-    if not spark.catalog.tableExists(marker):
-        for t in (*names.values(), marker):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")  # clear a half-built prior attempt
-            _sweep_stale_location(spark, t)
-        emb = load_table(spark, sf_dir, "embeddings")
-        arrivals_pred = F.col("vec_id") % ANN_APPEND_MOD == ANN_APPEND_REM
-        _build_ivfpq(spark, emb.filter(~arrivals_pred), names, k_coarse, km_iters, m, k)
-        ann_index_append(spark, names, emb.filter(arrivals_pred), m=m, k=k)
-        spark.range(1).coalesce(1).write.mode("overwrite").format("parquet").saveAsTable(marker)
+    names = _ivfpq_names(p)
+    build_once(
+        spark, f"{p}_ready", names.values(),
+        lambda: _build_appended_ivfpq(spark, sf_dir, names, k_coarse, km_iters, m, k),
+    )
     return names
+
+
+def _build_appended_ivfpq(
+    spark: SparkSession,
+    sf_dir: str,
+    names: dict[str, str],
+    k_coarse: int,
+    km_iters: int,
+    m: int,
+    k: int,
+) -> DataFrame:
+    """Build on the base 80% of the embeddings, append the arriving 20%
+    against the frozen model; returns the embeddings frame."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    arrivals_pred = F.col("vec_id") % ANN_APPEND_MOD == ANN_APPEND_REM
+    _build_ivfpq(spark, emb.filter(~arrivals_pred), names, k_coarse, km_iters, m, k)
+    ann_index_append(spark, names, emb.filter(arrivals_pred), m=m, k=k)
+    return emb
 
 
 def cluster_label_table(spark: SparkSession, sf_dir: str) -> str:
@@ -994,8 +998,7 @@ def cluster_label_table(spark: SparkSession, sf_dir: str) -> str:
     the incremental MinHash tier + batch-local new×new pairs). By the
     contraction theorem the result equals the one-shot over the full
     corpus, which is exactly what the from-state query's full-closure
-    oracle checks. Marker-guarded multi-step build, like
-    edge_append_tables."""
+    oracle checks."""
     from is3107datapipelineproject_spark.operators.dedup import (
         incremental_cluster_update,
         incremental_neardup,
@@ -1004,11 +1007,8 @@ def cluster_label_table(spark: SparkSession, sf_dir: str) -> str:
     )
 
     table = f"neardup_labels_{_tag(sf_dir)}"
-    marker = f"{table}_ready"
-    if not spark.catalog.tableExists(marker):
-        for t in (table, marker):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
-            _sweep_stale_location(spark, t)
+
+    def build() -> None:
         docs = load_table(spark, sf_dir, "documents")
         new = docs.filter(F.col("doc_id") % 5 == 0)
         old = docs.filter(F.col("doc_id") % 5 != 0)
@@ -1025,13 +1025,14 @@ def cluster_label_table(spark: SparkSession, sf_dir: str) -> str:
             old_labels, new.select("doc_id"), nx_old.unionByName(nx_new), "doc_id"
         )
         labels.write.mode("overwrite").format("parquet").saveAsTable(table)
-        spark.range(1).coalesce(1).write.mode("overwrite").format("parquet").saveAsTable(marker)
+
+    build_once(spark, f"{table}_ready", [table], build)
     return table
 
 
 def band_signature_table(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize (once, marker-guarded) the PERSISTED LSH band/
-    signature table over documents — the ``sig_dir`` state
+    """Materialize (once) the PERSISTED LSH band/signature table over
+    documents — the ``sig_dir`` state
     cluster_ingest_sink maintains in production, including the packed
     minhash ``sig`` column so hot-band re-derivation keeps the
     sub-banding tier (operators/dedup.py::pairs_from_band_table). This
@@ -1042,16 +1043,12 @@ def band_signature_table(spark: SparkSession, sf_dir: str) -> str:
     from is3107datapipelineproject_spark.operators.dedup import band_signature_frame
 
     table = f"neardup_bands_{_tag(sf_dir)}"
-    marker = f"{table}_ready"
-    if not spark.catalog.tableExists(marker):
-        for t in (table, marker):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
-            _sweep_stale_location(spark, t)
-        docs = load_table(spark, sf_dir, "documents")
-        band_signature_frame(docs, "text", "doc_id", with_sig=True).write.mode(
-            "overwrite"
-        ).format("parquet").saveAsTable(table)
-        spark.range(1).coalesce(1).write.mode("overwrite").format("parquet").saveAsTable(marker)
+    build_once(
+        spark, f"{table}_ready", [table],
+        lambda: band_signature_frame(
+            load_table(spark, sf_dir, "documents"), "text", "doc_id", with_sig=True
+        ).write.mode("overwrite").format("parquet").saveAsTable(table),
+    )
     return table
 
 
@@ -1075,31 +1072,16 @@ def ann_deleted_index_tables(
     the persisted state after an ingest cycle plus a
     right-to-be-forgotten request. Prefix ``ivfpqd_`` keeps it isolated
     from the append-only ``ivfpqa_`` tables other queries share (a
-    registered query must never mutate a sibling's canonical state).
-    Marker-guarded like the other multi-write builders."""
+    registered query must never mutate a sibling's canonical state)."""
     p = f"ivfpqd_{_tag(sf_dir)}_c{k_coarse}i{km_iters}m{m}k{k}"
-    names = {
-        "centroids": f"{p}_centroids",
-        "codebook": f"{p}_codebook",
-        "codes": f"{p}_codes",
-    }
-    marker = f"{p}_ready"
-    if not spark.catalog.tableExists(marker):
-        for t in (*names.values(), marker):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
-            _sweep_stale_location(spark, t)
-        emb = load_table(spark, sf_dir, "embeddings")
-        arrivals_pred = F.col("vec_id") % ANN_APPEND_MOD == ANN_APPEND_REM
-        _build_ivfpq(spark, emb.filter(~arrivals_pred), names, k_coarse, km_iters, m, k)
-        ann_index_append(spark, names, emb.filter(arrivals_pred), m=m, k=k)
-        ann_index_delete(
-            spark,
-            names,
-            emb.filter(
-                F.col("vec_id") % ANN_DELETE_MOD == ANN_DELETE_REM
-            ).select("vec_id"),
-        )
-        spark.range(1).coalesce(1).write.mode("overwrite").format("parquet").saveAsTable(marker)
+    names = _ivfpq_names(p)
+
+    def build() -> None:
+        emb = _build_appended_ivfpq(spark, sf_dir, names, k_coarse, km_iters, m, k)
+        purged = emb.filter(F.col("vec_id") % ANN_DELETE_MOD == ANN_DELETE_REM)
+        ann_index_delete(spark, names, purged.select("vec_id"))
+
+    build_once(spark, f"{p}_ready", names.values(), build)
     return names
 
 
@@ -1120,17 +1102,17 @@ def fact_bucket_tables(
     point lookup (bucket pruning); buckets are single-file and
     key-sorted (plans/layout.py::write_bucketed) for row-group
     skipping."""
-    from is3107datapipelineproject_spark.plans.layout import write_bucketed
-
     names = {
         "orders": f"orders_bkt_{_tag(sf_dir)}",
         "lineitem": f"lineitem_bkt_{_tag(sf_dir)}",
     }
     specs = {"orders": "o_orderkey", "lineitem": "l_orderkey"}
-    for t, key in specs.items():
-        if not spark.catalog.tableExists(names[t]):
-            _sweep_stale_location(spark, names[t])
+
+    def build() -> None:
+        for t, key in specs.items():
             write_bucketed(load_table(spark, sf_dir, t), names[t], key, n_buckets=n_buckets)
+
+    build_once(spark, f"{names['orders']}_ready", names.values(), build)
     return names
 
 
@@ -1169,8 +1151,8 @@ def zorder_events_table(
     row-group overlap vs a time-sorted layout is asserted in
     tests/test_indexes.py::test_zorder_layout_prunes_boxes."""
     table = f"events_z_{_tag(sf_dir)}"
-    if not spark.catalog.tableExists(table):
-        _sweep_stale_location(spark, table)
+
+    def build() -> None:
         e = load_table(spark, sf_dir, "events").withColumn(
             "__day", F.unix_date(F.to_date("ts")).cast("long")
         )
@@ -1207,6 +1189,8 @@ def zorder_events_table(
             )
         finally:
             spark.conf.set("spark.sql.parquet.outputTimestampType", old_tt)
+
+    build_once(spark, f"{table}_ready", [table], build)
     return spark.table(table)
 
 
@@ -1228,9 +1212,8 @@ def orders_year_partitioned(spark: SparkSession, sf_dir: str) -> dict[str, str]:
         "orders": f"orders_byyear_{_tag(sf_dir)}",
         "years": f"years_dim_{_tag(sf_dir)}",
     }
-    if not spark.catalog.tableExists(names["orders"]):
-        for t in names.values():
-            _sweep_stale_location(spark, t)
+
+    def build() -> None:
         o = load_table(spark, sf_dir, "orders").withColumn(
             "o_year", F.year("o_orderdate").cast("int")
         )
@@ -1250,4 +1233,6 @@ def orders_year_partitioned(spark: SparkSession, sf_dir: str) -> dict[str, str]:
         years.coalesce(1).write.mode("overwrite").format("parquet").saveAsTable(
             names["years"]
         )
+
+    build_once(spark, f"{names['orders']}_ready", names.values(), build)
     return names

@@ -182,14 +182,12 @@ def _data_files(spark: SparkSession, path: str) -> int:
     return n
 
 
-def _sweep_stale_table_location(spark: SparkSession, table: str) -> None:
+def _sweep_stale_location(spark: SparkSession, table: str) -> None:
     """A NEW session's in-memory catalog is empty, but the warehouse
     directory of a previous session's managed table survives on disk —
     and saveAsTable refuses to CREATE over a non-empty location
-    (LOCATION_ALREADY_EXISTS). When the catalog does not know the table
-    but its default-database location exists, remove it (layout twin of
-    plans/indexes.py::_sweep_stale_location — lives here too so layout
-    never imports from indexes)."""
+    (LOCATION_ALREADY_EXISTS). Remove the table's default-database
+    location so the next write is a clean create."""
     wh = spark.conf.get("spark.sql.warehouse.dir")
     p, fs = _hadoop_fs(spark, f"{wh}/{table.lower()}")
     if fs.exists(p):
@@ -274,7 +272,7 @@ def compact_table(
     before = _data_files(spark, loc)
     staged = f"{table}__compacting"
     spark.sql(f"DROP TABLE IF EXISTS {staged}")
-    _sweep_stale_table_location(spark, staged)
+    _sweep_stale_location(spark, staged)
     (
         spark.table(table)
         .repartition(*[F.col(c) for c in partition_cols])
@@ -284,7 +282,7 @@ def compact_table(
         .saveAsTable(staged)
     )
     spark.sql(f"DROP TABLE IF EXISTS {table}")
-    _sweep_stale_table_location(spark, table)
+    _sweep_stale_location(spark, table)
     spark.sql(f"ALTER TABLE {staged} RENAME TO {table}")
     if partition_cols:
         # RENAME moves the root directory but the catalog keeps each

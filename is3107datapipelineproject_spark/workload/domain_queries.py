@@ -90,17 +90,28 @@ def q_xml_flatten(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _synth_pubs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The nested publications fact (domain.publications.B3 shape) built
-    from the synthesized corpus: XML synth → mapInPandas parse →
-    derive_publications. Every query below runs the REAL domain
-    operators over this nested authors-array schema, so the driver
-    oracles the domain layer itself, not a star-schema twin."""
+    """The nested publications fact (domain.publications.B3 shape) of
+    the synthesized corpus — XML synth → mapInPandas parse →
+    derive_publications — built once per session into
+    ``dblp_pubs_<tag>`` (plans/indexes.py::build_once), which every
+    query below reads. They run the REAL domain operators over this
+    nested authors-array schema, so the driver oracles the domain layer
+    itself, not a star-schema twin; the parse is oracled through the
+    first query of each session and directly by ``xml_flatten``."""
     from is3107datapipelineproject_spark.domain.publications import derive_publications
+    from is3107datapipelineproject_spark.plans.indexes import _tag, build_once
 
-    staged = synth_order_xml(
-        load_table(spark, sf_dir, "lineitem"), load_table(spark, sf_dir, "orders")
-    )
-    return derive_publications(xml_flatten(staged, "content"))
+    table = f"dblp_pubs_{_tag(sf_dir)}"
+
+    def build() -> None:
+        staged = synth_order_xml(
+            load_table(spark, sf_dir, "lineitem"), load_table(spark, sf_dir, "orders")
+        )
+        pubs = derive_publications(xml_flatten(staged, "content"))
+        pubs.write.mode("overwrite").format("parquet").saveAsTable(table)
+
+    build_once(spark, f"{table}_ready", [table], build)
+    return spark.table(table)
 
 
 @register(
@@ -182,18 +193,14 @@ def _dblp_pair_table(spark: SparkSession, sf_dir: str) -> str:
     pipeline's dblp_pair_counts written year-PARTITIONED and sorted by
     the author pair — Query 2's point lookup then directory-prunes to
     one year and row-group-skips on the authors, exactly the read
-    profile the reference's query-first layout buys. Same
-    idempotent-per-session / stale-location contract as the
-    plans/indexes.py builders."""
+    profile the reference's query-first layout buys. Built once per
+    session from the publications fact (:func:`_synth_pubs`)."""
     from is3107datapipelineproject_spark.domain.publications import dblp_pair_counts
-    from is3107datapipelineproject_spark.plans.indexes import (
-        _sweep_stale_location,
-        _tag,
-    )
+    from is3107datapipelineproject_spark.plans.indexes import _tag, build_once
 
     table = f"dblp_pairs_{_tag(sf_dir)}"
-    if not spark.catalog.tableExists(table):
-        _sweep_stale_location(spark, table)
+
+    def build() -> None:
         pc = dblp_pair_counts(_synth_pubs(spark, sf_dir))
         (
             pc.repartition("year")
@@ -203,6 +210,8 @@ def _dblp_pair_table(spark: SparkSession, sf_dir: str) -> str:
             .partitionBy("year")
             .saveAsTable(table)
         )
+
+    build_once(spark, f"{table}_ready", [table], build)
     return table
 
 

@@ -714,23 +714,20 @@ def q_edge_table_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
     reclamation, and the emptied-pb partition drop are
     pytest-asserted (tests/test_indexes.py)."""
     from is3107datapipelineproject_spark.plans.indexes import (
-        _sweep_stale_location,
         _tag,
         _write_pb_bucketed,
+        build_once,
         copurchase_edge_arcs,
         edge_table_retract,
         merged_edge_norm,
     )
 
     table = f"retractq_arcs_{_tag(sf_dir)}"
-    marker = f"{table}_ready"
-    # marker-guarded like edge_table_build: the first run certifies the
-    # build+retract cycle, later runs read the retracted state (whose
-    # summary the oracle still re-checks against surviving lineitem)
-    if not spark.catalog.tableExists(marker):
-        for t in (table, marker, f"{table}_touched"):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
-            _sweep_stale_location(spark, t)
+
+    # the first run certifies the build+retract cycle, later runs read
+    # the retracted state (whose summary the oracle still re-checks
+    # against surviving lineitem)
+    def build() -> None:
         li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
         _write_pb_bucketed(copurchase_edge_arcs(li), table, 16)
         edge_table_retract(
@@ -740,7 +737,8 @@ def q_edge_table_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
             compact_max_files=None,
             compact_delta_frac=None,
         )
-        spark.range(1).coalesce(1).write.mode("overwrite").format("parquet").saveAsTable(marker)
+
+    build_once(spark, f"{table}_ready", [table, f"{table}_touched"], build)
     e = merged_edge_norm(spark, table)
     return e.agg(
         F.count(F.lit(1)).cast("long").alias("n_arcs"),

@@ -17,6 +17,9 @@ from pyspark.sql import functions as F
 from is3107datapipelineproject_spark.domain import publications as P
 from is3107datapipelineproject_spark.operators.incremental import incremental_merge
 from is3107datapipelineproject_spark.sources.xml_source import parse_person_page, xml_flatten
+from is3107datapipelineproject_spark.workload.registry import REGISTRY, _ensure_loaded
+from tests.conftest import SF_ORACLE
+from tests.oracle_utils import compare_spark_duckdb
 
 PAGE_A = """<?xml version="1.0"?>
 <dblpperson name="Alice">
@@ -306,3 +309,17 @@ def test_bridge_lookup_is_bucket_pruned_and_shuffle_free(spark, pubs, tmp_path):
     finally:
         spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", prev)
         spark.sql("DROP DATABASE IF EXISTS bridgedb CASCADE")
+
+
+def test_dblp_queries_share_one_publications_build(spark, duck):
+    """The synthetic publications fact is built once per session: a
+    dblp_* query run after another reads the stored table, so its plan
+    holds no Python map node (the XML parse), and both queries still
+    equal their DuckDB oracles at sf0.01."""
+    _ensure_loaded()
+    first, second = REGISTRY["dblp_nth_author_count"], REGISTRY["dblp_contains_author"]
+    compare_spark_duckdb(first.fn(spark, SF_ORACLE), duck, first.oracle, name=first.name)
+    df = second.fn(spark, SF_ORACLE)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" not in plan and "PythonMapInArrow" not in plan, plan[:800]
+    compare_spark_duckdb(df, duck, second.oracle, name=second.name)

@@ -95,6 +95,31 @@ def test_edge_table_rebuild_survives_stale_location(spark):
     assert n1 == n2 and n1 > 0
 
 
+def test_table_lost_after_build_is_rebuilt(spark):
+    """A build counts as done only while its marker AND every table it
+    wrote are in the catalog. Losing the table a builder wrote LAST
+    (orders_year_partitioned's year dimension) or a single-table
+    build's table while its marker stays (band_signature_table) must
+    rebuild on the next call, not latch the missing table."""
+    from is3107datapipelineproject_spark.plans.indexes import (
+        band_signature_table,
+        orders_year_partitioned,
+    )
+
+    names = orders_year_partitioned(spark, SF)
+    n_years = spark.table(names["years"]).count()
+    spark.sql(f"DROP TABLE {names['years']}")
+    assert orders_year_partitioned(spark, SF) == names
+    assert spark.table(names["years"]).count() == n_years > 0
+
+    table = band_signature_table(spark, SF)
+    n_bands = spark.table(table).count()
+    spark.sql(f"DROP TABLE {table}")
+    assert spark.catalog.tableExists(f"{table}_ready")
+    assert band_signature_table(spark, SF) == table
+    assert spark.table(table).count() == n_bands > 0
+
+
 def test_bucketed_fact_join_plan(spark):
     """The co-bucketed orders⋈lineitem contract: with broadcast off
     (simulating the 100 TB case where neither fact fits an executor),
@@ -1042,13 +1067,13 @@ def test_edge_table_retract_matches_scratch_and_compaction(spark):
     through compaction (which physically reclaims the negative partials
     and stores only strictly-positive weights)."""
     from is3107datapipelineproject_spark.plans.indexes import (
-        _sweep_stale_location,
         _write_pb_bucketed,
         compact_arc_table,
         copurchase_edge_arcs,
         edge_table_retract,
         merged_edge_norm,
     )
+    from is3107datapipelineproject_spark.plans.layout import _sweep_stale_location
     from is3107datapipelineproject_spark.sources.tables import load_table
 
     li = load_table(spark, SF, "lineitem").select("l_orderkey", "l_partkey")
@@ -1093,11 +1118,11 @@ def test_edge_retract_empties_pb_partition_in_edges_twin(spark):
     from is3107datapipelineproject_spark.plans.indexes import (
         _renorm_incremental_tables,
         _refresh_edges_from_arcs,
-        _sweep_stale_location,
         _write_pb_bucketed,
         copurchase_edge_arcs,
         edge_table_retract,
     )
+    from is3107datapipelineproject_spark.plans.layout import _sweep_stale_location
 
     li0 = spark.createDataFrame(
         [(7, 101), (7, 102)], "l_orderkey long, l_partkey long"
