@@ -43,6 +43,7 @@ from pyspark.sql import functions as F
 
 from is3107datapipelineproject_spark.plans.layout import (
     _data_files,
+    _drop_table,
     _sweep_stale_location,
     _table_location,
     compact_table,
@@ -55,11 +56,6 @@ from is3107datapipelineproject_spark.sources.tables import load_table
 
 def _tag(sf_dir: str) -> str:
     return re.sub(r"[^a-zA-Z0-9]", "_", sf_dir.strip("/"))
-
-
-def _drop_table(spark: SparkSession, table: str) -> None:
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    _sweep_stale_location(spark, table)
 
 
 def _write_marker(spark: SparkSession, marker: str) -> None:
@@ -164,16 +160,23 @@ def _refresh_edges_from_arcs(
     and the auto-refresh hook in edge_table_append's compaction trigger
     (which prefers the touched-partition incremental path when the
     append log makes it possible). Clears the touched-pb log: a full
-    refresh covers everything the log remembers."""
+    refresh covers everything the log remembers. The refreshed table
+    counts as built (copurchase_edge_table's marker is dropped before
+    the swap and written after it), so the next copurchase_edge_table
+    call reads it instead of rebuilding from source and losing every
+    appended or retracted arc."""
     staged = f"{edges_table}__renorm"
+    marker = f"{edges_table}_ready"
     _drop_table(spark, staged)
     _write_pb_bucketed(merged_edge_norm(spark, arc_table), staged, n_buckets)
+    _drop_table(spark, marker)
     _drop_table(spark, edges_table)
     spark.sql(f"ALTER TABLE {staged} RENAME TO {edges_table}")
     # renaming a PARTITIONED managed table keeps each partition's
     # ABSOLUTE location pointing at the old path — repair or the
     # renamed table reads empty
     spark.sql(f"MSCK REPAIR TABLE {edges_table} SYNC PARTITIONS")
+    _write_marker(spark, marker)
     _clear_touched_log(spark, arc_table)
 
 
@@ -252,8 +255,8 @@ def renormalize_edge_table_incremental(
     crash mid-job discards the staged files and leaves the old
     partitions (the edges table is derived state — a full refresh
     rebuilds it from the arcs if it is ever suspect). Falls back to a
-    FULL refresh when the edges twin or the log is missing. Returns
-    ``(partitions_rewritten, EDGE_PB_PARTS)``."""
+    FULL refresh when the edges twin, its marker or the log is missing.
+    Returns ``(partitions_rewritten, EDGE_PB_PARTS)``."""
     arc_table = edge_append_tables(spark, sf_dir, n_buckets=n_buckets)
     edges = f"copurchase_edges_{_tag(sf_dir)}"
     return _renorm_incremental_tables(spark, arc_table, edges, n_buckets)
@@ -263,7 +266,9 @@ def _renorm_incremental_tables(
     spark: SparkSession, arc_table: str, edges: str, n_buckets: int
 ) -> tuple[int, int]:
     log = _touched_log_table(arc_table)
-    if not spark.catalog.tableExists(edges) or not spark.catalog.tableExists(log):
+    # an edges table without its marker may be a half-built one, which
+    # rewriting the touched partitions alone would not make whole
+    if not all(spark.catalog.tableExists(t) for t in (edges, f"{edges}_ready", log)):
         _refresh_edges_from_arcs(spark, arc_table, edges, n_buckets=n_buckets)
         return EDGE_PB_PARTS, EDGE_PB_PARTS  # full refresh fallback
     pbs = sorted(r.pb for r in spark.table(log).distinct().collect())

@@ -194,6 +194,11 @@ def _sweep_stale_location(spark: SparkSession, table: str) -> None:
         fs.delete(p, True)
 
 
+def _drop_table(spark: SparkSession, table: str) -> None:
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    _sweep_stale_location(spark, table)
+
+
 def _table_location(spark: SparkSession, table: str) -> str:
     rows = spark.sql(f"DESCRIBE FORMATTED {table}").collect()
     for r in rows:
@@ -271,8 +276,7 @@ def compact_table(
     loc = _table_location(spark, table)
     before = _data_files(spark, loc)
     staged = f"{table}__compacting"
-    spark.sql(f"DROP TABLE IF EXISTS {staged}")
-    _sweep_stale_location(spark, staged)
+    _drop_table(spark, staged)
     (
         spark.table(table)
         .repartition(*[F.col(c) for c in partition_cols])
@@ -281,8 +285,7 @@ def compact_table(
         .partitionBy(*partition_cols)
         .saveAsTable(staged)
     )
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    _sweep_stale_location(spark, table)
+    _drop_table(spark, table)
     spark.sql(f"ALTER TABLE {staged} RENAME TO {table}")
     if partition_cols:
         # RENAME moves the root directory but the catalog keeps each

@@ -971,6 +971,41 @@ def test_incremental_renormalize_bit_identical_to_full(spark):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
+def test_renormalized_edges_latch_before_first_build(spark):
+    """append → renormalize_edge_table in a session where
+    copurchase_edge_table has not run yet: the refreshed edges table
+    counts as built, so the next copurchase_edge_table call returns the
+    refreshed rows (appended arcs included) instead of rebuilding from
+    source lineitem."""
+    from is3107datapipelineproject_spark.plans.indexes import (
+        _tag,
+        copurchase_edge_table,
+        edge_append_tables,
+        edge_table_append,
+        merged_edge_norm,
+        renormalize_edge_table,
+    )
+    from is3107datapipelineproject_spark.sources.tables import load_table
+
+    arc = edge_append_tables(spark, SF)
+    edges = f"copurchase_edges_{_tag(SF)}"
+    for t in (edges, f"{edges}_ready"):
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
+    before = {(r.src, r.dst, r.w, r.ow) for r in merged_edge_norm(spark, arc).collect()}
+    li = load_table(spark, SF, "lineitem").select("l_orderkey", "l_partkey")
+    edge_table_append(
+        spark, arc, li.filter(F.col("l_orderkey") % 13 == 5),
+        compact_max_files=None, compact_delta_frac=None,
+    )
+    renormalize_edge_table(spark, SF)
+    want = {(r.src, r.dst, r.w, r.ow) for r in merged_edge_norm(spark, arc).collect()}
+    got = {(r.src, r.dst, r.w, r.ow) for r in copurchase_edge_table(spark, SF).collect()}
+    assert want != before
+    assert got == want
+    for t in (arc, f"{arc}_ready", f"{arc}_compactmeta", f"{arc}_touched", edges):
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
 def test_ann_index_delete_prunes_and_matches_surviving_encode(spark):
     """Index-lifecycle purge: deleting vec_ids from the codes table must
     (a) leave it bit-identical to a one-shot encode of the SURVIVING
